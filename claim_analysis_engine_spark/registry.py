@@ -140,7 +140,7 @@ def merged_registry() -> dict[str, Op]:
 
 # Exact driver-sampling order for round 8 (see comment in registry()).
 # Slot 1 re-certifies the round-7 driver FAIL (ep1_ingest_e2e, fixed by
-# storage._dynamic_partition_overwrite). Slots 2-44 are the 43 ops that
+# storage._pinned_conf). Slots 2-44 are the 43 ops that
 # have never had a driver row — exactly the r7 order's positions 50+.
 # New round-8 ops append after them; the whole list must stay within
 # the driver's 50-slot window for every entry to get a row.

@@ -7,8 +7,14 @@ ENTIRE hub on every upload (core/storage.py:94-130 full-load → concat
 → rewrite — its documented cliff). Here the merge-upsert unions only
 against the hub partitions the new batch touches, and the write pins
 dynamic partition overwrite at the write site so untouched
-(year, month) directories are never rewritten — on ANY session. The series mart is one aggregation
-job writing docs distributed — never a driver-side per-group loop.
+(year, month) directories are never rewritten — on ANY session.
+
+The series mart reads the hub in one scan and builds every document in
+three aggregations (cell → child → parent), zero-filling the month
+spine with higher-order functions (HOF) and writing the documents
+distributed — never a driver-side per-group loop. Its incremental
+refresh decides on the driver, from two small collects, whether the
+spine grew (rebuild everything) or only the touched series change.
 """
 
 from __future__ import annotations
@@ -26,26 +32,37 @@ from claim_analysis_engine_spark.config import PARTITION_COLS
 HUB_PARTITIONS = list(PARTITION_COLS)
 
 _OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
+_AQE_KEY = "spark.sql.adaptive.enabled"
 
 
 @contextmanager
-def _dynamic_partition_overwrite(spark: SparkSession):
-    """Pin partitionOverwriteMode=dynamic for the enclosed write,
-    restoring the caller's value afterwards. The hub merge-upsert's
-    keep-untouched-partitions semantics DEPEND on dynamic mode; under
-    Spark's default (static) the same write truncates the entire hub
-    root — silent data loss on any externally built SparkSession. Ops
-    must never assume ambient session conf (the tables._load_events
-    lesson), so the mode is asserted at the write site itself."""
-    prev = spark.conf.get(_OVERWRITE_MODE_KEY, "static")
-    if prev.lower() == "dynamic":
+def _pinned_conf(spark: SparkSession, key: str, value: str):
+    """Pin a SQL conf for the enclosed block, restoring the caller's
+    value afterwards. The hub merge-upsert's keep-untouched-partitions
+    semantics DEPEND on dynamic partition overwrite; under Spark's
+    default (static) the same write truncates the entire hub root —
+    silent data loss on any externally built SparkSession. Ops must
+    never assume ambient session conf (the tables._load_events
+    lesson), so such a mode is asserted at the site itself."""
+    prev = spark.conf.get(key)
+    if prev.lower() == value:
         yield
         return
-    spark.conf.set(_OVERWRITE_MODE_KEY, "dynamic")
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(_OVERWRITE_MODE_KEY, prev)
+        spark.conf.set(key, prev)
+
+
+def _collect_small(df: DataFrame) -> list:
+    """Collect a driver-decision frame as ONE Spark job. Adaptive
+    execution would submit every shuffle stage as a job of its own; on
+    frames this small (1-row or keys × months) that per-job launch cost
+    is all the collect costs."""
+    with _pinned_conf(df.sparkSession, _AQE_KEY, "false"):
+        # bounded: callers pass 1-row or keys × months aggregates
+        return df.collect()
 
 
 # ------------------------------------------------------------------ hub
@@ -56,7 +73,7 @@ def write_hub(df: DataFrame, hub_path: str) -> None:
     core/storage.py:47-69). Dynamic partition overwrite is pinned at
     the write site, so only partitions present in ``df`` are replaced
     regardless of how the caller's session was configured."""
-    with _dynamic_partition_overwrite(df.sparkSession):
+    with _pinned_conf(df.sparkSession, _OVERWRITE_MODE_KEY, "dynamic"):
         df.write.partitionBy(*HUB_PARTITIONS).mode("overwrite").parquet(hub_path)
 
 
@@ -110,7 +127,7 @@ def merge_upsert(
     # may coalesce the exchange when volumes are small; coalesced
     # buckets keep whole (year, month) groups together, so the
     # one-file-per-dir property survives.)
-    with _dynamic_partition_overwrite(spark):
+    with _pinned_conf(spark, _OVERWRITE_MODE_KEY, "dynamic"):
         deduped.repartition(*HUB_PARTITIONS).write.partitionBy(
             *HUB_PARTITIONS
         ).mode("overwrite").parquet(hub_path)
@@ -135,6 +152,14 @@ def sanitize_filename(col: F.Column) -> F.Column:
     return F.regexp_replace(col, r'[\\/:\*\?"<>\|]', "-")
 
 
+def _month_range(lo: str | None, hi: str | None) -> list[str]:
+    """Every "yyyy-MM" month from ``lo`` to ``hi``; empty when unbounded."""
+    if lo is None or hi is None:
+        return []
+    first, last = (int(b[:4]) * 12 + int(b[5:7]) - 1 for b in (lo, hi))
+    return [f"{i // 12:04d}-{i % 12 + 1:02d}" for i in range(first, last + 1)]
+
+
 def build_series_mart(
     claims: DataFrame,
     as_of: str,
@@ -147,14 +172,23 @@ def build_series_mart(
 ) -> DataFrame:
     """Nested monthly series documents, one row per (plant, cat2,
     major) — the reference's generate_nested_series
-    (core/storage.py:504-653) as ONE distributed aggregation:
+    (core/storage.py:504-653) as one scan and three aggregations:
+    (plant, cat2, major, middle, month) cells; children, whose
+    month→cell maps are zero-filled over the spine array with
+    higher-order functions (HOF), with no spine join and no window; and
+    parents, whose arrays and lag sums are the element-wise sums of
+    their children's — exact, since every term is an integer count.
 
     * month spine = global min..max month of the dataset (zero-fill
-      substrate, core/storage.py:472-483) via a broadcast 1-row agg;
+      substrate, core/storage.py:472-483), one 1-row collect unless
+      ``spine_bounds`` ("yyyy-MM", "yyyy-MM") injects it;
     * history counts ALL rows; stats (mean, ddof-1 std, last-3-month
-      regr_slope) count only Lag_Valid rows (core/storage.py:557-573);
+      slope) count only Lag_Valid rows (core/storage.py:557-573). The
+      slope's x values are consecutive, so its least-squares value is
+      (y[n] - y[n-2]) / 2, or y[n] - y[n-1] when n = 2;
     * avg_lag_days = mean of valid lag days rounded to 1dp;
-    * children = same series per middle category, nested as an array;
+    * a null middle category counts toward its parent but forms no
+      child; a parent without a child, or with a null key, has no doc;
     * `last_updated` is the injected ``as_of`` (never datetime.now()).
 
     Stats are rounded to 6dp at build time so doc round-trips are
@@ -170,102 +204,90 @@ def build_series_mart(
         F.col("lag_days"),
         F.col("lag_valid"),
     ).where(F.col("month").isNotNull())
-
     if spine_bounds is None:
-        bounds = base.agg(
-            F.min(F.to_date(F.concat(F.col("month"), F.lit("-01")))).alias("lo"),
-            F.max(F.to_date(F.concat(F.col("month"), F.lit("-01")))).alias("hi"),
-        )
-    else:
-        # injected bounds ("yyyy-MM" strings): the incremental refresh
-        # passes the FULL hub's range so a partial rebuild zero-fills
-        # the same spine as a full rebuild would
-        lo, hi = spine_bounds
-        bounds = claims.sparkSession.range(1).select(
-            F.to_date(F.lit(f"{lo}-01")).alias("lo"),
-            F.to_date(F.lit(f"{hi}-01")).alias("hi"),
-        )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 1 month"))).alias("m")
-    ).select(F.date_format("m", "yyyy-MM").alias("month"))
-
-    def zero_filled(keys: list[str]) -> DataFrame:
-        counts = base.groupBy(*keys, "month").agg(
-            F.count(F.lit(1)).alias("n_all"),
-            F.count(F.when(F.col("lag_valid"), 1)).alias("n_valid"),
-        )
-        grid = base.select(*keys).distinct().crossJoin(F.broadcast(spine))
-        return grid.join(counts, [*keys, "month"], "left").select(
-            *keys,
-            "month",
-            F.coalesce("n_all", F.lit(0)).alias("n_all"),
-            F.coalesce("n_valid", F.lit(0)).alias("n_valid"),
-        )
-
-    def series_agg(zf: DataFrame, keys: list[str]) -> DataFrame:
-        w = W.partitionBy(*keys).orderBy("month")
-        wcnt = W.partitionBy(*keys)
-        zf = zf.withColumn("idx", F.row_number().over(w)).withColumn(
-            "n_months", F.count(F.lit(1)).over(wcnt)
-        )
-        last3 = F.col("idx") > F.col("n_months") - 3
-        return zf.groupBy(*keys).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("month").alias("date"), F.col("n_all").alias("count")))
-            ).alias("history"),
-            F.round(F.avg("n_valid"), 6).alias("mean"),
-            F.round(F.coalesce(F.stddev_samp("n_valid"), F.lit(0.0)), 6).alias("std"),
-            F.round(
-                F.coalesce(
-                    F.regr_slope(
-                        F.when(last3, F.col("n_valid")).cast("double"),
-                        F.when(last3, F.col("idx")).cast("double"),
-                    ),
-                    F.lit(0.0),
-                ),
-                6,
-            ).alias("slope"),
-        )
-
-    def lag_agg(keys: list[str]) -> DataFrame:
-        return base.groupBy(*keys).agg(
-            F.round(
-                F.coalesce(F.avg(F.when(F.col("lag_valid"), F.col("lag_days"))), F.lit(0.0)),
-                1,
-            ).alias("avg_lag_days")
-        )
-
+        spine_bounds = _collect_small(base.agg(F.min("month"), F.max("month")))[0]
+    spine = _month_range(*spine_bounds)
+    n = len(spine)
+    months = F.array(*map(F.lit, spine)).cast("array<string>")
     pkeys = ["plant", "cat2", "major"]
-    parent = series_agg(zero_filled(pkeys), pkeys).join(lag_agg(pkeys), pkeys)
+    valid = F.col("lag_valid")
 
-    ckeys = [*pkeys, "middle"]
-    child = (
-        series_agg(zero_filled(ckeys), ckeys)
-        .join(lag_agg(ckeys), ckeys)
-        .groupBy(*pkeys)
+    # 1. cells: one row per (series key, middle, month)
+    cells = (
+        base.dropna(subset=pkeys)
+        .groupBy(*pkeys, "middle", "month")
         .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.coalesce(F.col("middle"), F.lit("")).alias("sub_key"),
-                        F.struct("mean", "std", "slope", "avg_lag_days").alias("stats"),
-                        F.col("history").alias("history"),
-                    )
-                )
-            ).alias("children")
+            F.count(F.lit(1)).alias("n_all"),
+            F.count(F.when(valid, 1)).alias("n_valid"),
+            F.sum(F.when(valid, F.col("lag_days"))).alias("lag_sum"),
+            F.count(F.when(valid, F.col("lag_days"))).alias("lag_n"),
         )
     )
+    # 2. children: each month→cell map zero-filled over the spine
+    by_month = F.map_from_entries(F.collect_list(F.struct("month", F.struct("n_all", "n_valid"))))
+    child = (
+        cells.groupBy(*pkeys, "middle")
+        .agg(by_month.alias("cells"), F.sum("lag_sum").alias("lag_sum"),
+             F.sum("lag_n").alias("lag_n"))
+        .withColumns({
+            f: F.transform(months, lambda m: F.coalesce(F.col("cells")[m][f], F.lit(0)))
+            for f in ("n_all", "n_valid")
+        })
+    )
 
-    return parent.join(child, pkeys).select(
-        F.concat_ws("_", "plant", "cat2", "major").alias("key"),
+    # history and stats of one series, from its zero-filled n_all and
+    # n_valid arrays and its lag sum and count: the same expressions
+    # build each child (inside the parent aggregation) and each parent
+    y = F.col("n_valid")
+    mean = F.aggregate(y, F.lit(0).cast("long"), lambda a, v: a + v) / max(n, 1)  # n=0: no rows
+    sq = F.aggregate(y, F.lit(0.0), lambda a, v: a + (v - mean) * (v - mean))
+    k = min(n, 3)  # the slope's window: the spine's last k months
+    slope = (F.element_at(y, -1) - F.element_at(y, -k)) / (k - 1) if k >= 2 else F.lit(0.0)
+    avg_lag = F.when(F.col("lag_n") > 0, F.col("lag_sum") / F.col("lag_n"))
+    stats = F.struct(
+        F.round(mean, 6).alias("mean"),
+        (F.round(F.sqrt(sq / (n - 1)), 6) if n >= 2 else F.lit(0.0)).alias("std"),
+        F.round(slope, 6).alias("slope"),
+        F.round(F.coalesce(avg_lag, F.lit(0.0)), 1).alias("avg_lag_days"),
+    )
+    history = F.zip_with(
+        months, F.col("n_all"), lambda m, c: F.struct(m.alias("date"), c.alias("count"))
+    )
+
+    # 3. parents: element-wise sums of their children's arrays
+    zeros = F.array_repeat(F.lit(0).cast("long"), n)
+
+    def summed(col: str) -> F.Column:
+        return F.aggregate(
+            F.collect_list(col), zeros, lambda acc, a: F.zip_with(acc, a, lambda x, v: x + v)
+        ).alias(col)
+
+    kid = F.struct(
+        F.col("middle").alias("sub_key"), stats.alias("stats"), history.alias("history")
+    )
+    parent = (
+        child.groupBy(*pkeys)
+        .agg(
+            # collect_list skips nulls: a null middle category forms no child
+            F.array_sort(F.collect_list(F.when(F.col("middle").isNotNull(), kid)))
+            .alias("children"),
+            summed("n_all"),
+            summed("n_valid"),
+            F.sum("lag_sum").alias("lag_sum"),
+            F.sum("lag_n").alias("lag_n"),
+        )
+        .where(F.size("children") > 0)
+    )
+    return parent.select(
+        F.concat_ws("_", *pkeys).alias("key"),
         F.struct(
             F.lit(as_of).alias("last_updated"),
             F.lit(0).alias("warning_level"),
             F.lit(None).cast("string").alias("champion_model"),
-            F.struct("mean", "std", "slope", "avg_lag_days").alias("parent_stats"),
+            stats.alias("parent_stats"),
         ).alias("meta"),
         F.struct(
-            F.col("history"),
+            history.alias("history"),
             F.array().cast("array<struct<date:string,count:long>>").alias("forecast"),
         ).alias("data"),
         F.col("children"),
@@ -281,48 +303,41 @@ def refresh_series_incremental(
     4,774 documents on every upload.
 
     ``claims`` is the full post-merge hub frame; ``batch`` the newly
-    ingested rows. The touched-group set broadcasts into a left-semi
-    join, so the mart aggregation reads only affected groups' rows —
-    at 100 TB an upload touching 3 plants recomputes 3 plants.
-
-    Spine safety (two hazards, both handled here):
-    * the zero-fill spine always uses the FULL hub's month range
-      (injected via spine_bounds), so a partial rebuild produces
-      identical documents to a full rebuild for the touched groups
-      even when those groups don't span the hub range themselves;
-    * when the upload EXTENDS the global month range the zero-fill
-      substrate of every untouched document changes too, so the
-      function detects it and falls back to the full build by itself.
-      The detection is exact: a hub boundary month is new iff it
-      consists solely of batch rows, checked from two per-month count
-      aggregates (map-side combine; |months| rows each — a refresh
-      decision, not a per-row loop).
+    ingested rows. The decision runs on the driver from two small
+    collects, one Spark job each: the batch's (month, plant, cat2,
+    major) counts, which evaluate the batch once, and the hub's
+    per-month counts. Both branches zero-fill over the FULL hub's month
+    range (``spine_bounds``), so a partial rebuild equals a full one
+    for the touched groups. When the upload EXTENDS that range, every
+    untouched document's spine changes too, so every document is
+    rebuilt. The test is exact: a hub boundary month is new iff it
+    consists solely of batch rows. Otherwise the touched keys broadcast
+    into a left-semi join, so the build reads only affected groups'
+    rows — at 100 TB an upload touching 3 plants recomputes 3 plants.
     """
-    plant = mart_kwargs.get("plant_col", "plant")
-    cat2 = mart_kwargs.get("cat2_col", "product_category2")
-    major = mart_kwargs.get("major_col", "major_category")
-    date_col = mart_kwargs.get("date_col", "reception_date")
-
-    month = F.date_format(F.col(date_col), "yyyy-MM").alias("m")
-    hub_m = claims.groupBy(month).agg(F.count(F.lit(1)).alias("nc"))
-    batch_m = batch.groupBy(month).agg(F.count(F.lit(1)).alias("nb"))
-    hub = hub_m.agg(F.min("m").alias("lo"), F.max("m").alias("hi")).first()
-    pre = (
-        hub_m.join(batch_m, "m", "left")
-        .where(F.col("nc") > F.coalesce(F.col("nb"), F.lit(0)))
-        .agg(F.min("m").alias("lo"), F.max("m").alias("hi"))
-        .first()
-    )
-    if pre.lo is None or pre.lo != hub.lo or pre.hi != hub.hi:
+    keys = [
+        mart_kwargs.get("plant_col", "plant"),
+        mart_kwargs.get("cat2_col", "product_category2"),
+        mart_kwargs.get("major_col", "major_category"),
+    ]
+    month = F.date_format(F.col(mart_kwargs.get("date_col", "reception_date")), "yyyy-MM")
+    new = _collect_small(batch.groupBy(month.alias("m"), *keys).count())
+    hub = {m: c for m, c in _collect_small(claims.groupBy(month.alias("m")).count()) if m}
+    added: dict[str, int] = {}
+    for r in new:
+        added[r.m] = added.get(r.m, 0) + r["count"]
+    bounds = (min(hub), max(hub)) if hub else (None, None)
+    kept = [m for m, c in hub.items() if c > added.get(m, 0)]
+    if not kept or (min(kept), max(kept)) != bounds:
         # a boundary month exists only because of this batch: the spine
         # grew, every document's history array changes — full rebuild
-        return build_series_mart(claims, as_of, **mart_kwargs)
+        return build_series_mart(claims, as_of, spine_bounds=bounds, **mart_kwargs)
 
-    touched = batch.select(plant, cat2, major).distinct()
-    affected = claims.join(F.broadcast(touched), [plant, cat2, major], "left_semi")
-    return build_series_mart(
-        affected, as_of, spine_bounds=(hub.lo, hub.hi), **mart_kwargs
+    touched = claims.sparkSession.createDataFrame(
+        list({tuple(r[k] for k in keys) for r in new}), batch.select(*keys).schema
     )
+    affected = claims.join(F.broadcast(touched), keys, "left_semi")
+    return build_series_mart(affected, as_of, spine_bounds=bounds, **mart_kwargs)
 
 
 def write_series_docs(docs: DataFrame, out_dir: str) -> None:

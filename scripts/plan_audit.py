@@ -53,6 +53,11 @@ def audit(plan: str, formatted: str | None = None) -> dict:
     tbl_refs: dict[str, int] = {}
     for m in re.finditer(r"Location: [A-Za-z]*FileIndex[^\n]*/(\w+)\.parquet", fmt):
         tbl_refs[m.group(1)] = tbl_refs.get(m.group(1), 0) + 1
+    # formatted explain names only the FIRST root path of a multi-path
+    # scan ("[p1, ... N entries]"), whatever spark.sql.maxMetadataStringLength
+    # says; count the hidden paths under "?" so they cannot vanish
+    for n_hidden in re.findall(r"Location: [^\n]*, \.\.\. (\d+) entries\]", fmt):
+        tbl_refs["?"] = tbl_refs.get("?", 0) + int(n_hidden)
 
     return {
         "exchanges": count(r"\bExchange\b|\n\s*\+- Exchange"),

@@ -32,13 +32,16 @@ ALL_OPS = sorted(REG)
 _PLAN_CACHE: dict[str, str] = {}
 
 
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def _plan(spark, op_id: str) -> str:
     if op_id not in _PLAN_CACHE:
-        df = REG[op_id].query(spark, SF_SMALL)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        _PLAN_CACHE[op_id] = buf.getvalue()
+        _PLAN_CACHE[op_id] = _formatted(REG[op_id].query(spark, SF_SMALL))
     return _PLAN_CACHE[op_id]
 
 
@@ -162,6 +165,8 @@ _SCAN_CEILINGS: dict[str, tuple[dict[str, int], int]] = {
     "agg_cycle_time": ({"lineitem": 1, "orders": 1}, 0),
     "ep10_ops_e2e": ({"lineitem": 1, "orders": 2}, 0),
     "agg_hll_error_contract": ({"orders": 2}, 0),
+    # one-scan series mart: no spine explode, no per-level re-reads
+    "snk_series_refresh": ({"orders": 1}, 0),
 }
 
 
@@ -176,6 +181,14 @@ def test_one_pass_rewrites_keep_their_scan_counts(spark, op_id):
         r"Location: [A-Za-z]*FileIndex[^\n]*/(\w+)\.parquet", plan
     ):
         refs[m.group(1)] = refs.get(m.group(1), 0) + 1
+    # formatted explain names only the FIRST root path of a multi-path
+    # scan ("[p1, ... N entries]"), whatever spark.sql.maxMetadataStringLength
+    # says, so the paths it hides could be uncounted re-reads
+    hidden = sum(map(int, re.findall(r"Location: [^\n]*, \.\.\. (\d+) entries\]", plan)))
+    assert not hidden, (
+        f"{op_id}: {hidden} scan paths hidden by abbreviated Location "
+        f"lines cannot be checked against the ceilings"
+    )
     for tbl, ceiling in max_refs.items():
         assert refs.get(tbl, 0) <= ceiling, (
             f"{op_id}: {refs.get(tbl, 0)} parquet scans of {tbl} exceed "
@@ -187,3 +200,26 @@ def test_one_pass_rewrites_keep_their_scan_counts(spark, op_id):
         f"{op_id}: {n_gen} Generate (explode) nodes exceed the "
         f"rewrite's ceiling {max_generates}"
     )
+
+
+def test_series_mart_reads_its_hub_once(spark, tmp_path):
+    """build_series_mart is one scan and three aggregations: its plan
+    over a parquet hub holds exactly one parquet scan, and no Window or
+    Generate node (the zero-fill runs in higher-order functions)."""
+    import datetime
+    import re
+
+    from claim_analysis_engine_spark import storage
+
+    hub = str(tmp_path / "hub")
+    spark.createDataFrame(
+        [("P", "C", "M", "S", datetime.date(2024, m, 3), m, True) for m in (1, 3)],
+        "plant string, product_category2 string, major_category string, "
+        "middle_category string, reception_date date, lag_days int, "
+        "lag_valid boolean",
+    ).write.parquet(hub)
+    plan = _formatted(
+        storage.build_series_mart(spark.read.parquet(hub), as_of="2024-03-31")
+    )
+    assert len(re.findall(r"\(\d+\) Scan parquet ", plan)) == 1, plan
+    assert not re.search(r"\(\d+\) (Window|Generate)\b", plan), plan

@@ -7,12 +7,21 @@ from __future__ import annotations
 
 import datetime
 import os
+import random
 import tempfile
 
+import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from claim_analysis_engine_spark import storage
+from claim_analysis_engine_spark import etl, storage
+from tests.oracle_harness import compare
+
+_MART_COLS = (
+    "plant string, product_category2 string, major_category string, "
+    "middle_category string, reception_date date, lag_days int, lag_valid boolean"
+)
 
 
 def _claims(spark, rows):
@@ -189,6 +198,250 @@ def test_incremental_refresh_uses_full_hub_spine_for_narrow_groups(spark):
     assert inc["PLANT_A_C_M1"] == fullbuild["PLANT_A_C_M1"]
     hist = [(h["date"], h["count"]) for h in inc["PLANT_A_C_M1"]["data"]["history"]]
     assert hist == [("2024-01", 0), ("2024-02", 2), ("2024-03", 0)]
+
+
+def _mart_fixture(n_months: int) -> list[tuple]:
+    """Seeded claims over an ``n_months`` spine starting 2023-11, plus
+    the edge rows the mart must handle: a null and an empty middle
+    category, a series with no valid lag, a series present only at the
+    spine's ends, a valid row without lag days, undated rows and a
+    null plant."""
+    rng = random.Random(n_months)
+    spine = [
+        datetime.date(2023 + (10 + i) // 12, (10 + i) % 12 + 1, 1)
+        for i in range(n_months)
+    ]
+
+    def day(m: datetime.date) -> datetime.date:
+        return m.replace(day=rng.randint(1, 28))
+
+    rows = []
+    for _ in range(240):
+        lag = rng.randint(-3, 30)
+        rows.append((
+            rng.choice(["P1", "P2", "P3"]), rng.choice(["C1", "C2"]),
+            rng.choice(["M1", "M2"]), rng.choice(["S1", "S2", "S3", "", None]),
+            day(rng.choice(spine)), lag, lag >= 0,
+        ))
+    first, last = spine[0], spine[-1]
+    rows += [
+        ("PZ", "C1", "M1", "S1", day(first), -2, False),  # no valid lag
+        ("PZ", "C1", "M1", "S2", day(last), -1, False),
+        ("PE", "C1", "M1", "S1", day(first), 4, True),  # spine ends only
+        ("PE", "C1", "M1", "S1", day(last), 6, True),
+        ("PE", "C1", "M1", None, day(last), 9, True),
+        ("P1", "C1", "M1", "S1", day(first), None, True),  # valid, no lag days
+        ("PN", "C1", "M1", None, day(first), 2, True),  # no named child
+        ("P1", "C1", "M1", "S1", None, 3, True),  # undated: dropped
+        ("PD", "C1", "M1", "S1", None, 1, True),
+        (None, "C1", "M1", "S1", day(first), 5, True),  # null plant
+    ]
+    return rows
+
+
+# DuckDB oracle of the series mart. Spine: every month from the first to
+# the last dated claim. A parent series holds every dated row of a
+# (plant, cat2, major) with no null key; each non-null middle category
+# is a child series; a parent without a child has no document. History
+# counts all rows; mean/std/slope use Lag_Valid counts (slope over the
+# last three spine months); avg_lag_days averages valid lag days.
+_MART_ORACLE = """
+WITH base AS (
+  SELECT plant, product_category2 AS cat2, major_category AS major,
+         middle_category AS middle, strftime(reception_date, '%Y-%m') AS month,
+         lag_days, lag_valid
+  FROM claims WHERE reception_date IS NOT NULL
+),
+spine AS (
+  SELECT strftime(m, '%Y-%m') AS month,
+         row_number() OVER (ORDER BY m) AS idx, count(*) OVER () AS n
+  FROM (SELECT unnest(generate_series(
+          min(date_trunc('month', reception_date))::TIMESTAMP,
+          max(date_trunc('month', reception_date))::TIMESTAMP,
+          INTERVAL 1 MONTH)) AS m
+        FROM claims)
+),
+members AS (
+  SELECT plant, cat2, major, middle AS sub_key, month, lag_days, lag_valid
+  FROM base WHERE middle IS NOT NULL
+  UNION ALL
+  SELECT plant, cat2, major, NULL, month, lag_days, lag_valid FROM base
+),
+series AS (
+  SELECT DISTINCT plant, cat2, major, sub_key FROM members m
+  WHERE plant IS NOT NULL AND cat2 IS NOT NULL AND major IS NOT NULL
+    AND EXISTS (SELECT 1 FROM base b WHERE b.plant = m.plant
+                AND b.cat2 = m.cat2 AND b.major = m.major
+                AND b.middle IS NOT NULL)
+),
+counts AS (
+  SELECT plant, cat2, major, sub_key, month, count(*) AS n_all,
+         count(*) FILTER (WHERE lag_valid) AS n_valid
+  FROM members GROUP BY ALL
+),
+zf AS (
+  SELECT s.plant, s.cat2, s.major, s.sub_key, p.month, p.idx, p.n,
+         coalesce(c.n_all, 0) AS n_all, coalesce(c.n_valid, 0) AS n_valid
+  FROM series s CROSS JOIN spine p
+  LEFT JOIN counts c ON c.plant = s.plant AND c.cat2 = s.cat2
+   AND c.major = s.major AND c.sub_key IS NOT DISTINCT FROM s.sub_key
+   AND c.month = p.month
+),
+stats AS (
+  SELECT plant, cat2, major, sub_key,
+         round(avg(n_valid), 6) AS mean,
+         round(coalesce(stddev_samp(n_valid), 0.0), 6) AS std,
+         round(coalesce(regr_slope(CASE WHEN idx > n - 3 THEN n_valid END,
+                                   CASE WHEN idx > n - 3 THEN idx END), 0.0), 6)
+           AS slope
+  FROM zf GROUP BY ALL
+),
+lag AS (
+  SELECT plant, cat2, major, sub_key,
+         round(coalesce(avg(lag_days) FILTER (WHERE lag_valid), 0.0), 1)
+           AS avg_lag_days
+  FROM members GROUP BY ALL
+)
+"""
+
+_MART_ORACLE_STATS = _MART_ORACLE + """
+SELECT concat_ws('_', s.plant, s.cat2, s.major) AS key, s.sub_key,
+       CAST(CASE WHEN s.sub_key IS NULL THEN 0 ELSE row_number() OVER (
+         PARTITION BY s.plant, s.cat2, s.major, s.sub_key IS NULL
+         ORDER BY s.sub_key) END AS BIGINT) AS pos,
+       s.mean, s.std, s.slope, l.avg_lag_days
+FROM stats s JOIN lag l ON l.plant = s.plant AND l.cat2 = s.cat2
+ AND l.major = s.major AND l.sub_key IS NOT DISTINCT FROM s.sub_key
+"""
+
+_MART_ORACLE_HISTORY = _MART_ORACLE + """
+SELECT concat_ws('_', plant, cat2, major) AS key, sub_key, idx, month,
+       n_all AS "count"
+FROM zf
+"""
+
+
+def test_series_mart_matches_oracle_per_child(spark):
+    """Every field of every mart document, parent and child, against
+    the DuckDB oracle: history, mean, std, slope, avg_lag_days and the
+    children's order. One- and two-month spines pin the degenerate
+    std/slope cases."""
+    for n_months in (7, 2, 1):
+        rows = _mart_fixture(n_months)
+        docs = storage.build_series_mart(
+            spark.createDataFrame(rows, _MART_COLS), as_of="2024-06-01"
+        ).collect()
+        stats, history = [], []
+        for d in docs:
+            assert d["meta"]["last_updated"] == "2024-06-01"
+            assert d["meta"]["warning_level"] == 0
+            assert d["meta"]["champion_model"] is None
+            assert d["data"]["forecast"] == []
+            series = [(None, 0, d["meta"]["parent_stats"], d["data"]["history"])]
+            series += [
+                (c["sub_key"], i, c["stats"], c["history"])
+                for i, c in enumerate(d["children"], 1)
+            ]
+            for sub_key, pos, s, hist in series:
+                stats.append((d["key"], sub_key, pos, s["mean"], s["std"],
+                              s["slope"], s["avg_lag_days"]))
+                history += [(d["key"], sub_key, i, h["date"], h["count"])
+                            for i, h in enumerate(hist, 1)]
+
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE claims (plant VARCHAR, product_category2 VARCHAR, "
+            "major_category VARCHAR, middle_category VARCHAR, "
+            "reception_date DATE, lag_days INTEGER, lag_valid BOOLEAN)"
+        )
+        con.executemany("INSERT INTO claims VALUES (?, ?, ?, ?, ?, ?, ?)", rows)
+        got = pd.DataFrame(stats, columns=["key", "sub_key", "pos", "mean", "std",
+                                           "slope", "avg_lag_days"])
+        ok, msg = compare(got, con, _MART_ORACLE_STATS)
+        assert ok, f"{n_months}-month spine, stats: {msg}"
+        got = pd.DataFrame(history, columns=["key", "sub_key", "idx", "month", "count"])
+        ok, msg = compare(got, con, _MART_ORACLE_HISTORY)
+        assert ok, f"{n_months}-month spine, history: {msg}"
+
+
+def _docs(df) -> dict[str, dict]:
+    return {r["key"]: r.asDict(recursive=True) for r in df.collect()}
+
+
+def _boundary_correction(spark, tmp_path):
+    """A parquet hub over 2024-01..03 after PLANT_A re-uploaded its
+    March claims; PLANT_B's March rows stay, so the spine cannot move.
+    Returns (post-merge hub frame, batch)."""
+    rows = [
+        ("A1", "PLANT_A", "C", "M1", "S1", datetime.date(2024, 1, 5), 5, True, 0),
+        ("A2", "PLANT_A", "C", "M1", "S2", datetime.date(2024, 3, 5), 4, True, 0),
+        ("B1", "PLANT_B", "C", "M2", "S1", datetime.date(2024, 1, 9), 3, True, 0),
+        ("B2", "PLANT_B", "C", "M2", "S1", datetime.date(2024, 3, 9), -2, False, 0),
+    ]
+    schema = "claim_id string, " + _MART_COLS + ", load_seq int"
+    batch = spark.createDataFrame(
+        [
+            ("A2", "PLANT_A", "C", "M1", "S1", datetime.date(2024, 3, 6), 7, True, 1),
+            ("A3", "PLANT_A", "C", "M1", "S1", datetime.date(2024, 3, 8), 2, True, 1),
+        ],
+        schema,
+    )
+    parts = [F.year("reception_date").alias("reception_year"),
+             F.month("reception_date").alias("reception_month")]
+    hub = str(tmp_path / "hub")
+    storage.write_hub(spark.createDataFrame(rows, schema).select("*", *parts), hub)
+    storage.merge_upsert(spark, hub, batch.select("*", *parts))
+    return storage.read_hub(spark, hub), batch
+
+
+def test_incremental_refresh_empty_batch_writes_nothing(spark):
+    claims = spark.createDataFrame(_mart_fixture(3), _MART_COLS)
+    docs = storage.refresh_series_incremental(claims, claims.limit(0), as_of="2024-02-01")
+    assert docs.collect() == []
+
+
+def test_incremental_refresh_undated_batch_keeps_spine(spark):
+    """Reception dates the engine cannot parse become null; such a batch
+    adds no month, so the refresh stays incremental over the hub's
+    spine and rebuilds only the series it touches."""
+    hub = spark.createDataFrame(_mart_fixture(3), _MART_COLS)
+    batch = spark.createDataFrame(
+        [("P2", "C1", "M1", "S1", d, 4, True) for d in ("N/A", "2023-02-30", "??")],
+        _MART_COLS.replace("reception_date date", "reception_date string"),
+    ).withColumn("reception_date", etl.safe_date_parse(F.col("reception_date")))
+    claims = hub.unionByName(batch)
+    inc = _docs(storage.refresh_series_incremental(claims, batch, as_of="2024-02-01"))
+    full = _docs(storage.build_series_mart(claims, as_of="2024-02-01"))
+    assert set(inc) == {"P2_C1_M1"} and len(full) > 1
+    assert inc["P2_C1_M1"] == full["P2_C1_M1"]
+    assert [h["date"] for h in inc["P2_C1_M1"]["data"]["history"]] == [
+        "2023-11", "2023-12", "2024-01"
+    ]
+
+
+def test_incremental_refresh_boundary_month_correction_stays_incremental(spark, tmp_path):
+    claims, batch = _boundary_correction(spark, tmp_path)
+    inc = _docs(storage.refresh_series_incremental(claims, batch, as_of="2024-03-31"))
+    full = _docs(storage.build_series_mart(claims, as_of="2024-03-31"))
+    assert set(inc) == {"PLANT_A_C_M1"} and set(full) == {"PLANT_A_C_M1", "PLANT_B_C_M2"}
+    assert inc["PLANT_A_C_M1"] == full["PLANT_A_C_M1"]
+    hist = [(h["date"], h["count"]) for h in inc["PLANT_A_C_M1"]["data"]["history"]]
+    assert hist == [("2024-01", 1), ("2024-02", 0), ("2024-03", 2)]
+
+
+def test_incremental_refresh_correction_launches_two_jobs(spark, tmp_path):
+    """The refresh decision is two small collects, one Spark job each;
+    the documents themselves stay lazy until the caller writes them."""
+    claims, batch = _boundary_correction(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("mart_refresh_decision", "refresh_series_incremental")
+    try:
+        storage.refresh_series_incremental(claims, batch, as_of="2024-03-31")
+        jobs = sc.statusTracker().getJobIdsForGroup("mart_refresh_decision")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 2, f"refresh decision launched {len(jobs)} jobs"
 
 
 def test_util_clear_guards(tmp_path):
