@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from claim_analysis_engine_spark import artifacts  # noqa: E402
 from claim_analysis_engine_spark.registry import registry  # noqa: E402
 from claim_analysis_engine_spark.session import get_spark  # noqa: E402
 
@@ -403,7 +404,7 @@ def _stderr_stack_frames(path: str | None) -> int | None:
 
 # Extras that get one TIMED warm-up pass before their median-of-3 (the
 # round-10 steady-state discipline; rationale at the use site in
-# main()). Module-level so tests can enforce the memo↔cold-map pairing.
+# main()).
 WARMUP_EXTRA = [
     "rs_wrapper",
     "p6_rule_engine",
@@ -472,107 +473,6 @@ WARMUP_EXTRA = [
     "sim_mips_topk",
 ]
 
-# Every timed op whose query path rides a session memo / staged layout
-# / trained-model fit, with WHY its first run is cold-heavy — the
-# reasoned cold map written into BENCH_DETAIL.json (r12 verdict ask
-# #8). Module-level and machine-enforced (tests/test_etl_invariants.py:
-# an EXTRA op that touches a memo and is missing here would publish
-# replay-only numbers — the r13 verdict ask #7).
-MEMOIZED = {
-    "rs_wrapper": "memo: risk-tree series CTE build",
-    "p6_rule_engine": "memo: alerts read-back frame + staged settings JSON",
-    "dedup_cluster_cc": "memo: CC label fixpoint (iterative rounds)",
-    "dedup_cluster_cc_star": "memo: large/small-star fixpoint (iterative rounds)",
-    "corpus_quality_lr": "fit: logistic-regression quality model",
-    "sim_recall_report": "memo: exact top-k truth table",
-    "emb_pca_project": "fit: covariance eigendecomposition",
-    "prune_file_stats": "stage: stats-laid-out parquet fixture",
-    "prune_zorder_2d": "stage: z-ordered parquet layout",
-    "src_partition_evolution": "stage: two-generation partition layout",
-    "corpus_bpe_train": "fit: BPE merge-table induction rounds",
-    "txt_containment_sparse": "memo: prefix-filter candidate index",
-    "ml_gbt_mllib": "fit: distributed GBT (pooled lag features)",
-    "emb_word2vec_train": "fit: word2vec negative-sampling epochs",
-    "ep12_embed_retrieval_e2e": "memo: pooled doc-embedding parquet (32 files)",
-    "dedup_semantic_trained": "memo: trained doc vectors reuse + LSH bucketing",
-    "ml_champion4": "fit: 4-family election board (tune + refits)",
-    "ep14_champion_forecast_e2e": "fit: champion refit-forecast memo",
-    "ml_als_recs": "fit: implicit ALS sweeps + recs parquet memo",
-    "ep15_plant_analysis": "memo: decision-tree pass over the "
-    "plant-history substrate + panel assembly (result rows "
-    "session-memoized)",
-    "sim_pq_adc_trained": "memo: PQ codebook train + encode + ADC "
-    "over the trained doc vectors (result rows session-memoized)",
-    # round-14 (the enforcement test's first sweep): family members
-    # whose query path RIDES a memo another entry builds — their
-    # recorded first-run number is cold only when they run before the
-    # builder; the why names the carrying entry — plus three model
-    # fits that were warm-up-timed but absent from the map
-    "sim_kmeans_mllib": "fit: distributed k-means|| init + Lloyd "
-    "rounds (session-memoized)",
-    "corpus_unigram_train": "fit: unigram-LM EM rounds "
-    "(session-memoized)",
-    "ml_lda_topics": "fit: EM LDA topic model (session-memoized)",
-    "corpus_split_leakage_safe": "memo: rides the CC cluster-label "
-    "fixpoint (cold carried by dedup_cluster_cc)",
-    "corpus_bpe_roundtrip_contract": "memo: rides the BPE merge table "
-    "(cold carried by corpus_bpe_train)",
-    "ml_gbt_persist": "memo: rides the GBT fit (cold carried by "
-    "ml_gbt_mllib)",
-    "sim_kmeans_twin_contract": "memo: rides the KMeans fit (cold "
-    "carried by sim_kmeans_mllib)",
-    "corpus_unigram_encode": "memo: rides the unigram LM (cold "
-    "carried by corpus_unigram_train)",
-    "corpus_unigram_contract": "memo: rides the unigram LM (cold "
-    "carried by corpus_unigram_train)",
-    "ml_lda_contract": "memo: rides the LDA fit (cold carried by "
-    "ml_lda_topics)",
-    "ep14_champion_forecast_contract": "memo: rides the election "
-    "board + refit-forecast memos (cold carried by "
-    "ep14_champion_forecast_e2e)",
-    "corpus_tokenizer_faceoff": "memo: rides the BPE + unigram "
-    "models (cold carried by their train ops)",
-    "ml_als_contract": "memo: rides the ALS fit + recs parquet "
-    "(cold carried by ml_als_recs)",
-    "sim_pq_trained_recall_contract": "memo: brute-force exact-truth "
-    "measurement + rides the pooled-embedding/trained-PQ memos "
-    "(contract row session-memoized)",
-    "ep16_sales_management": "memo: sync/upsert/gap-fill DAG + "
-    "fixed-order parquet save (result rows session-memoized)",
-    # round-15 (the enforcement test's second sweep — `.cache()`
-    # sites, not just dict-memos): Spark's CacheManager matches
-    # cached relations by CANONICALIZED PLAN, so an op whose query
-    # path calls .cache() on a deterministic frame replays run 1's
-    # materialized blocks on every repeat in-session run — its median
-    # is partially a cache read exactly like a dict-memo replay, and
-    # run 1 of the spread is the cold number the map surfaces. Caches
-    # that provably die with the op (localCheckpoint — no CacheManager
-    # registration) are exempt; cdc_extract_roundtrip moved to that
-    # form this round.
-    "rs_stl_z": "cache: the per-series target substrate "
-    "(risk._with_target) — both STL branches reuse it",
-    "dedup_simhash": "cache: md5 simhash signature relation (block "
-    "join probes it per pigeonhole table)",
-    "dedup_simhash_fast": "cache: xxhash64 simhash signature relation "
-    "(same shape, production geometry)",
-    "dedup_minhash_lsh_fast": "cache: hashed-shingle + band-signature "
-    "frames (candidate join reuses both)",
-    "corpus_contamination": "cache: corpus shingle frame (both "
-    "contamination sides reuse it)",
-    "ep4_corpus_e2e": "cache: labeled/flagged doc frames feeding the "
-    "one-pass funnel aggregate",
-    "ep7_retrieval_e2e": "cache: embedding/candidate substrate frames "
-    "(brute + ANN branches reuse them)",
-    "ep11_rag_e2e": "cache: chunk table + chunk-grain tf/clen "
-    "aggregate (df/idf/score reuse its partitioning)",
-    "txt_lm_perplexity": "cache: bigram pair stream (three consumers)",
-    "txt_ngram_novelty": "cache: gram frame (first-owner aggregate "
-    "input)",
-    "txt_idf_topterms": "cache: per-doc tf frame (df/idf/top-k reuse "
-    "it)",
-}
-
-
 def main() -> None:
     _install_staging()
     stderr_log = _install_stderr_tee()
@@ -582,9 +482,18 @@ def main() -> None:
     # \r-progress spam was ALL it held in r13 (r13 verdict ask #6) —
     # with it off the capture is readable log + the final JSON line,
     # and the stderr_stack_frames==0 guarantee still applies
+    # Streaming checkpoint file checksums (Spark's default: on) write a
+    # .checksum twin per commit/offset/state file; the streaming gates'
+    # floor is exactly this per-batch commit I/O, and disabling the twin
+    # reads 5–13% off the commit-heavy gates in order-swapped paired
+    # runs. Off for the bench only: every other session keeps Spark's
+    # corruption detection.
     spark = get_spark(
         app_name="cae-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+        },
     )
 
     reg = registry()
@@ -608,14 +517,14 @@ def main() -> None:
     N_RUNS_EXTRA = 3
     spread: dict[str, list[float]] = {}
 
-    def run(name: str, n_runs: int = N_RUNS_EXTRA) -> float:
-        times = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            reg[name].query(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        spread[name] = times
-        return sorted(times)[n_runs // 2]
+    def timed(name: str) -> float:
+        t0 = time.perf_counter()
+        reg[name].query(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        return round(time.perf_counter() - t0, 3)
+
+    def run(name: str, n_runs: int) -> float:
+        spread[name] = [timed(name) for _ in range(n_runs)]
+        return sorted(spread[name])[n_runs // 2]
 
     # Warm-up: absorb one-time JVM/codegen/parquet-footer costs with a
     # throwaway scan+aggregate+noop-write so the first headline query's
@@ -668,66 +577,59 @@ def main() -> None:
     # the full extra set)
     extras_to_run = [] if os.environ.get("SPARK_GRAFT_BENCH_SKIP_EXTRA") else EXTRA
 
+    # Every extra starts cold: the artifact store and Spark's cache are
+    # emptied before its first run, so no earlier op's artifacts or
+    # cached blocks make that run warm. Its first run is the op's cold
+    # number, and the artifact kinds it missed are what it built.
+    #
     # Steady-state warm-up for the HEAVIEST extras (round 10): the
     # round-9 headline fix left the 80+ extras median-of-3 with
     # first-run JIT inside the spread (isolated probe:
     # dedup_simhash_fast [9.58, 4.44, 3.58], still declining at run 3),
     # so their medians drifted ±2× across rounds on unchanged code.
-    # One TIMED but unrecorded-in-the-median pass for the ops whose
-    # first run dominates — the stateful stream gates (state-store +
-    # checkpoint floor), the iterative CC fixpoints, the forecast
-    # contract, and the sketch-audit contract — costs ~30-60 s and
-    # makes those medians comparable round-over-round. The warm-up
-    # timing is kept: for memoized families it IS the cold number
-    # (cleaner than charging run 1 of the median spread with it).
+    # The ops whose first run dominates — the stateful stream gates
+    # (state-store + checkpoint floor), the iterative CC fixpoints, the
+    # model fits — take their first run as a timed warm-up pass outside
+    # the median-of-3, which makes those medians comparable
+    # round-over-round. The others count their first run as run 1.
+    extra: dict[str, float] = {}
     warm_first: dict[str, float] = {}
-    for name in (n for n in WARMUP_EXTRA if n in extras_to_run):
-        t0 = time.perf_counter()
-        reg[name].query(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        warm_first[name] = round(time.perf_counter() - t0, 3)
-
-    extra = {name: run(name) for name in extras_to_run}
-
-    # Memoized families (layouts, CC labels, trained models, the risk
-    # tree's series CTE) report WARM medians above — a fresh cluster
-    # pays the first-run cost instead. Surface that cold number
-    # explicitly: run 1 of the spread is the only run that built the
-    # memo, so it IS the cold timing.
-    # name -> WHY the first run is cold-heavy (r12 verdict ask #8:
-    # machine-readable reasons make a future cold-time regression
-    # diffable — "memo" entries rebuild a session memo, "fit" entries
-    # train a model, "stage" entries lay fixture files/layouts down)
-    cold = {
-        name: {
-            "sec": warm_first.get(name, spread[name][0]),
-            "why": why,
-        }
-        for name, why in MEMOIZED.items()
-        if name in spread
-    }
+    cold: dict[str, dict] = {}
+    artifact_stats: dict[str, dict] = {}
+    for name in extras_to_run:
+        artifacts.clear()
+        spark.catalog.clearCache()
+        first = timed(name)
+        built = sorted(k for k, v in artifacts.stats().items() if v["misses"])
+        cold[name] = {"sec": first, "built": built}
+        if name in WARMUP_EXTRA:
+            warm_first[name] = first
+            spread[name] = [timed(name) for _ in range(N_RUNS_EXTRA)]
+        else:
+            spread[name] = [first] + [timed(name) for _ in range(N_RUNS_EXTRA - 1)]
+        extra[name] = sorted(spread[name])[N_RUNS_EXTRA // 2]
+        # hits and misses over all of the op's runs (clear() reset them)
+        artifact_stats[name] = artifacts.stats()
 
     # Parallel COLD-sum beside the median extras total (r14 verdict
-    # ask: extras_total mixes replay and real numbers — a memoised op
-    # could silently improve the headline extras figure). Per op: the
-    # timed warm-up pass where one ran (it pays the memo/fit/stage
-    # cost), else run 1 of the spread (the only run that built any
-    # session cache). A round-over-round rise here with a flat median
-    # total is the signature of cost moving INTO the memos.
-    extras_cold_total = round(
-        sum(warm_first.get(name, spread[name][0]) for name in extra), 3
-    )
+    # ask: extras_total mixes replay and real numbers — an op that
+    # stores an artifact could silently improve the median total). A
+    # round-over-round rise here with a flat median total is the
+    # signature of cost moving INTO the artifacts.
+    extras_cold_total = round(sum(c["sec"] for c in cold.values()), 3)
 
     methodology = (
         "one unrecorded warm-up pass of the full headline set precedes "
         "timing (since round 9 — steady-state reading; removes the "
         "JIT-warm-up sensitivity behind the r7-r9 drift adjudications); "
-        "since round 10 the heaviest extras (stream gates, CC "
-        "fixpoints, forecast/sketch contracts) get one timed warm-up "
-        "pass too, recorded in warmup_first_run — their medians are "
-        "steady-state, and for memoized families the warm-up IS the "
-        "cold number; median-of-5 per headline query, median-of-3 per "
-        "extra (since round 6; round 4-5 were median-of-3 everywhere; "
-        "rounds 1-3 one-shot incl. first-run warm-up)"
+        "every extra starts with an empty artifact store and Spark cache "
+        "and its first run is its cold number (cold: sec + artifact "
+        "kinds built); the heaviest extras (stream gates, CC fixpoints, "
+        "model fits) take that first run as a timed warm-up pass outside "
+        "the median, recorded in warmup_first_run; median-of-5 per "
+        "headline query, median-of-3 per extra (since round 6; round 4-5 "
+        "were median-of-3 everywhere; rounds 1-3 one-shot incl. "
+        "first-run warm-up)"
     )
 
     # Two-artifact split (round 10): the driver keeps only the last
@@ -777,6 +679,7 @@ def main() -> None:
         "queries": queries,
         "runs_per_query": {"headline": N_RUNS_HEADLINE, "extra": N_RUNS_EXTRA},
         "cold": cold,
+        "artifact_stats": artifact_stats,
         "excluded": EXCLUDED,
         # the heap the run actually used (r12 finding: 12g default GC
         # pressure inflated late extras up to 6x once the surface grew

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark import forecast_models as fm
 from claim_analysis_engine_spark.operators.risk import (
     AS_OF_DAY,
@@ -1340,15 +1341,6 @@ def _ep15_sumavg_col(s: str, denom: int) -> F.Column:
     )
 
 
-# Result-row memo per (session, sf_dir) — the ep12/txt_containment
-# pattern: the panel is a pure function of immutable testdata, its
-# result is pivot-grid-sized (tens of rows), and gate/bench passes
-# re-run the op repeatedly while each call would otherwise pay the
-# full decision-tree plan rebuild on the substituted history frame
-# (~4 s warm at sf0.1; cold run recorded in the bench cold map).
-_EP15_ROWS_MEMO: dict[tuple, tuple] = {}
-
-
 @REG.op("ep15_plant_analysis", oracle=_ep15_oracle())
 def ep15_plant_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP15 — the plant-analysis page (reference pages/3_플랜트_분석.py,
@@ -1381,12 +1373,12 @@ def ep15_plant_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROLLUP over the same scan; risk results are segment×grade-sized
     and broadcast back; lag reuses the bounded-domain exact-median
     histogram (the agg_lag_stats plan). Planted divergence tests:
-    tests/test_ep15.py."""
-    from claim_analysis_engine_spark.tables import rows_replay_memo
+    tests/test_ep15.py.
 
-    return rows_replay_memo(
-        _EP15_ROWS_MEMO, spark, sf_dir, lambda: _ep15_build(spark, sf_dir)
-    )
+    The result rows (pivot-grid-sized, tens of rows) are the
+    "ep15_rows" artifact: each rebuild pays the full decision-tree
+    plan on the substituted history frame (~4 s warm at sf0.1)."""
+    return artifacts.rows("ep15_rows", spark, sf_dir, lambda: _ep15_build(spark, sf_dir))
 
 
 def _ep15_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1679,15 +1671,6 @@ def _ep16_oracle() -> str:
     """
 
 
-# Result-row memo per (session, sf_dir) — the ep15 precedent: the
-# panel is a pure function of immutable testdata, its result is
-# plants×1-sized (single digits of rows), and every un-memoized call
-# pays two full sync→upsert→fill DAG executions plus a parquet save
-# (measured 4.4 s warm median at sf0.1; the bench warm-up carries the
-# real cost into the cold map)
-_EP16_ROWS_MEMO: dict[tuple, tuple] = {}
-
-
 @REG.op("ep16_sales_management", oracle=_ep16_oracle())
 def ep16_sales_management(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP16 — the sales-management page (reference pages/2_매출수량_관리.py)
@@ -1722,12 +1705,12 @@ def ep16_sales_management(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: claims aggregate once to (plant, month) grain — everything
     downstream (sync spine, latest-ID window, upsert, gap fill, pivot,
     melt) runs on grain-sized frames independent of fact size; the dim
-    join broadcasts; the save is one grain-sized parquet write."""
-    from claim_analysis_engine_spark.tables import rows_replay_memo
+    join broadcasts; the save is one grain-sized parquet write.
 
-    return rows_replay_memo(
-        _EP16_ROWS_MEMO, spark, sf_dir, lambda: _ep16_build(spark, sf_dir)
-    )
+    The result rows (plants×1-sized) are the "ep16_rows" artifact: each
+    rebuild pays two full sync→upsert→fill DAG executions plus a
+    parquet save (4.4 s warm median at sf0.1)."""
+    return artifacts.rows("ep16_rows", spark, sf_dir, lambda: _ep16_build(spark, sf_dir))
 
 
 def _ep16_build(spark: SparkSession, sf_dir: str) -> DataFrame:

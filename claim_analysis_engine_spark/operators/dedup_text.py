@@ -31,8 +31,9 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import load, session_memo_key, spread_scan
+from claim_analysis_engine_spark.tables import load, spread_scan
 
 REG = OpRegistry()
 
@@ -836,10 +837,6 @@ def propagate_min_labels(
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
-_CC_MEMO: dict[tuple[str, int, str], DataFrame] = {}
-_CC_MEMO_MAX = 8
-
-
 @REG.op(
     "dedup_cluster_cc",
     oracle=f"""
@@ -897,16 +894,18 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitioned to 32. The single md5 signature pass is cheap enough
     single-split at these SFs; a real corpus arrives multi-split.
 
-    The finished labels frame is memoized per (application, session,
-    sf_dir) — the rule_engine._ALERTS_MEMO pattern: three consumers
-    now need the clusters (this op, dedup_canonical_pick,
-    corpus_split_leakage_safe) and the testdata under sf_dir is
-    immutable, so re-running the iterative propagation per consumer
-    is pure waste. The memoized frame ends in localCheckpointed
-    lineage, so repeat calls read materialized blocks."""
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key in _CC_MEMO:
-        return _CC_MEMO[memo_key]
+    The finished labels frame is the "cc_labels" artifact: three
+    consumers need the clusters (this op, dedup_canonical_pick,
+    corpus_split_leakage_safe), so the iterative propagation runs once
+    per version of the documents. The stored frame ends in
+    localCheckpointed lineage, so repeat calls read materialized
+    blocks."""
+    return artifacts.get_or_build(
+        "cc_labels", spark, sf_dir, lambda: _cc_labels(spark, sf_dir)
+    )
+
+
+def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs, nodes, edges = _cc_sig_graph(spark, sf_dir)
 
     labels, converged = propagate_min_labels(nodes, edges)
@@ -920,13 +919,9 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract column, oracle-checked: the recursive-CTE oracle emits
     # TRUE, so a cap-terminated (non-converged) run hash-mismatches at
     # the gate instead of passing partial labels off as components
-    out = per_doc.join(sizes, "root_id").select(
+    return per_doc.join(sizes, "root_id").select(
         "doc_id", "root_id", "cluster_size", F.lit(converged).alias("converged")
     )
-    if len(_CC_MEMO) >= _CC_MEMO_MAX:
-        _CC_MEMO.pop(next(iter(_CC_MEMO)))
-    _CC_MEMO[memo_key] = out
-    return out
 
 
 def _cc_sig_graph(
@@ -947,7 +942,10 @@ def _cc_sig_graph(
         return F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0))
 
     sig = sum((bit(b) for b in range(SIMHASH_BITS)), F.lit(0)).cast("bigint")
-    sigs = hashed.select("doc_id", sig.alias("sig")).cache()
+    # checkpointed, not cached: the cc_labels artifact reads sigs, and a
+    # CacheManager entry would be matched by plan against a rewritten
+    # documents table and serve the old signatures
+    sigs = hashed.select("doc_id", sig.alias("sig")).localCheckpoint()
     # node table: one row per DISTINCT signature, labeled by its min doc
     nodes = (
         sigs.groupBy("sig").agg(F.min("doc_id").alias("label")).localCheckpoint()
@@ -1793,9 +1791,7 @@ LSH_RECALL_FLOOR_BP = 9000
 # instrument runs once per session instead of three times (~13 s/run
 # at sf0.01 saved twice, at the suite, the driver window, and the
 # bench alike). Pair-count-sized rows (25 at sf0.01, 256 at sf0.1) —
-# the rows-memo class, never cached frames.
-_HIGH_TRUTH_MEMO: dict[tuple, tuple] = {}
-_HIGH_TRUTH_MEMO_MAX = 2
+# the rows class, never cached frames.
 
 # The truth-pair CTE all three contract ORACLES share, in INVERTED-
 # INDEX form: the naive all-pairs list_intersect costs ~18 s at sf0.01
@@ -1820,25 +1816,20 @@ _HIGH_TRUTH_ORACLE_CTES = f"""
 
 
 def _high_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key not in _HIGH_TRUTH_MEMO:
+    def build():
         sh = _shingles(spark, sf_dir)
         a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa"))
         b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb"))
-        truth = (
+        # bounded: threshold-verified truth pairs — the contract
+        # instrument's result rows (gate-scale fixture)
+        return (
             F.broadcast(a)
             .join(b, F.col("doc_a") < F.col("doc_b"))
             .where(_jaccard("sa", "sb") >= LSH_HIGH_T)
             .select("doc_a", "doc_b")
         )
-        # bounded: threshold-verified truth pairs — the contract
-        # instrument's result rows (gate-scale fixture)
-        rows, schema = truth.collect(), truth.schema
-        if len(_HIGH_TRUTH_MEMO) >= _HIGH_TRUTH_MEMO_MAX:
-            _HIGH_TRUTH_MEMO.pop(next(iter(_HIGH_TRUTH_MEMO)))
-        _HIGH_TRUTH_MEMO[memo_key] = (rows, schema)
-    rows, schema = _HIGH_TRUTH_MEMO[memo_key]
-    return spark.createDataFrame(rows, schema)
+
+    return artifacts.rows("high_truth_pairs", spark, sf_dir, build)
 
 
 @REG.op(
@@ -2090,22 +2081,11 @@ def _zipf_corpus(
     return docs, planted
 
 
-# the fixture is static by construction, so its shingle frame is
-# computed once per session and reused (the layout-memo pattern:
-# fixture-once-measure-many); value = (cached sh frame, planted pairs)
-_ZIPFSH_MEMO: dict[tuple, tuple] = {}
-_ZIPFSH_MEMO_MAX = 2
-
-# txt_containment_sparse's deterministic result row, memoized per
-# session — rows, never cached frames (the gate-safe pattern); see the
-# op's docstring
-_CONTAINMENT_ROW_MEMO: dict[tuple, tuple] = {}
-
-
 def _zipf_shingles(spark: SparkSession) -> tuple[DataFrame, list]:
-    """Round-10 change: the memo stores the GENERATED ROWS (plain
-    Python — the expensive part is the numpy corpus generation), not a
-    cached DataFrame. The previous .cache() kept an ~85 MB columnar
+    """The fixture is static by construction, so the "zipf_corpus"
+    artifact (no input dir) stores the GENERATED ROWS (plain Python —
+    the expensive part is the numpy corpus generation), not a cached
+    DataFrame. The previous .cache() kept an ~85 MB columnar
     shingle relation resident for the rest of the session — on a
     default-memory (1g-driver) gate session running 50 ops, that
     resident block plus this op's own working set intermittently
@@ -2113,14 +2093,7 @@ def _zipf_shingles(spark: SparkSession) -> tuple[DataFrame, list]:
     System.exit in local mode). A fresh LocalRelation per call costs a
     ~4 MB plan and a transient per-task shingle projection instead of
     any pinned storage."""
-    from claim_analysis_engine_spark.tables import session_memo_key
-
-    key = session_memo_key(spark, "zipf-fixture")
-    if key not in _ZIPFSH_MEMO:
-        if len(_ZIPFSH_MEMO) >= _ZIPFSH_MEMO_MAX:
-            _ZIPFSH_MEMO.pop(next(iter(_ZIPFSH_MEMO)))
-        _ZIPFSH_MEMO[key] = _zipf_corpus()
-    docs, planted = _ZIPFSH_MEMO[key]
+    docs, planted = artifacts.get_or_build("zipf_corpus", spark, None, _zipf_corpus)
     sh = (
         spark.createDataFrame(docs, "doc_id long, text string")
         .repartition(8)  # low-concurrency: see txt_containment_sparse
@@ -2172,18 +2145,19 @@ def txt_containment_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     RDD-level localCheckpoint that never touches the SQL
     CacheManager, and no SQL .cache() exists anywhere in the op.
 
-    Result-row memo (round 11): the fixture is static and the pipeline
-    deterministic, so the ONE stats row is computed once per session
-    and replayed thereafter — rows, never cached frames (the gate-safe
-    memo pattern above). The cache-free execution path is unchanged;
-    bench and the 50-op gate window pay the ~13 s pipeline once, with
-    the cold cost carried honestly in bench's warmup_first_run map."""
-    from claim_analysis_engine_spark.tables import session_memo_key
+    Result row (round 11): the fixture is static and the pipeline
+    deterministic, so the ONE stats row is the "containment_row"
+    artifact (no input dir), computed once per session and replayed
+    thereafter — rows, never cached frames. The cache-free execution
+    path is unchanged; bench and the 50-op gate window pay the ~13 s
+    pipeline once, and bench reports it in its cold map."""
+    row, schema = artifacts.get_or_build(
+        "containment_row", spark, None, lambda: _containment_row(spark)
+    )
+    return spark.createDataFrame([row], schema)
 
-    memo_key = session_memo_key(spark, "zipf-containment-row")
-    if memo_key in _CONTAINMENT_ROW_MEMO:
-        row, schema = _CONTAINMENT_ROW_MEMO[memo_key]
-        return spark.createDataFrame([row], schema)
+
+def _containment_row(spark: SparkSession) -> tuple:
     sh, planted = _zipf_shingles(spark)
     # LOW-CONCURRENCY execution (the STREAM_STATE_PARTITIONS pattern):
     # the stability lever on a small-heap session is how many tasks
@@ -2230,13 +2204,9 @@ def txt_containment_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
         # eager: the low-concurrency guarantee must hold at
         # EXECUTION time, which for a lazily returned frame would be
         # after the conf is restored
-        row = stats.first()
+        return stats.first(), stats.schema
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if len(_CONTAINMENT_ROW_MEMO) >= _ZIPFSH_MEMO_MAX:
-        _CONTAINMENT_ROW_MEMO.pop(next(iter(_CONTAINMENT_ROW_MEMO)))
-    _CONTAINMENT_ROW_MEMO[memo_key] = (row, stats.schema)
-    return spark.createDataFrame([row], stats.schema)
 
 
 # ---------------------------------------------- dedup_span_extract

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.operators.risk import _SERIES_CTE, _series
 from claim_analysis_engine_spark.registry import OpRegistry
 
@@ -156,44 +157,24 @@ def _recursive_forecast(
     return preds
 
 
-# materialized forecasts per (session, sf_dir): the frame is keys ×
-# HORIZON rows, and BOTH ops (forecast + contract) need it — one
-# training pays for the lifecycle, the memoized-family pattern
-# (rs_wrapper, p6, CC labels); bench surfaces the cold cost via the
-# warm-up pass
-_GBT_MEMO: dict[tuple, tuple] = {}
-_GBT_MEMO_MAX = 2
-
-# the fitted (assembler, model) pair per (session, sf_dir): JVM model
-# objects are session-bound, which is exactly what session_memo_key
-# keys on; the persistence op reads the SAME model the forecast ops
-# trained instead of paying a second fit
-_GBT_MODEL_MEMO: dict[tuple, tuple] = {}
-
-# per-series backtest RMSE rows (keys-sized) from the same training —
-# the pooled model's entry fee for the 4-way champion election
-_GBT_RMSE_MEMO: dict[tuple, tuple] = {}
-
-# the finished 4-way election board (keys × 4 rows) — the election op
-# and its contract pay the per-series tuning fanout once per session
-_CH4_MEMO: dict[tuple, tuple] = {}
+# One pooled-GBT training per version of the inputs, the "gbt"
+# artifact: (forecast rows, forecast schema, (assembler, model),
+# (backtest RMSE rows, schema)); the last two are None when the spine
+# is too short to train. The forecast op, its contract, the
+# persistence op (the SAME fitted model — JVM model objects are
+# session-bound, and the key holds the session) and the 4-way
+# election (the pooled model's entry fee) all read this one fit.
+def _gbt_training(spark: SparkSession, sf_dir: str) -> tuple:
+    return artifacts.get_or_build(
+        "gbt", spark, sf_dir, lambda: _train_and_forecast(spark, sf_dir)
+    )
 
 
 def _gbt_forecast_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared engine for both ops: train, backtest recursively over the
     held-out months, forecast HORIZON months ahead, band with
-    ±1.96·backtest-RMSE clipped at 0. Result memoized per (session,
-    sf_dir) — see _GBT_MEMO."""
-    from claim_analysis_engine_spark.tables import session_memo_key
-
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key in _GBT_MEMO:
-        rows, schema = _GBT_MEMO[memo_key]
-        return spark.createDataFrame(rows, schema)
-    rows, schema = _train_and_forecast(spark, sf_dir)
-    if len(_GBT_MEMO) >= _GBT_MEMO_MAX:
-        _GBT_MEMO.pop(next(iter(_GBT_MEMO)))
-    _GBT_MEMO[memo_key] = (rows, schema)
+    ±1.96·backtest-RMSE clipped at 0 — from the shared training."""
+    rows, schema, _fit, _rmse = _gbt_training(spark, sf_dir)
     return spark.createDataFrame(rows, schema)
 
 
@@ -213,15 +194,10 @@ def _train_and_forecast(spark: SparkSession, sf_dir: str):
         ).first()
         m, first_month = bounds["m"], bounds["first_month"]
         if m is None or m < MIN_MONTHS:  # the oracle's eligibility mirror
-            return [], out_schema
+            return [], out_schema, None, None
 
         train = s.where(F.col("idx") <= m - HORIZON)
         assembler, model = _fit_gbt(train)
-        from claim_analysis_engine_spark.tables import session_memo_key
-
-        if len(_GBT_MODEL_MEMO) >= _GBT_MEMO_MAX:
-            _GBT_MODEL_MEMO.pop(next(iter(_GBT_MODEL_MEMO)))
-        _GBT_MODEL_MEMO[session_memo_key(spark, sf_dir)] = (assembler, model)
 
         hist = s.select("status", "priority", "idx", "n")
         # honest backtest: recursion replayed from the train boundary,
@@ -248,14 +224,8 @@ def _train_and_forecast(spark: SparkSession, sf_dir: str):
         )
         # materialize the keys-sized RMSE once: the band join below AND
         # the 4-way champion election (ml_champion4) both consume it —
-        # rows into the memo, frame rebuilt from them (gate-safe)
+        # rows into the artifact, frame rebuilt from them (gate-safe)
         rmse_rows, rmse_schema = rmse.collect(), rmse.schema
-        if len(_GBT_RMSE_MEMO) >= _GBT_MEMO_MAX:
-            _GBT_RMSE_MEMO.pop(next(iter(_GBT_RMSE_MEMO)))
-        _GBT_RMSE_MEMO[session_memo_key(spark, sf_dir)] = (
-            rmse_rows,
-            rmse_schema,
-        )
         rmse = spark.createDataFrame(rmse_rows, rmse_schema)
 
         fc = _recursive_forecast(assembler, model, hist, m, first_month)
@@ -276,7 +246,12 @@ def _train_and_forecast(spark: SparkSession, sf_dir: str):
         # collects) so the cache can be released here; a production run
         # forecasting millions of series would write `result` to a sink
         # instead and unpersist after the write
-        return result.collect(), result.schema  # bounded: keys × HORIZON
+        return (
+            result.collect(),  # bounded: keys × HORIZON
+            result.schema,
+            (assembler, model),
+            (rmse_rows, rmse_schema),
+        )
     finally:
         s.unpersist()
 
@@ -377,7 +352,7 @@ def ml_gbt_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     same lifecycle step for the distributed GBT, using pyspark.ml's
     own writer/loader (Parquet tree data + JSON metadata — the format
     a model registry stores). The op takes the SESSION'S fitted model
-    (trained once by the forecast ops via _GBT_MODEL_MEMO — no second
+    (the shared "gbt" training the forecast ops read — no second
     fit), writes it, loads it back, and hash-certifies:
 
     * n_trees — the loaded ensemble has exactly the configured 20
@@ -402,8 +377,6 @@ def ml_gbt_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from claim_analysis_engine_spark.tmputil import fresh_dir
 
-    from claim_analysis_engine_spark.tables import session_memo_key
-
     s = _lag_features(_series(spark, sf_dir))
     m = s.agg(F.max("idx")).first()[0]
     if m is None or m < MIN_MONTHS:
@@ -412,10 +385,7 @@ def ml_gbt_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_trees int, n_rows_scored bigint, roundtrip_identical boolean, "
             "featimp_normalized boolean",
         )
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key not in _GBT_MODEL_MEMO:
-        _gbt_forecast_frame(spark, sf_dir)  # trains once, fills the memo
-    assembler, model = _GBT_MODEL_MEMO[memo_key]
+    assembler, model = _gbt_training(spark, sf_dir)[2]
 
     path = os.path.join(
         fresh_dir("cae_gbt_persist_"), "model"
@@ -508,8 +478,8 @@ def ml_gbt_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches at the driver.
 
     Scale: both sides are keys-grain aggregates over the shared
-    (keys × months) frame; the GBT side reuses the session-memoized
-    forecast (no second training)."""
+    (keys × months) frame; the GBT side reuses the stored "gbt"
+    training's forecast (no second training)."""
     s = _lag_features(_series(spark, sf_dir))
     m = s.agg(F.max("idx")).first()[0]
     if m is None or m < MIN_MONTHS:
@@ -546,15 +516,8 @@ def _gbt_rmse_frame(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     SAME training every other ml_gbt_* op shares (one fit per
     session/sf). None when the spine is too short to train
     (m < MIN_MONTHS) — the election then runs 3-way."""
-    from claim_analysis_engine_spark.tables import session_memo_key
-
-    key = session_memo_key(spark, sf_dir)
-    if key not in _GBT_RMSE_MEMO:
-        _gbt_forecast_frame(spark, sf_dir)  # trains once, fills the memo
-    if key not in _GBT_RMSE_MEMO:
-        return None
-    rows, schema = _GBT_RMSE_MEMO[key]
-    return spark.createDataFrame(rows, schema)
+    rmse = _gbt_training(spark, sf_dir)[3]
+    return None if rmse is None else spark.createDataFrame(*rmse)
 
 
 @REG.op("ml_champion4")  # rows-only: the ranked quantities are fitted-
@@ -574,16 +537,16 @@ def ml_champion4(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank + is_champion.
 
     Scale: the board is keys × 4 rows; the pooled entrant's RMSE rides
-    the shared training memo (zero extra fits), and the finished board
-    rows are memoized per (session, sf_dir) — the election and its
-    contract pay the per-series tuning fanout once."""
-    from claim_analysis_engine_spark.operators.tsforecast import ml_champion
-    from claim_analysis_engine_spark.tables import session_memo_key
+    the shared "gbt" training (zero extra fits), and the finished board
+    rows are the "champion4" artifact — the election and its contract
+    pay the per-series tuning fanout once."""
+    return artifacts.rows(
+        "champion4", spark, sf_dir, lambda: _champion4_board(spark, sf_dir)
+    )
 
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key in _CH4_MEMO:
-        rows, schema = _CH4_MEMO[memo_key]
-        return spark.createDataFrame(rows, schema)
+
+def _champion4_board(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from claim_analysis_engine_spark.operators.tsforecast import ml_champion
 
     board = ml_champion(spark, sf_dir).select(
         "status", "priority", "model", "test_rmse"
@@ -601,16 +564,11 @@ def ml_champion4(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("status", "priority").orderBy(
         F.col("test_rmse").asc(), F.col("model").asc()
     )
-    out = (
+    return (  # keys × 4 rows — bounded
         board.withColumn("rank", F.row_number().over(w))
         .withColumn("is_champion", F.col("rank") == 1)
         .select("status", "priority", "model", "test_rmse", "rank", "is_champion")
     )
-    rows, schema = out.collect(), out.schema  # keys × 4 — bounded
-    if len(_CH4_MEMO) >= _GBT_MEMO_MAX:
-        _CH4_MEMO.pop(next(iter(_CH4_MEMO)))
-    _CH4_MEMO[memo_key] = (rows, schema)
-    return spark.createDataFrame(rows, schema)
 
 
 @REG.op(
@@ -674,11 +632,6 @@ def ml_champion4_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- ep14: forecast by elected champion
 
-# finished (keys × HORIZON) forecast rows per (session, sf_dir): the
-# e2e op and its contract pay the per-series champion refit once
-_EP14_MEMO: dict[tuple, tuple] = {}
-
-
 def _ep14_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared engine for ep14_champion_forecast_e2e + contract: take
     the 4-way election's winner per series and emit THAT model's
@@ -699,18 +652,19 @@ def _ep14_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the election board is keys × 4 broadcast DATA; the numpy
     fanout is the embarrassingly-parallel per-series shape
     (fanout_apply's packing defeats AQE's bytes-only coalescing); the
-    pooled side is a keys-sized semi-join against a memoized frame."""
+    pooled side is a keys-sized semi-join against the shared training.
+    The finished (keys × HORIZON) rows are the "ep14_rows" artifact: the
+    e2e op and its contract pay the per-series champion refit once."""
+    return artifacts.rows("ep14_rows", spark, sf_dir, lambda: _ep14_build(spark, sf_dir))
+
+
+def _ep14_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
     from claim_analysis_engine_spark import forecast_models as fm
     from claim_analysis_engine_spark.operators.tsforecast import HORIZON as H
-    from claim_analysis_engine_spark.tables import fanout_apply, session_memo_key
-
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key in _EP14_MEMO:
-        rows, schema = _EP14_MEMO[memo_key]
-        return spark.createDataFrame(rows, schema)
+    from claim_analysis_engine_spark.tables import fanout_apply
 
     board = (
         ml_champion4(spark, sf_dir)
@@ -754,12 +708,7 @@ def _ep14_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "status string, priority string, h int, yhat double, "
         "ci_lo double, ci_hi double, model string",
     )
-    out = np_fc.unionByName(gbt_fc)
-    rows, schema = out.collect(), out.schema  # keys × HORIZON — bounded
-    if len(_EP14_MEMO) >= _GBT_MEMO_MAX:
-        _EP14_MEMO.pop(next(iter(_EP14_MEMO)))
-    _EP14_MEMO[memo_key] = (rows, schema)
-    return spark.createDataFrame(rows, schema)
+    return np_fc.unionByName(gbt_fc)  # keys × HORIZON rows — bounded
 
 
 @REG.op("ep14_champion_forecast_e2e")  # rows-only: yhat comes from the

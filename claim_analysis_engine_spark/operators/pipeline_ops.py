@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import load, session_memo_key
+from claim_analysis_engine_spark.tables import load
 
 REG = OpRegistry()
 
@@ -1310,18 +1311,23 @@ def corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same vocab-sized frame (the corpus is touched ONCE to build
     word counts). Stops early when the best pair's corpus count
     drops below BPE_MIN_PAIR (nothing left worth merging). The
-    finished merge table is memoized per (session, corpus) and
-    shared with corpus_bpe_encode — the lifecycle's two halves pay
-    for one induction."""
-    _MERGE_SCHEMA = (
-        "rank int, left string, right string, merged string, pair_count bigint"
+    finished merge table is the "bpe_merges" artifact, shared with
+    corpus_bpe_encode — the lifecycle's two halves pay for one
+    induction."""
+    return spark.createDataFrame(
+        _bpe_merge_rows(spark, sf_dir),
+        "rank int, left string, right string, merged string, pair_count bigint",
     )
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key in _BPE_MERGE_MEMO:
-        return spark.createDataFrame(
-            [tuple(m.values()) for m in _BPE_MERGE_MEMO[memo_key]],
-            _MERGE_SCHEMA,
-        )
+
+
+def _bpe_merge_rows(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """(rank, left, right, merged, pair_count) rows in rank order."""
+    return artifacts.get_or_build(
+        "bpe_merges", spark, sf_dir, lambda: _bpe_induce(spark, sf_dir)
+    )
+
+
+def _bpe_induce(spark: SparkSession, sf_dir: str) -> list[tuple]:
     toks = F.array_remove(F.split("text", " "), "")
     words = (
         load(spark, sf_dir, "documents")
@@ -1387,29 +1393,15 @@ def corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if len(_BPE_MERGE_MEMO) >= _BPE_MERGE_MEMO_MAX:
-        _BPE_MERGE_MEMO.pop(next(iter(_BPE_MERGE_MEMO)))
-    _BPE_MERGE_MEMO[memo_key] = [
-        dict(zip(("rank", "left", "right", "merged", "pair_count"), m))
-        for m in merges
-    ]
-    return spark.createDataFrame(merges, _MERGE_SCHEMA)
+    return merges
 
 
 # -------------------------------------------------- corpus_bpe_encode
 
-# learned merge tables per (session, sf_dir): the trainer populates it
-# and the encoder reads it, so the two lifecycle halves never pay for
-# the iterative induction twice in one session
-_BPE_MERGE_MEMO: dict[tuple, list] = {}
-_BPE_MERGE_MEMO_MAX = 4
-
 
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[dict]:
-    key = session_memo_key(spark, sf_dir)
-    if key not in _BPE_MERGE_MEMO:
-        corpus_bpe_train(spark, sf_dir)  # populates the memo
-    return sorted(_BPE_MERGE_MEMO[key], key=lambda m: m["rank"])
+    fields = ("rank", "left", "right", "merged", "pair_count")
+    return [dict(zip(fields, m)) for m in _bpe_merge_rows(spark, sf_dir)]
 
 
 def _bpe_segment(vocab: DataFrame, merges: list[dict]) -> DataFrame:
@@ -1449,8 +1441,8 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per doc: word count, BPE token count, exact character mass, and
     the saving vs character-level tokenization in integer basis
-    points. The merge table is memoized per (session, corpus) and
-    shared with the trainer op.
+    points. The merge table is the trainer op's "bpe_merges"
+    artifact.
 
     Scale: the merge loop runs on the vocab frame at 8 shuffle
     partitions (tiny-frame lesson); the word→count map broadcasts
@@ -1715,13 +1707,6 @@ UNI_MULTI = 48     # multi-char seed candidates kept (top by weighted count)
 UNI_MIN_SEED = 2   # weighted-count floor for a multi-char seed
 UNI_ITERS = 3      # hard-EM (Viterbi) training rounds
 
-# trained model per (session, corpus): (seg_map word->tokens, history,
-# vocab token->weighted_count) — vocab-sized plain-Python state, the
-# _BPE_MERGE_MEMO pattern
-_UNI_MEMO: dict[tuple, tuple] = {}
-_UNI_MEMO_MAX = 2
-
-
 def _uni_viterbi(w: str, logp: dict[str, float]) -> tuple[list[str], float]:
     """Best segmentation of w under token log-probs — DP over char
     positions with lookback <= UNI_MAX_LEN. Ties break to the LONGER
@@ -1769,13 +1754,16 @@ def _unigram_model(
 
     All state is vocabulary-sized (the BPE precedent: Heap's law makes
     the distinct-word table sublinear in corpus size; the corpus-sized
-    work in the consumers is one broadcast join + one aggregate)."""
+    work in the consumers is one broadcast join + one aggregate). The
+    trained model is the "unigram" artifact, shared by every consumer."""
+    return artifacts.get_or_build(
+        "unigram", spark, sf_dir, lambda: _unigram_train(spark, sf_dir)
+    )
+
+
+def _unigram_train(spark: SparkSession, sf_dir: str) -> tuple:
     import math
     from collections import Counter
-
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key in _UNI_MEMO:
-        return _UNI_MEMO[memo_key]
 
     toks = F.array_remove(F.split("text", " "), "")
     wf_rows = (
@@ -1823,11 +1811,7 @@ def _unigram_model(
         history.append(obj)
         vocab = {t: float(c) for t, c in counts.items()}  # prune unused
 
-    out = (seg_map, history, vocab)
-    if len(_UNI_MEMO) >= _UNI_MEMO_MAX:
-        _UNI_MEMO.pop(next(iter(_UNI_MEMO)))
-    _UNI_MEMO[memo_key] = out
-    return out
+    return seg_map, history, vocab
 
 
 @REG.op("corpus_unigram_train")  # rows-only: the token inventory and
@@ -2050,7 +2034,7 @@ def corpus_tokenizer_faceoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle partitions, unigram's Viterbi map broadcast DATA); the
     corpus-sized work is ONE token-stream pass per family (broadcast
     word->stats join + global aggregate); model state rides the
-    session memos both trainers already fill."""
+    stored artifacts both trainers already build."""
     merges = _bpe_merges(spark, sf_dir)
     seg_map, _hist, _vocab = _unigram_model(spark, sf_dir)
 

@@ -17,10 +17,10 @@ Design notes (the LDA/KMeans precedents):
   and the contract certifies per-instance structure (complete top-k
   per modeled user, items from the modeled item set, finite scores
   non-increasing in rank) plus the SQL-exact accounting.
-* Recommendations are written ONCE per (session, sf_dir) to a
-  session-private parquet dir and the PATH memoized (the _DOCVEC_MEMO
-  layout pattern) — users × k rows is customer-dimension-sized, which
-  at warehouse scale is millions of rows and must never be
+* Recommendations are written ONCE per version of the inputs to a
+  session-private parquet dir, and the PATH is the "als_recs"
+  artifact — users × k rows is customer-dimension-sized, which at
+  warehouse scale is millions of rows and must never be
   driver-resident.
 
 Scale (100 TB): the interaction build is two fact joins collapsing to
@@ -36,8 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import load, session_memo_key
+from claim_analysis_engine_spark.tables import load
+from claim_analysis_engine_spark.tmputil import defer_delete, fresh_dir
 
 REG = OpRegistry()
 
@@ -46,11 +48,6 @@ ALS_ITERS = 10
 ALS_REG = 0.1
 ALS_ALPHA = 1.0   # implicit-feedback confidence scaling
 ALS_K = 3         # recommendations per user
-
-# recommendation PARQUET PATH per (session, sf_dir) — see module
-# docstring; the e2e op and its contract share one fit
-_ALS_MEMO: dict[tuple, str] = {}
-_ALS_MEMO_MAX = 2
 
 # the interaction CTE both the op and the oracle derive from — kept as
 # one string so the modeled-population definition cannot drift
@@ -79,58 +76,55 @@ def _als_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fit implicit ALS on the purchase counts and materialize top-K
     recommendations per user to a session-private parquet dir; the
-    memoized PATH serves every consumer identical values (fit once,
+    stored PATH serves every consumer identical values (fit once,
     read many — the gate-stability property, with nothing
     user-dimension-sized on the driver)."""
+    path = artifacts.get_or_build(
+        "als_recs",
+        spark,
+        sf_dir,
+        lambda: _fit_als_recs(spark, sf_dir),
+        on_evict=defer_delete,
+    )
+    return spark.read.parquet(path)
+
+
+def _fit_als_recs(spark: SparkSession, sf_dir: str) -> str:
     from pyspark.ml.recommendation import ALS
 
-    from claim_analysis_engine_spark.tmputil import fresh_dir
-
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key not in _ALS_MEMO:
-        inter = _als_interactions(spark, sf_dir).select(
-            F.col("custkey").cast("int").alias("user"),
-            F.col("partkey").cast("int").alias("item"),
-            F.col("n_buys").cast("float").alias("rating"),
+    inter = _als_interactions(spark, sf_dir).select(
+        F.col("custkey").cast("int").alias("user"),
+        F.col("partkey").cast("int").alias("item"),
+        F.col("n_buys").cast("float").alias("rating"),
+    )
+    model = ALS(
+        rank=ALS_RANK,
+        maxIter=ALS_ITERS,
+        regParam=ALS_REG,
+        implicitPrefs=True,
+        alpha=ALS_ALPHA,
+        seed=7,
+        userCol="user",
+        itemCol="item",
+        ratingCol="rating",
+        coldStartStrategy="drop",
+    ).fit(inter)
+    recs = (
+        model.recommendForAllUsers(ALS_K)
+        .select(
+            "user",
+            F.posexplode("recommendations").alias("pos", "rec"),
         )
-        model = ALS(
-            rank=ALS_RANK,
-            maxIter=ALS_ITERS,
-            regParam=ALS_REG,
-            implicitPrefs=True,
-            alpha=ALS_ALPHA,
-            seed=7,
-            userCol="user",
-            itemCol="item",
-            ratingCol="rating",
-            coldStartStrategy="drop",
-        ).fit(inter)
-        recs = (
-            model.recommendForAllUsers(ALS_K)
-            .select(
-                "user",
-                F.posexplode("recommendations").alias("pos", "rec"),
-            )
-            .select(
-                F.col("user").cast("bigint").alias("custkey"),
-                (F.col("pos") + 1).alias("rank"),
-                F.col("rec.item").cast("bigint").alias("partkey"),
-                F.col("rec.rating").cast("double").alias("score"),
-            )
+        .select(
+            F.col("user").cast("bigint").alias("custkey"),
+            (F.col("pos") + 1).alias("rank"),
+            F.col("rec.item").cast("bigint").alias("partkey"),
+            F.col("rec.rating").cast("double").alias("score"),
         )
-        out = fresh_dir("cae_spark_alsrecs_")
-        recs.write.mode("overwrite").parquet(out)
-        if len(_ALS_MEMO) >= _ALS_MEMO_MAX:
-            # drop the memo entry and QUEUE the dir for deferred
-            # deletion (r13 advice): an eager rmtree would FileNotFound
-            # a consumer holding a pre-eviction frame, but tmputil's
-            # grace-windowed queue sweeps it after later evictions so
-            # tmp usage stays bounded in long-lived sessions
-            from claim_analysis_engine_spark.tmputil import defer_delete
-
-            defer_delete(_ALS_MEMO.pop(next(iter(_ALS_MEMO))))
-        _ALS_MEMO[memo_key] = out
-    return spark.read.parquet(_ALS_MEMO[memo_key])
+    )
+    out = fresh_dir("cae_spark_alsrecs_")
+    recs.write.mode("overwrite").parquet(out)
+    return out
 
 
 @REG.op("ml_als_recs")  # rows-only: factor scores are LEARNED state,

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
 from claim_analysis_engine_spark.tables import load
 
@@ -110,7 +111,23 @@ def _with_target(
     spark: SparkSession, sf_dir: str, orders: DataFrame | None = None
 ) -> DataFrame:
     """Series frame + target month (global max) as a broadcast 1-row
-    join — never a collect, never a global window."""
+    join — never a collect, never a global window. The default
+    substrate (``orders is None``) is the "series" artifact: built and
+    localCheckpointed once per version of sf_dir, then shared by every
+    risk, tree, alert and forecast consumer."""
+    if orders is None:
+        return artifacts.get_or_build(
+            "series",
+            spark,
+            sf_dir,
+            lambda: _target_join(spark, sf_dir).localCheckpoint(),
+        )
+    return _target_join(spark, sf_dir, orders)
+
+
+def _target_join(
+    spark: SparkSession, sf_dir: str, orders: DataFrame | None = None
+) -> DataFrame:
     s = _series(spark, sf_dir, orders)
     tgt = (
         (orders if orders is not None else load(spark, sf_dir, "orders"))
@@ -437,11 +454,11 @@ def rs_stl_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely with per-key windows — distributes by series key, no UDF."""
     key = ["status", "priority"]
     kw = W.partitionBy(*key).orderBy("month")
-    # the zero-filled series is |keys|×|months| rows; cache it so the
-    # decomposition's many self-references (trend, seasonal, residual,
-    # current) reuse one materialization instead of re-scanning the
-    # fact table per branch
-    base = _with_target(spark, sf_dir).cache()
+    # the zero-filled series is |keys|×|months| rows, checkpointed once
+    # (the series artifact), so the decomposition's many
+    # self-references (trend, seasonal, residual, current) read one
+    # materialization instead of re-scanning the fact table per branch
+    base = _with_target(spark, sf_dir)
     hist = (
         base.where(F.col("month") < F.col("target"))
         .withColumn("idx", F.row_number().over(kw) - 1)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.operators.risk import (
     AS_OF_DAY,
     _CRIT_SQL,
@@ -33,7 +34,6 @@ from claim_analysis_engine_spark.operators.risk import (
     _with_target,
 )
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import session_memo_key
 
 REG = OpRegistry()
 
@@ -320,23 +320,6 @@ _TREE_SELECT = """
 _TREE_ORACLE = _TREE_CTES + _TREE_SELECT
 
 
-# Memo for the default-substrate tree frame. Building this DataFrame
-# costs ~3.7 s of driver-side Py4J round trips (hundreds of Column
-# objects) before anything executes, and FOUR gate ops consume it
-# (rs_tree_relational, p6_rule_engine, ep5_p2_summary via p6,
-# ep5_alerts_incremental builds its own merged variant) — the source
-# parquet is immutable testdata and DataFrames are immutable, so reuse
-# is safe. Keyed by (applicationId, id(session), sf_dir): id() alone
-# could be revived by a garbage-collected session's address, but the
-# memoized DataFrame holds a reference to its session, so a keyed
-# session can never be collected while its entry lives — and including
-# id() keeps sibling sessions (spark.newSession(), possibly different
-# confs) from sharing one frame. Bounded: cleared when it outgrows a
-# handful of entries (new app / new sf_dir evicts stale sessions).
-_TREE_MEMO: dict[tuple[str, int, str], DataFrame] = {}
-_TREE_MEMO_MAX = 8
-
-
 @REG.op("rs_tree_relational", oracle=_TREE_ORACLE)
 def rs_tree_relational(
     spark: SparkSession, sf_dir: str, orders: DataFrame | None = None
@@ -344,13 +327,28 @@ def rs_tree_relational(
     """The full decision tree as Column math (see module docstring).
     Output schema matches rs_wrapper exactly; tests assert the two
     implementations agree row for row. ``orders`` substitutes the fact
-    table (incremental-refresh path scores hub + upload batch)."""
-    memo_key = None
+    table (incremental-refresh path scores hub + upload batch).
+
+    The default-substrate frame is the "risk_tree" artifact: building
+    it costs ~3.7 s of driver-side Py4J round trips (hundreds of Column
+    objects) before anything executes, and p6_rule_engine (through it
+    ep5_p2_summary) consumes it too."""
     if orders is None:
-        memo_key = session_memo_key(spark, sf_dir)
-        if memo_key in _TREE_MEMO:
-            return _TREE_MEMO[memo_key]
-    base = _with_target(spark, sf_dir, orders).cache()
+        return artifacts.get_or_build(
+            "risk_tree", spark, sf_dir, lambda: _tree(spark, sf_dir, None)
+        )
+    return _tree(spark, sf_dir, orders)
+
+
+def _tree(spark: SparkSession, sf_dir: str, orders: DataFrame | None) -> DataFrame:
+    # The tree reads the series from many branches, so it reads
+    # checkpointed rows: the series artifact on the default path, its
+    # own checkpoint of the substituted fact table otherwise. Neither
+    # is a CacheManager entry, which would match a later read of the
+    # same path by plan and serve the old blocks after a rewrite.
+    base = _with_target(spark, sf_dir, orders)
+    if orders is not None:
+        base = base.localCheckpoint()
     key = ["status", "priority"]
     hist_m = F.col("month") < F.col("target")
     hist_n = F.when(hist_m, F.col("n"))
@@ -513,22 +511,33 @@ def rs_tree_relational(
         F.when(use_nb, 1.0 - nb_cdf).otherwise(1.0 - pois_cdf)
     )
 
-    # The cache is a CollapseProject barrier, not (primarily) a reuse
-    # cache: without it the final select's score/reason/band trees each
-    # re-inline z, the Poisson/NB fold recurrences of p_val, and the
-    # penalty cases — the collapsed Project's generated code crosses
-    # the JVM's 64 KB method limit, and EVERY execution then pays a
-    # failed Janino compile plus interpreted fallback (measured: the
-    # tiny 2-doc alerts write took 5.5 s warm). With the barrier both
-    # codegen units stay under the limit. The frame is per-series-key
-    # rows — KB-scale at any SF.
+    # The checkpoint is a CollapseProject barrier, not (primarily) a
+    # reuse cache: without it the final select's
+    # score/reason/band trees each re-inline z, the Poisson/NB fold
+    # recurrences of p_val, and the penalty cases — the collapsed
+    # Project's generated code crosses the JVM's 64 KB method limit, and
+    # EVERY execution then pays a failed Janino compile plus interpreted
+    # fallback (measured: the tiny 2-doc alerts write took 5.5 s warm).
+    # With the barrier both codegen units stay under the limit. The
+    # frame is per-series-key rows — KB-scale at any SF.
     calc = (
         feat.withColumn("z", z)
         .withColumn("used_stl", used_stl)
         .withColumn("partial_penalty", partial_penalty)
         .withColumn("momentum", momentum)
         .withColumn("p_val", p_val)
-    ).cache()
+    )
+    # Checkpoint calc now, under a tiny-frame shuffle width
+    # (|keys|x|months| rows; 32 scheduler rounds per join stage
+    # measured ~2 s of pure task overhead at sf0.1 — the
+    # propagate_min_labels lesson). Consumers then read the
+    # checkpointed rows through narrow projects only.
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        calc = calc.localCheckpoint()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # From here down the score/band/reason pyramid is STAGED into
     # withColumns levels instead of one nested Column expression. A
@@ -749,7 +758,7 @@ def rs_tree_relational(
         .otherwise(F.col("alert_reason"))
     )
 
-    result = staged.select(
+    return staged.select(
         "status",
         "priority",
         F.when(F.col("crit"), "중대").otherwise("일반").alias("grade"),
@@ -757,20 +766,3 @@ def rs_tree_relational(
         score.alias("score"),
         reason.alias("reason"),
     )
-    if memo_key is not None:
-        # Materialize the base/calc caches NOW, under a tiny-frame
-        # shuffle width: the series frame is |keys|x|months| rows, and
-        # paying 32 scheduler rounds per join stage at first consumer
-        # action measured ~2 s of pure task overhead at sf0.1 (the
-        # propagate_min_labels lesson). Consumers then read cached
-        # blocks through narrow projects only.
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            calc.count()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if len(_TREE_MEMO) >= _TREE_MEMO_MAX:
-            _TREE_MEMO.clear()
-        _TREE_MEMO[memo_key] = result
-    return result

@@ -15,14 +15,14 @@ appears here.
 from __future__ import annotations
 
 import shutil
-from claim_analysis_engine_spark.tmputil import fresh_dir
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from claim_analysis_engine_spark import storage
+from claim_analysis_engine_spark import artifacts, storage
 from claim_analysis_engine_spark.registry import OpRegistry
 from claim_analysis_engine_spark.tables import load
+from claim_analysis_engine_spark.tmputil import defer_delete, fresh_dir
 
 REG = OpRegistry()
 
@@ -1128,13 +1128,6 @@ def snk_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 PE_SPLIT_YEAR = 1998  # generations: < split by year; >= split by (year, month)
 PE_QUERY_MONTH = 6
 
-# (gen1 root, gen2 root, dir counts) per (session, sf_dir) — the
-# two-generation layout is written once and queried many times (the
-# prune_file_stats layout-memo lesson)
-_PEVOLVE_MEMO: dict[tuple, tuple] = {}
-_PEVOLVE_MEMO_MAX = 4
-
-
 @REG.op(
     "src_partition_evolution",
     oracle=f"""
@@ -1182,43 +1175,19 @@ def src_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan note (asserted in tests): the year-month scan carries the
     month predicate in PartitionFilters; the year-only scan can only
-    carry it as a data Filter."""
+    carry it as a data Filter.
+
+    The two-generation layout is the "pevolve_layout" artifact: written
+    once per version of orders and queried many times."""
     import os
 
-    from claim_analysis_engine_spark.tables import session_memo_key
-
-    memo_key = session_memo_key(spark, sf_dir)
-    if memo_key not in _PEVOLVE_MEMO:
-        root = fresh_dir("cae_spark_pevolve_")
-        g1_root = os.path.join(root, "gen1")
-        g2_root = os.path.join(root, "gen2")
-        o = load(spark, sf_dir, "orders").select(
-            "o_totalprice",
-            F.year("o_orderdate").alias("y"),
-            F.month("o_orderdate").alias("m"),
-        )
-        (
-            o.where(F.col("y") < PE_SPLIT_YEAR)
-            .repartition("y")
-            .write.partitionBy("y")
-            .mode("overwrite")
-            .parquet(g1_root)
-        )
-        (
-            o.where(F.col("y") >= PE_SPLIT_YEAR)
-            .repartition("y", "m")
-            .write.partitionBy("y", "m")
-            .mode("overwrite")
-            .parquet(g2_root)
-        )
-        if len(_PEVOLVE_MEMO) >= _PEVOLVE_MEMO_MAX:
-            # reclaim the evicted session-private layout dirs — long
-            # pytest/driver sessions would otherwise orphan them
-            old_g1, old_g2 = _PEVOLVE_MEMO.pop(next(iter(_PEVOLVE_MEMO)))
-            shutil.rmtree(old_g1, ignore_errors=True)
-            shutil.rmtree(old_g2, ignore_errors=True)
-        _PEVOLVE_MEMO[memo_key] = (g1_root, g2_root)
-    g1_root, g2_root = _PEVOLVE_MEMO[memo_key]
+    g1_root, g2_root = artifacts.get_or_build(
+        "pevolve_layout",
+        spark,
+        sf_dir,
+        lambda: _pevolve_layout(spark, sf_dir),
+        on_evict=lambda roots: defer_delete(os.path.dirname(roots[0])),
+    )
 
     g1_dirs = [d for d in os.listdir(g1_root) if d.startswith("y=")]
     g2_dirs = [
@@ -1251,6 +1220,36 @@ def src_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return answer(q1, "year-only", len(g1_dirs), len(g1_dirs)).unionByName(
         answer(q2, "year-month", len(g2_dirs), len(g2_read))
     )
+
+
+def _pevolve_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Write orders as a year-partitioned and a (year, month)-partitioned
+    generation; return their roots."""
+    import os
+
+    root = fresh_dir("cae_spark_pevolve_")
+    g1_root = os.path.join(root, "gen1")
+    g2_root = os.path.join(root, "gen2")
+    o = load(spark, sf_dir, "orders").select(
+        "o_totalprice",
+        F.year("o_orderdate").alias("y"),
+        F.month("o_orderdate").alias("m"),
+    )
+    (
+        o.where(F.col("y") < PE_SPLIT_YEAR)
+        .repartition("y")
+        .write.partitionBy("y")
+        .mode("overwrite")
+        .parquet(g1_root)
+    )
+    (
+        o.where(F.col("y") >= PE_SPLIT_YEAR)
+        .repartition("y", "m")
+        .write.partitionBy("y", "m")
+        .mode("overwrite")
+        .parquet(g2_root)
+    )
+    return g1_root, g2_root
 
 
 # ---------------------------------------------- src_pydatasource_corpus

@@ -91,21 +91,11 @@ def merged_registry() -> dict[str, Op]:
 
     merged: dict[str, Op] = {}
     # Registry order drives the driver's correctness sampling window
-    # (CORRECTNESS_r07 shows it takes EXACTLY the first 50 entries).
-    # Rounds 1–5 certified the whole §2 core; round 7's window (the
-    # first 50 of the r7 rotation) certified the compositions, stream
-    # gates, similarity, dedup variants, textops, and corpus core — 45
-    # hash-green + 3 rows-only + the ep1 FAIL. ROUND8_FRONT below is
-    # the final rotation: the ep1_ingest_e2e re-certification (the
-    # round-7 data-loss fix) first, then ALL 43 ops that have never
-    # had a driver row (positions 50+ of the r7 order), then round-8
-    # additions.
-    # 44 carried entries + up to 6 new ops fit the 50-slot window —
-    # after this round every registered op has a driver row. Within a
-    # family, oracle-bearing ops lead rows-only ones. Everything
-    # driver-green in r1–r7 moves behind; the local DuckDB-oracle
-    # replicas (tests/test_oracle_parity.py) keep covering every op
-    # each run regardless of position.
+    # (CORRECTNESS_r07 shows it takes EXACTLY the first 50 entries);
+    # registry() rotates CURRENT_FRONT to the head. Within a family,
+    # oracle-bearing ops lead rows-only ones; the local DuckDB-oracle
+    # replicas (tests/test_oracle_parity.py) cover every op each run
+    # regardless of position.
     for mod in (
         risk,
         risk_tree,
@@ -137,567 +127,6 @@ def merged_registry() -> dict[str, Op]:
             merged[op_id] = op
     return merged
 
-
-# Exact driver-sampling order for round 8 (see comment in registry()).
-# Slot 1 re-certifies the round-7 driver FAIL (ep1_ingest_e2e, fixed by
-# storage._pinned_conf). Slots 2-44 are the 43 ops that
-# have never had a driver row — exactly the r7 order's positions 50+.
-# New round-8 ops append after them; the whole list must stay within
-# the driver's 50-slot window for every entry to get a row.
-# Ops added AFTER this list filled fall outside the window by
-# construction — covered by the local DuckDB parity suite this round.
-ROUND8_FRONT: tuple[str, ...] = (
-    # re-certification of the r7 silent-data-loss FAIL
-    "ep1_ingest_e2e",
-    # never-driver-sampled: weighted sampling + multimodal metadata
-    "corpus_sample_weighted",
-    "mm_blob_meta",
-    "mm_phash_groups",
-    "mm_bytes_histogram",
-    "mm_frame_sample",
-    "mm_assembly_profile",
-    # scale-pattern joins + pruning
-    "join_bucketed",
-    "join_dpp",
-    "prune_partition",
-    "join_skew_salted",
-    "join_asof",
-    "join_range_bucketed",
-    "agg_salted",
-    # SCD2 + data quality
-    "dim_scd2",
-    "join_pit_scd2",
-    "dq_expectations",
-    "dq_referential",
-    "dq_psi_drift",
-    # event analytics
-    "evt_funnel",
-    "evt_retention",
-    "evt_transitions",
-    "evt_error_burst",
-    "evt_sessionize_native",
-    # storage surface
-    "src_schema_evolution",
-    "snk_mart_diff",
-    "snk_compaction",
-    "sort_global_shards",
-    "sort_zorder",
-    # grouping-sets + k-anonymity
-    "pvt_cube",
-    "agg_kanon_suppress",
-    # scalar tail (§2.8 completion)
-    "f_str_sanitize",
-    "f_str_parse_label",
-    "f_math",
-    "f_polyfit_slope",
-    # corpus tail
-    "corpus_pack_sequences",
-    "corpus_shuffle_epoch",
-    "corpus_quality_lr",
-    # sketches (rows-only: engine-specific estimates)
-    "agg_approx_distinct",
-    "agg_sketch_quantiles",
-    "agg_hll_union_rollup",
-    # trained-model search paths (rows-only: learned state)
-    "sim_ivf_search_trained",
-    "sim_pq_adc",
-    "mm_decode_stub",
-    # round-8 additions
-    "ep3_forecast_contract",
-    "txt_containment_prefix",
-    "evt_attribution",
-    "agg_decay_recency",
-    "corpus_bpe_train",
-    "sim_mips_topk",
-)
-
-# Exact driver-sampling order for round 9. After round 8 closed, EXACTLY
-# 66 registered ops had never had a driver row (62 with oracles + 4
-# rows-only: sim_nprobe_sweep, corpus_bpe_encode, emb_pca_project,
-# agg_hll_intersection). One 50-slot window cannot hold them all;
-# ROUND9_FRONT takes 50 — capstones, storage round-trips, the lakehouse
-# layer, scale-pattern joins, graph analytics, the late analytics
-# panels, and the six oracle-bearing round-8-session-3 ops
-# (evt_alert_throttle, cdc_extract_roundtrip, corpus_chunk_overlap,
-# ep11_rag_e2e, src_partition_evolution, sales_interpolate_linear),
-# which displace six tail aggregates per the round-8 plan. The 16-op
-# round-10 tail (the displaced aggregates + the rows-only quartet +
-# the remaining late aggregates) rides the round-10 rotation together
-# with any round-9 additions:
-#   agg_basket_pairs agg_benford agg_pareto agg_cohort_ltv
-#   agg_abc_class agg_survival_km agg_new_vs_returning agg_return_rates
-#   agg_supply_risk agg_cumulative_distinct agg_seasonal_index
-#   agg_backlog_aging sim_nprobe_sweep corpus_bpe_encode
-#   emb_pca_project agg_hll_intersection
-# Every op stays covered every suite run by the local DuckDB-oracle
-# replica (tests/test_oracle_parity.py) regardless of position.
-#
-# ROUND10_FRONT (build it first thing in round 10; verify the count
-# against CORRECTNESS_r01..r09 the way round 9 did): after this round
-# EXACTLY 29 registered ops have never had a driver row — the 16-op
-# tail pinned above plus the thirteen round-9 additions:
-#   sim_ivf_recall_contract agg_quantile_rank_contract
-#   agg_hll_error_contract sim_nprobe_contract snk_vacuum_retention
-#   evt_outer_join_stream evt_props_variant src_pydatasource_corpus
-#   txt_containment_sparse agg_hll_merge_contract emb_pca_contract
-#   dedup_lsh_fast_contract corpus_quality_lr_contract
-# All 29 fit one 50-slot window with ~21 slots to spare — fill the
-# remainder with round-10 additions first, then recycle the oldest
-# r1-r4 certifications (they've had no driver row since the r5
-# rotation; a re-certification guards against silent regressions the
-# local replica's session can't see). Oracle-bearing before rows-only,
-# as always. NOTE: every one of the 29 was already rehearsed green on
-# a stripped-conf driver-like session in round 9 (oracle compare at
-# sf0.01), so the rotation is de-risked.
-ROUND9_FRONT: tuple[str, ...] = (
-    # capstones (end-to-end lifecycles)
-    "ep9_growth_e2e",
-    "ep10_ops_e2e",
-    "ep11_rag_e2e",
-    # storage round-trips
-    "src_jsonl_roundtrip",
-    "snk_csv_roundtrip",
-    "src_logs_parse",
-    "dedup_audit_hub",
-    # lakehouse layer
-    "snk_manifest_publish",
-    "snk_manifest_timetravel",
-    "prune_file_stats",
-    "prune_zorder_2d",
-    "src_partition_evolution",
-    "cdc_extract_roundtrip",
-    # scale-pattern joins / aggregates
-    "join_bloom_prefilter",
-    "agg_heavy_hitters",
-    "join_interval_overlap",
-    "join_asof_tolerance",
-    "join_star_flatten",
-    # graph analytics
-    "graph_pagerank",
-    "graph_triangles",
-    "graph_link_predict",
-    # time-series / sales panels
-    "agg_backtest_snaive",
-    "agg_rolling_slope",
-    "agg_discount_elasticity",
-    "agg_cycle_time",
-    "sales_interpolate_linear",
-    "agg_ohlc_daily",
-    # corpus / embedding panels
-    "emb_norm_profile",
-    "txt_winnowing",
-    "corpus_length_hist",
-    "corpus_vocab_coverage",
-    "corpus_chunk_overlap",
-    # event analytics panels
-    "evt_power_users_rolling",
-    "evt_anomaly_mad",
-    "evt_streaks",
-    "evt_bot_detection",
-    "evt_heatmap_profile",
-    "evt_gap_hist",
-    "evt_stickiness",
-    "evt_conversion_lag",
-    "evt_peak_concurrency",
-    "evt_path_topk",
-    "evt_ab_lift",
-    "evt_alert_throttle",
-    "evt_enrich_stream",
-    # customer / dq panels
-    "agg_percentiles",
-    "agg_gini",
-    "cust_rfm",
-    "dq_freshness",
-    "dq_column_profile",
-)
-
-# Exact driver-sampling order for round 10. Verified against
-# CORRECTNESS_r01..r09 at rotation time (scripted union): EXACTLY 29
-# registered ops had never had a driver row — 23 oracle-bearing + 6
-# rows-only — matching the pinned list in the round-9 comment above.
-# They lead the window (oracle-bearing first). FINAL composition:
-# 29 pinned + 15 round-10 additions (the MLlib surface: GBT forecaster
-# + contract + persist + leaderboard, distributed-LR gate + contract,
-# MinHashLSH twin + contract, Word2Vec trainer + contract; the BPE
-# round-trip / IVF-train / compress-ratio contracts; the mm-decode
-# FULL value twin; and the 9th streaming gate) + 6 recycled oldest
-# r1-r4 certifications (the flagship entry() spine + the headline
-# core — a re-cert guards against regressions the local replica's
-# session can't see). ALL 50 of the FINAL window were rehearsed on a
-# stripped-conf driver-like session at sf0.01: hash-green across the
-# board, 208 s total (earlier compositions also rehearsed green as
-# additions landed).
-#
-# ROUND11_FRONT (build it first thing in round 11; verify the count
-# against CORRECTNESS_r01..r10 the way rounds 9-10 did): if
-# CORRECTNESS_r10 certifies this window, NO registered op will lack a
-# driver row. Recycle the displaced candidates FIRST (meta_rowcount,
-# src_csv, sort_multi, flt_range_date, agg_multi, dedup_fullrow,
-# agg_kpi_mom, union_schema_align, join_claims_sales, flt_rolling_30d,
-# src_parquet_part, pvt_subtotals, topk_per_group, pvt_months,
-# agg_lot_alert — dropped from this window as additions landed), then
-# the next-oldest r1-r4 certifications, plus any round-11 additions,
-# oracle-bearing before rows-only, as always.
-ROUND10_FRONT: tuple[str, ...] = (
-    # --- pinned: never-driver-sampled, oracle-bearing (23) ---
-    # sketch/ANN/PCA/LSH/LR contract oracles (round-9 pattern)
-    "sim_ivf_recall_contract",
-    "sim_nprobe_contract",
-    "emb_pca_contract",
-    "dedup_lsh_fast_contract",
-    "corpus_quality_lr_contract",
-    "agg_hll_error_contract",
-    "agg_quantile_rank_contract",
-    "agg_hll_merge_contract",
-    # round-9 lakehouse / streaming / variant additions
-    "snk_vacuum_retention",
-    "evt_outer_join_stream",
-    "evt_props_variant",
-    # displaced + late aggregates (the round-8/9 tail)
-    "agg_basket_pairs",
-    "agg_benford",
-    "agg_pareto",
-    "agg_cohort_ltv",
-    "agg_abc_class",
-    "agg_survival_km",
-    "agg_new_vs_returning",
-    "agg_return_rates",
-    "agg_supply_risk",
-    "agg_cumulative_distinct",
-    "agg_seasonal_index",
-    "agg_backlog_aging",
-    # --- round-10 additions (inserted as they land) ---
-    "ml_gbt_contract",
-    "ml_gbt_mllib",
-    "corpus_bpe_roundtrip_contract",
-    "evt_pydatasource_stream",
-    "sim_ivf_train_contract",
-    "txt_compress_ratio_contract",
-    "mm_decode_contract",
-    "corpus_quality_mllib_contract",
-    "corpus_quality_lr_mllib",
-    "ml_gbt_persist",
-    "ml_gbt_leaderboard",
-    "dedup_minhash_mllib_contract",
-    "dedup_minhash_mllib",
-    "emb_word2vec_contract",
-    "emb_word2vec_train",
-    # --- pinned: never-driver-sampled, rows-only (6) ---
-    "src_pydatasource_corpus",
-    "txt_containment_sparse",
-    "sim_nprobe_sweep",
-    "emb_pca_project",
-    "corpus_bpe_encode",
-    "agg_hll_intersection",
-    # --- recycled oldest certifications (latest driver row r1-r4) ---
-    "agg_monthly_count",
-    "proj_canon54",
-    "dedup_keylast",
-    "dedup_merge",
-    "agg_lag_stats",
-    "spine_zero",
-)
-
-# Exact driver-sampling order for round 11. Verified against
-# CORRECTNESS_r01..r10 at rotation time (scripted union, set equality
-# both directions): ALL 303 previously registered ops have a driver
-# row — the certification backlog is zero, so this window is pure
-# freshness rotation + round-11 additions. Composition: the 15
-# candidates the round-10 window displaced (pinned in the ROUND11
-# comment above — all last certified r4) lead; the round-11 additions
-# follow (oracle-bearing before rows-only); then the next-oldest
-# certifications — the ten r1/r2 scalar/event certs (the oldest in the
-# repo) and twenty of the twenty-nine remaining r4 certs in registry
-# order.
-#
-# ROUND12_FRONT (build it first thing in round 12; verify the count
-# against CORRECTNESS_r01..r11 the way rounds 9-11 did): recycle the
-# ELEVEN r4-certified ops that did not fit this window FIRST —
-#   agg_null_profile agg_minmax_date flt_partial_period agg_hist
-#   detect_outliers_iqr detect_outliers_zscore agg_window_profile
-#   unpvt_melt pvt_hybrid
-# plus the SIX the round-11 late additions displaced:
-#   agg_topn_freq agg_mode (semantic-dedup rotation)
-#   join_semi_active join_anti_orphans agg_distinct_keys agg_sum_mean
-#   (substring-dedup + KMeans-twin rotation)
-#   limit_head merge_cdc_tombstone (ep13-capstone + CMS-sketch rotation)
-#   join_anti_sync join_semi union_append (unigram-tokenizer rotation)
-#   join_latest_id (cms-stream-gate rotation)
-#   dedup_audit (dup-span-score rotation)
-#   fill_na_label num_coerce (LDA-family rotation)
-#   flt_eq (incremental-span rotation)
-#   flt_isin (dp-release rotation)
-#   flt_notnull (mart-restart-gate rotation)
-#   etl_preprocess (hll-stream-gate rotation)
-# — then the next-oldest r5 certifications, plus round-12 additions,
-# oracle-bearing before rows-only, as always.
-ROUND11_FRONT: tuple[str, ...] = (
-    # --- recycled: the 15 candidates the round-10 window displaced ---
-    "meta_rowcount",
-    "src_csv",
-    "sort_multi",
-    "flt_range_date",
-    "agg_multi",
-    "dedup_fullrow",
-    "agg_kpi_mom",
-    "union_schema_align",
-    "join_claims_sales",
-    "flt_rolling_30d",
-    "src_parquet_part",
-    "pvt_subtotals",
-    "topk_per_group",
-    "pvt_months",
-    "agg_lot_alert",
-    # --- round-11 additions (oracle-bearing first) ---
-    "evt_restart_recovery_stream",
-    "ep12_embed_recall_contract",
-    "ml_champion4_contract",
-    "dedup_semantic_contract",
-    "ep12_embed_retrieval_e2e",
-    "ml_champion4",
-    "dedup_semantic_trained",
-    # --- late-round-11 additions (substring dedup + KMeans twin) ---
-    "dedup_span_extract",
-    "corpus_remove_dup_spans",
-    "sim_kmeans_twin_contract",
-    "sim_kmeans_mllib",
-    "ep13_span_curation_e2e",
-    "agg_cms_heavy_hitters",
-    "corpus_unigram_contract",
-    "corpus_unigram_train",
-    "corpus_unigram_encode",
-    "evt_cms_stream",
-    "txt_dup_span_frac",
-    "ml_lda_contract",
-    "ml_lda_topics",
-    "dedup_span_incremental",
-    "agg_dp_release",
-    "evt_mart_restart_stream",
-    "evt_hll_stream",
-    # --- recycled: the oldest certifications in the repo (r1/r2) ---
-    "f_datediff",
-    "f_month_trunc",
-    "f_month_arith",
-    "f_days_in_month",
-    "f_str_clean",
-    "evt_tumbling",
-    "evt_json_props",
-    "f_date_cascade",
-    "f_date_assemble",
-    "f_date_ms",
-    # --- recycled: next-oldest r4 certifications, registry order ---
-    "src_parquet_cols",
-)
-
-# Exact driver-sampling order for round 12. Verified against
-# CORRECTNESS_r01..r11 at rotation time (scripted union, set equality
-# both directions: all 327 pre-round-12 ops have a driver row — the
-# backlog stays zero, so this window is pure freshness rotation +
-# round-12 additions). Composition, per the round-11 plan: ALL 28
-# remaining r4-era certifications lead (the 11 never-recycled ones
-# plus the 17 the round-11 late additions displaced — after this
-# round nothing in the registry is certified older than r5); the four
-# round-12 additions follow (oracle-bearing first: the
-# champion-forecast contract, the tokenizer head-to-head, the 14th
-# streaming gate; then the rows-only ep14 e2e); the remaining 18
-# slots recycle the next-oldest r5 certifications in registry order
-# (the risk-scoring family + rule engine + the first forecast
-# certs).
-#
-# ROUND13_FRONT (build it first thing in round 13; verify the count
-# against CORRECTNESS_r01..r12 the way rounds 9-12 did): recycle the
-# REMAINING 32 r5-era certifications FIRST (22 oracle-bearing in
-# registry order — ml_alloc, the sales/storage/sink family,
-# join_exog_align, ppm, ep5 siblings, dedup_exact and the md5
-# minhash/simhash flavors — then the 10 rows-only r5 certs:
-# rs_wrapper, ml_sarimax/catboost/lstm/tune/champion/persist,
-# ml_warning_marking, snk_series_refresh, src_orc_roundtrip), then
-# round-13 additions, then the oldest r7 certs, oracle-bearing before
-# rows-only, as always.
-ROUND12_FRONT: tuple[str, ...] = (
-    # --- recycled: all 28 remaining r4-era certifications ---
-    "etl_preprocess",
-    "flt_notnull",
-    "flt_isin",
-    "flt_eq",
-    "fill_na_label",
-    "num_coerce",
-    "dedup_audit",
-    "join_latest_id",
-    "join_anti_sync",
-    "join_semi",
-    "union_append",
-    "limit_head",
-    "merge_cdc_tombstone",
-    "join_semi_active",
-    "join_anti_orphans",
-    "agg_distinct_keys",
-    "agg_sum_mean",
-    "agg_topn_freq",
-    "agg_mode",
-    "agg_null_profile",
-    "agg_minmax_date",
-    "flt_partial_period",
-    "agg_hist",
-    "detect_outliers_iqr",
-    "detect_outliers_zscore",
-    "agg_window_profile",
-    "unpvt_melt",
-    "pvt_hybrid",
-    # --- round-12 additions (oracle-bearing first) ---
-    "ep14_champion_forecast_contract",
-    "corpus_tokenizer_faceoff",
-    "evt_span_dedup_stream",
-    "txt_collocations",
-    "ml_als_contract",
-    "txt_quality_gopher",
-    "snk_pydatasource_jsonl",
-    "ep14_champion_forecast_e2e",
-    "ml_als_recs",
-    # --- recycled: next-oldest r5 certifications, registry order ---
-    "rs_regime",
-    "rs_momentum",
-    "rs_ewma",
-    "rs_sparse_tail",
-    "rs_stl_z",
-    "rs_nelson",
-    "rs_partial",
-    "rs_cold_start",
-    "rs_safe_zone",
-    "rs_noise_cap",
-    "rs_grade_thresholds",
-    "f_month_end_pred",
-    "rs_tree_relational",
-    # DISPLACED by the late-round-12 additions (txt_collocations,
-    # ml_als_contract, ml_als_recs, txt_quality_gopher,
-    # snk_pydatasource_jsonl): p6_rule_engine, ep5_p2_summary,
-    # ep5_alerts_incremental, ml_split, ml_ci — recycle them FIRST in
-    # ROUND13_FRONT (see the plan comment above).
-)
-
-# Round-13 window, GENERATED by scripts/plan_front.py from the
-# CORRECTNESS_r01..r12 union (no more hand-tracked displacement
-# bookkeeping — the r12 verdict ask): the 5 ops the late-r12 additions
-# displaced lead (still r5-certified, earliest registry positions),
-# then the remaining 32 r5-era certifications oracle-bearing-first,
-# then the 11 oldest r7 certifications, then the round-13 additions.
-# tests/test_etl_invariants.py asserts this tuple EQUALS the derived
-# plan, so a drift between bookkeeping and reality fails the suite.
-ROUND13_FRONT: tuple[str, ...] = (
-    "p6_rule_engine",
-    "ep5_p2_summary",
-    "ep5_alerts_incremental",
-    "ml_split",
-    "ml_ci",
-    "ml_alloc",
-    "snk_parquet_part",
-    "snk_parquet_flat",
-    "snk_json_series",
-    "snk_series_refresh",
-    "src_json_settings",
-    "src_parquet_flat",
-    "src_excel",
-    "snk_excel",
-    "util_clear",
-    "src_orc_roundtrip",
-    "sales_gap_fill",
-    "ppm",
-    "join_exog_align",
-    "dedup_exact",
-    "dedup_minhash_block",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embed_cosine",
-    "dedup_jaccard_anchor",
-    "dedup_cluster_cc",
-    "sim_topk_brute",
-    "rs_wrapper",
-    "ml_sarimax",
-    "ml_catboost",
-    "ml_lstm",
-    "ml_tune",
-    "ml_champion",
-    "ml_persist",
-    "ml_warning_marking",
-    "dedup_minhash_lsh_fast",
-    "dedup_simhash_fast",
-    "dedup_canonical_pick",
-    "dedup_cluster_cc_star",
-    "join_fuzzy_entity",
-    "dedup_cross_snapshot",
-    "sim_ann_lsh",
-    "sim_ivf",
-    "sim_pairs_threshold",
-    "emb_quantize_int8",
-    "sim_ann_int8_rerank",
-    "emb_drift_monitor",
-    "ml_warning_contract",
-    "ep15_plant_analysis",
-    "sim_pq_adc_trained",
-)
-
-# Round-14 window, generated by scripts/plan_front.py from the
-# CORRECTNESS_r01..r13 union: 48 recycled slots — the 39 r7-era
-# certifications FIRST (the txt_* quality family, the corpus pipeline
-# certs, the six early stream gates, the ep2/ep3/ep4/ep6/ep7/ep8
-# compositions, sim_ivf_train, sim_recall_report), then the earliest
-# r8 cohort (src_schema_evolution, snk_mart_diff, txt_containment_prefix,
-# sim_mips_topk, the corpus pack/sample trio, the mm_* pair) — plus the
-# 2 round-14 additions (oracle-bearing, guaranteed slots). Oldest live
-# cert moves r7 → r8. tests/test_etl_invariants.py pins this tuple to
-# the derivation.
-ROUND14_FRONT: tuple[str, ...] = (
-    "sim_recall_report",
-    "txt_tokens",
-    "txt_quality",
-    "txt_langid",
-    "txt_fingerprint",
-    "txt_corpus_ngrams",
-    "txt_tokens_bpe",
-    "txt_repetition",
-    "txt_pii_scrub",
-    "txt_boilerplate_frac",
-    "txt_lm_perplexity",
-    "txt_ngram_novelty",
-    "txt_idf_topterms",
-    "txt_search_conjunctive",
-    "txt_search_bm25",
-    "corpus_split_hash",
-    "corpus_contamination",
-    "corpus_pack_shards",
-    "corpus_quality_funnel",
-    "corpus_sample_stratified",
-    "corpus_budget_mix",
-    "corpus_dedup_chunks",
-    "ep6_curation_e2e",
-    "corpus_split_leakage_safe",
-    "evt_dedup_stream",
-    "evt_sessionize_stream",
-    "evt_tumbling_stream",
-    "evt_join_stream",
-    "evt_mart_refresh_stream",
-    "evt_scd2_refresh_stream",
-    "ep2_risk_radar",
-    "ep2_trend_3yr",
-    "ep4_corpus_e2e",
-    "ep7_retrieval_e2e",
-    "ep8_hybrid_retrieval",
-    "evt_sessionize",
-    "sim_ivf_train",
-    "txt_compress_ratio",
-    "ep3_forecast_e2e",
-    "src_schema_evolution",
-    "snk_mart_diff",
-    "txt_containment_prefix",
-    "sim_mips_topk",
-    "corpus_shuffle_epoch",
-    "corpus_pack_sequences",
-    "corpus_sample_weighted",
-    "mm_blob_meta",
-    "mm_frame_sample",
-    "sim_pq_trained_recall_contract",
-    "ep16_sales_management",
-)
 
 # Round-15 window, generated by scripts/plan_front.py from the
 # CORRECTNESS_r01..r14 union: 50 recycled slots, 0 additions (no new

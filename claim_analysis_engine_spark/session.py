@@ -54,18 +54,6 @@ def get_spark(
         # (tables._load_events converts). Set here so it never has to
         # flip mid-session.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Streaming checkpoint file checksums (Spark 4.1 default: on)
-        # write a .checksum twin per commit/offset/state file — the
-        # streaming gates' floor is exactly this per-batch commit I/O,
-        # and disabling the twin reads 5–13% off the commit-heavy
-        # gates in order-swapped paired runs (r15). Local/HDFS-backed
-        # checkpoints already sit on a checksummed store, so the twin
-        # is duplicate protection here; deployments on object stores
-        # that want end-to-end corruption detection flip the env knob.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("SPARK_GRAFT_STREAM_CKPT_CHECKSUM", "false"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

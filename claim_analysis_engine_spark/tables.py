@@ -1,8 +1,9 @@
-"""Access to the driver-generated synthetic tables (TESTDATA.md).
+"""Access to the driver-generated synthetic tables (TESTDATA.md), plus
+the execution helpers operators share (fanout_apply, spread_scan).
 
-All operator queries registered for the DuckDB-oracle gate read these
-parquet tables. Reads are plain `spark.read.parquet` so Catalyst gets
-full pushdown/pruning; never cache here — each query owns its plan.
+Reads are plain `spark.read.parquet` so Catalyst gets full pushdown and
+pruning. Nothing here caches: a frame reused across requests is an
+artifact (artifacts.py), keyed by the files it was computed from.
 """
 
 from __future__ import annotations
@@ -51,17 +52,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
-
-
-def session_memo_key(spark: SparkSession, *extra) -> tuple:
-    """Memo key for per-(session, args) caches of expensive immutable
-    artifacts (CC labels, IVF centroids, alert sinks). Uses the
-    SparkContext's applicationId + startTime: unlike id(spark), which
-    the allocator can recycle after GC (handing a recreated session a
-    frame bound to a stopped one), startTime is minted by the JVM per
-    context and never recurs within a process."""
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime, *extra)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -114,27 +104,6 @@ def fanout_apply(df, keys: list[str], run, schema: str):
                 yield run(g)
 
     return rep.mapInPandas(process, schema)
-
-
-def rows_replay_memo(memo: dict, spark, sf_dir: str, build, max_entries: int = 2):
-    """Collect-once-and-replay memo for ops whose result is a SMALL
-    pure function of (session, sf_dir) — the ep12/txt_containment
-    idiom, shared so the eviction cap and key discipline live in one
-    place (r13 review: four hand-rolled copies). ``build`` returns the
-    real DataFrame; the first call per key collects its rows (so the
-    expensive plan executes exactly once per session) and later calls
-    replay them as a local frame. Never use for corpus-sized results —
-    those get the parquet-PATH memo pattern instead."""
-    key = session_memo_key(spark, sf_dir)
-    if key not in memo:
-        out = build()
-        # bounded: callers guarantee k-result-sized frames (docstring)
-        rows, schema = out.collect(), out.schema
-        if len(memo) >= max_entries:
-            memo.pop(next(iter(memo)))
-        memo[key] = (rows, schema)
-    rows, schema = memo[key]
-    return spark.createDataFrame(rows, schema)
 
 
 def spread_scan(df):

@@ -46,25 +46,18 @@ def fresh_dir(prefix: str) -> str:
 
 # ----------------------------------------------------- deferred delete
 #
-# Parquet-PATH memos (_DOCVEC_MEMO, _ALS_MEMO) must not rmtree an
-# evicted dir eagerly — a DataFrame handed out before the eviction
-# still reads the path lazily (r12 advice). But never deleting means a
-# long-lived session cycling many (session, sf_dir) keys grows tmp
-# usage without bound until the exit sweep (r13 advice). Middle ground:
-# a bounded deferred-delete queue. An evicted path is actually removed
-# only after _DEFER_GRACE FURTHER evictions — evictions are rare (one
-# per memo fill past the cap), so by the time two more landed, any
-# frame holding the old path has long been consumed, and live tmp
-# usage is bounded by (memo caps + _DEFER_GRACE) dirs per process.
-# The atexit parent sweep remains the backstop for whatever is still
-# queued at exit.
+# An evicted path-valued artifact (artifacts.py) is queued here, not
+# removed, because a frame handed out before the eviction may still
+# read it. It is removed after _DEFER_GRACE further evictions, so disk
+# use stays bounded in a long-lived session; the atexit parent sweep
+# takes whatever is still queued at exit.
 
 _DEFER_GRACE = 2
 _deferred: list[str] = []
 
 
 def defer_delete(path: str) -> None:
-    """Queue an evicted memo dir; the oldest queued dirs beyond the
+    """Queue an evicted artifact dir; the oldest queued dirs beyond the
     grace window are swept now (bounded disk), the rest at exit."""
     _deferred.append(path)
     while len(_deferred) > _DEFER_GRACE:

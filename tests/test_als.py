@@ -8,9 +8,9 @@ from __future__ import annotations
 
 import pytest
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.operators.recommend import (
     ALS_K,
-    _ALS_MEMO,
     ml_als_recs,
 )
 
@@ -97,7 +97,7 @@ def test_als_contract_accounting_is_population_exact(spark, planted_sf):
 
 
 def test_als_memo_serves_identical_rows_per_session(spark, planted_sf):
-    """The parquet-path memo (the _DOCVEC_MEMO pattern): two reads in
+    """The parquet-path artifact (the docvec pattern): two reads in
     one session return byte-identical recommendations — the
     gate-stability property that lets the e2e op and its contract
     share one fit."""
@@ -105,8 +105,9 @@ def test_als_memo_serves_identical_rows_per_session(spark, planted_sf):
     a = sorted(
         map(tuple, ml_als_recs(spark, sf).collect()),
     )
-    assert any(sf in str(k) for k in _ALS_MEMO), "memo not filled"
+    hits = artifacts.stats()["als_recs"]["hits"]
     b = sorted(map(tuple, ml_als_recs(spark, sf).collect()))
+    assert artifacts.stats()["als_recs"]["hits"] == hits + 1, "memo not filled"
     assert a == b
 
 

@@ -1,0 +1,173 @@
+"""The artifact store (claim_analysis_engine_spark.artifacts).
+
+Part 1: operators whose results the store (or Spark's CacheManager)
+could replay must serve the NEW data after a table is rewritten in
+place under the same path mid-session. Part 2: the store's own
+contract, on a stub session with no Spark."""
+
+from __future__ import annotations
+
+import os
+import shutil
+from types import SimpleNamespace
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from claim_analysis_engine_spark.registry import registry
+from tests.conftest import SF_SMALL
+from tests.oracle_harness import compare, duck_connection
+
+# every artifact family the dashboard path reads (the series substrate,
+# the tree, the alerts read-back, the CC labels) plus one result-row
+# replay (ep15)
+REWRITE_OPS = (
+    "rs_tree_relational",
+    "p6_rule_engine",
+    "ep5_p2_summary",
+    "rs_wrapper",
+    "f_month_end_pred",
+    "ep2_risk_radar",
+    "dedup_cluster_cc",
+    "ep15_plant_analysis",
+)
+# rows-only ops checked against their relational twin's oracle
+ORACLE_OF = {"rs_wrapper": "rs_tree_relational"}
+
+
+def _rewrite_in_place(path: str, keep) -> None:
+    """Replace a parquet file with a filtered copy: written under a
+    temporary name, then renamed over the original."""
+    table = pq.read_table(path)
+    tmp = path + ".tmp"
+    pq.write_table(table.filter(keep(table)), tmp)
+    os.replace(tmp, path)
+
+
+def test_in_place_rewrite_serves_the_new_data(spark, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in os.listdir(SF_SMALL):
+        shutil.copyfile(os.path.join(SF_SMALL, name), sf / name)
+    sf = str(sf)
+    reg = registry()
+    for op in REWRITE_OPS:
+        reg[op].query(spark, sf).toPandas()
+
+    # half the orders (every series' counts move) and every other
+    # document (the near-dup graph loses nodes)
+    _rewrite_in_place(
+        f"{sf}/orders.parquet",
+        lambda t: pc.equal(pc.bit_wise_and(t["o_orderkey"], 1), 0),
+    )
+    _rewrite_in_place(
+        f"{sf}/documents.parquet",
+        lambda t: pc.equal(pc.bit_wise_and(t["doc_id"], 1), 1),
+    )
+
+    con = duck_connection(sf)
+    try:
+        failed = {}
+        for op in REWRITE_OPS:
+            ok, why = compare(
+                reg[op].query(spark, sf), con, reg[ORACLE_OF.get(op, op)].oracle
+            )
+            if not ok:
+                failed[op] = why[:200]
+    finally:
+        con.close()
+    assert not failed, f"stale results after an in-place rewrite: {failed}"
+
+
+# ------------------------------------------------ the store, no Spark
+
+
+def _stub_session(app: str = "app-1", start: int = 1):
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId=app, startTime=start)
+    )
+
+
+@pytest.fixture
+def store():
+    from claim_analysis_engine_spark import artifacts
+
+    artifacts.clear()
+    yield artifacts
+    artifacts.clear()
+
+
+@pytest.fixture
+def inputs(tmp_path):
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "a.parquet").write_bytes(b"aaaa")
+    (d / "sub").mkdir()
+    (d / "sub" / "b.parquet").write_bytes(b"bb")
+    return d
+
+
+def test_unchanged_inputs_hit_and_changed_size_or_mtime_miss(store, inputs):
+    spark = _stub_session()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert store.get_or_build("k", spark, str(inputs), build) == 1
+    assert store.get_or_build("k", spark, str(inputs), build) == 1
+    assert store.stats() == {"k": {"hits": 1, "misses": 1}}
+
+    (inputs / "sub" / "b.parquet").write_bytes(b"bbb")  # size changes
+    assert store.get_or_build("k", spark, str(inputs), build) == 2
+
+    st = os.stat(inputs / "a.parquet")  # same size, newer mtime
+    os.utime(inputs / "a.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1000))
+    assert store.get_or_build("k", spark, str(inputs), build) == 3
+
+    # params, kind and session are all part of the key
+    assert store.get_or_build("k", spark, str(inputs), build, params=(1,)) == 4
+    assert store.get_or_build("k2", spark, str(inputs), build) == 5
+    assert store.get_or_build("k", _stub_session(start=2), str(inputs), build) == 6
+    assert store.stats()["k"] == {"hits": 1, "misses": 5}
+
+
+def test_missing_or_empty_dir_raises_and_none_skips_the_fingerprint(
+    store, tmp_path
+):
+    spark = _stub_session()
+    with pytest.raises(FileNotFoundError):
+        store.get_or_build("k", spark, str(tmp_path / "absent"), lambda: 1)
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(FileNotFoundError):
+        store.get_or_build("k", spark, str(tmp_path / "empty"), lambda: 1)
+    assert store.get_or_build("fixture", spark, None, lambda: "v") == "v"
+    assert store.get_or_build("fixture", spark, None, lambda: "w") == "v"
+
+
+def test_lru_eviction_at_the_bound_runs_on_evict(store, inputs, monkeypatch):
+    monkeypatch.setattr(store, "MAX_ENTRIES", 2)
+    spark, d = _stub_session(), str(inputs)
+    evicted = []
+    store.get_or_build("a", spark, d, lambda: "A", on_evict=evicted.append)
+    store.get_or_build("b", spark, d, lambda: "B", on_evict=evicted.append)
+    store.get_or_build("a", spark, d, lambda: "A2")  # a is now most recent
+    store.get_or_build("c", spark, d, lambda: "C", on_evict=evicted.append)
+    assert evicted == ["B"], "the least-recently-used entry must go"
+    assert store.get_or_build("a", spark, d, lambda: "A2") == "A"
+    assert store.get_or_build("b", spark, d, lambda: "B2") == "B2"
+    assert evicted == ["B", "C"]
+
+
+def test_clear_runs_on_evict_and_resets_stats(store, inputs):
+    spark, d = _stub_session(), str(inputs)
+    evicted = []
+    store.get_or_build("a", spark, d, lambda: "A", on_evict=evicted.append)
+    store.get_or_build("a", spark, d, lambda: "A")
+    assert store.stats() == {"a": {"hits": 1, "misses": 1}}
+    store.clear()
+    assert evicted == ["A"]
+    assert store.stats() == {}
+    assert store.get_or_build("a", spark, d, lambda: "A2") == "A2"

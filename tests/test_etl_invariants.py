@@ -149,75 +149,43 @@ def test_sampling_front_equals_the_derived_plan():
     )
 
 
-def test_memoized_bench_extras_appear_in_the_cold_map():
-    """r13 verdict ask #7, widened in r15 (r14 verdict ask #3): an
-    EXTRA op whose query path rides a session memo (result-row replay,
-    parquet-path memo, or a memoized model/fixture build) OR calls
-    `.cache()`/`.persist()` on a frame must carry a reasoned MEMOIZED
-    entry — else the official bench publishes replay-only numbers for
-    it with no cold cost on record. The cache clause exists because
-    Spark's CacheManager matches cached relations by CANONICALIZED
-    PLAN: a deterministic frame cached inside query() is rebuilt as
-    the same plan on the next in-session invocation and replays run
-    1's materialized blocks exactly like a dict-memo. localCheckpoint
-    is exempt (no CacheManager registration — the blocks die with the
-    DataFrame). Detection is a static reachability fixpoint: a
-    function is memo-touching if its source references
-    rows_replay_memo, a *_MEMO dict, `.cache()` or `.persist(`, or
-    (transitively) calls a memo-touching function anywhere in the
-    package."""
+def test_no_memo_outside_the_artifact_store():
+    """Every reused artifact goes through artifacts.get_or_build, which
+    keys it by the input files' fingerprint and reports its hits and
+    misses (bench publishes them per op). So no package module other
+    than artifacts.py may define a module-level *_MEMO dict or use the
+    retired directory-keyed helpers (session_memo_key,
+    rows_replay_memo): each would be a memo that neither invalidates on
+    new data nor shows up in the reported counts."""
     import ast
     import pathlib
     import re
 
-    import bench
     import claim_analysis_engine_spark as pkg
-    from claim_analysis_engine_spark.registry import registry
 
-    pkg_dir = pathlib.Path(pkg.__file__).parent
-    token = re.compile(
-        r"rows_replay_memo|_[A-Z][A-Z0-9_]*_MEMO\b|\.cache\(\)|\.persist\("
-    )
-    marked: set[str] = set()
-    calls: dict[str, set[str]] = {}
-    for p in pkg_dir.rglob("*.py"):
-        tree = ast.parse(p.read_text())
-        for node in ast.walk(tree):
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                src = ast.unparse(node)
-                callees = {
-                    c.func.id
-                    for c in ast.walk(node)
-                    if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
-                }
-                calls.setdefault(node.name, set()).update(callees)
-                if token.search(src):
-                    marked.add(node.name)
-    changed = True
-    while changed:
-        changed = False
-        for name, callees in calls.items():
-            if name not in marked and callees & marked:
-                marked.add(name)
-                changed = True
-
-    reg = registry()
-    uncovered = [
-        op_id
-        for op_id in bench.EXTRA
-        if reg[op_id].query.__name__ in marked and op_id not in bench.MEMOIZED
-    ]
-    assert not uncovered, (
-        f"EXTRA ops with memo-riding query paths missing from the bench "
-        f"cold map (add a reasoned MEMOIZED entry): {uncovered}"
-    )
-    # and the map itself stays honest: every entry is a timed op with a
-    # non-empty reason (membership beyond the static scan is fine —
-    # some cold costs are Spark-side caches or staged layouts the
-    # Python token scan can't see, e.g. rs_wrapper's series CTE)
-    for op_id, why in bench.MEMOIZED.items():
-        assert op_id in bench.EXTRA, f"{op_id!r} memoized but not timed"
-        assert why.strip(), f"{op_id!r} has an empty cold-map reason"
+    offenders = []
+    for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        if p.name == "artifacts.py":
+            continue
+        source = p.read_text()
+        tree = ast.parse(source)
+        for node in tree.body:
+            targets = []
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            for t in targets:
+                if (
+                    isinstance(t, ast.Name)
+                    and t.id.startswith("_")
+                    and t.id.endswith("_MEMO")
+                ):
+                    offenders.append(f"{p.name}:{node.lineno} defines {t.id}")
+        for name in ("session_memo_key", "rows_replay_memo"):
+            if re.search(rf"\b{name}\b", source):
+                offenders.append(f"{p.name} mentions {name}")
+    assert not offenders, f"memos outside artifacts.py: {offenders}"
 
 
 def test_bench_exclusion_ledger_is_consistent_with_the_registry():

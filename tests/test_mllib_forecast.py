@@ -50,7 +50,7 @@ def test_recursion_feeds_its_own_predictions(spark):
     assert got == {1: 115.0, 2: 215.0, 3: 315.0}
 
 
-def test_short_history_is_refused(spark, monkeypatch):
+def test_short_history_is_refused(spark, monkeypatch, tmp_path):
     """A spine shorter than MIN_MONTHS (lag-12 never lands inside the
     train span) must yield an EMPTY frame with the full output schema —
     the exact mirror of the contract oracle's m >= MIN_MONTHS guard."""
@@ -67,7 +67,10 @@ def test_short_history_is_refused(spark, monkeypatch):
         "n",
     )
     monkeypatch.setattr(mf, "_series", lambda spark_, sf_dir_: short)
-    out = mf._gbt_forecast_frame(spark, "ignored")
+    # the stored training is keyed by the input dir's files, so the
+    # (unread) input dir must exist
+    (tmp_path / "orders.parquet").write_bytes(b"")
+    out = mf._gbt_forecast_frame(spark, str(tmp_path))
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "status", "priority", "h", "yhat", "ci_lo", "ci_hi", "model",
@@ -170,18 +173,17 @@ def test_champion4_pooled_entry_uses_the_shared_training(spark):
     """The pooled entrant's RMSE must be the SAME backtest RMSE the
     forecast bands are priced with (one training per session, memo-
     shared) — not a second fit that could silently diverge."""
-    from claim_analysis_engine_spark.tables import session_memo_key
+    from claim_analysis_engine_spark import artifacts
 
-    mf.ml_champion4(spark, SF_SMALL).collect()  # ensures the memo is filled
-    key = session_memo_key(spark, SF_SMALL)
-    assert key in mf._GBT_RMSE_MEMO
-    rows, _schema = mf._GBT_RMSE_MEMO[key]
+    rows = mf._gbt_rmse_frame(spark, SF_SMALL).collect()  # fills the training
+    fits = artifacts.stats()["gbt"]["misses"]
     memo_rmse = {(r.status, r.priority): round(r.bt_rmse, 4) for r in rows}
     board_rmse = {
         (r.status, r.priority): r.test_rmse
         for r in mf.ml_champion4(spark, SF_SMALL).collect()
         if r.model == "gbt_mllib"
     }
+    assert artifacts.stats()["gbt"]["misses"] == fits, "the election refit"
     assert board_rmse == memo_rmse
 
 

@@ -293,11 +293,13 @@ def test_alert_throttle_anchors_on_last_fired_not_last_event(spark):
 def test_pca_model_is_orthonormal_ordered_and_deterministic(spark):
     import numpy as np
 
+    from claim_analysis_engine_spark import artifacts
     from claim_analysis_engine_spark.operators import similarity as S
 
     m1 = S._pca_fit(spark, SF_SMALL)
-    S._PCA_MEMO.clear()
+    artifacts.clear()
     m2 = S._pca_fit(spark, SF_SMALL)
+    assert artifacts.stats()["pca"] == {"hits": 0, "misses": 1}
     mu1, comps1, shares1 = m1
     mu2, comps2, shares2 = m2
     # refit without the memo must reproduce the model bit-for-bit

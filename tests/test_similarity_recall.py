@@ -14,6 +14,18 @@ from claim_analysis_engine_spark.operators.similarity import (
 from tests.conftest import SF_ORACLE
 
 
+@pytest.fixture
+def fresh_artifacts():
+    """An empty artifact store for a test that monkeypatches a model
+    builder, emptied again after it so nothing built under the patch
+    is served to a later test."""
+    from claim_analysis_engine_spark import artifacts
+
+    artifacts.clear()
+    yield
+    artifacts.clear()
+
+
 @pytest.fixture(scope="module")
 def truth(spark):
     rows = sim_topk_brute(spark, SF_ORACLE).collect()
@@ -206,7 +218,9 @@ def test_pq_adc_trained_recall_is_near_lossless(spark):
     assert t3 / n3 >= 0.85, f"top-3 set recall {t3}/{n3}"
 
 
-def test_pq_trained_contract_flips_on_a_collapsed_quantizer(spark, monkeypatch):
+def test_pq_trained_contract_flips_on_a_collapsed_quantizer(
+    spark, monkeypatch, fresh_artifacts
+):
     """The driver hash only proves the booleans were TRUE on good
     vectors; this proves they MEASURE: collapse every codebook to
     identical centroids (all vectors code 0, ADC can't discriminate —
@@ -214,11 +228,10 @@ def test_pq_trained_contract_flips_on_a_collapsed_quantizer(spark, monkeypatch):
     must flip."""
     import claim_analysis_engine_spark.operators.similarity as sim
 
-    # fresh memo dicts: neither the trained-PQ rows memo nor the
-    # contract's own row memo may replay the GOOD session's results
-    # under the monkeypatched quantizer
-    monkeypatch.setattr(sim, "_PQT_ROWS_MEMO", {})
-    monkeypatch.setattr(sim, "_PQT_CONTRACT_MEMO", {})
+    # an empty store: neither the trained-PQ rows nor the contract's
+    # own row may replay the GOOD session's results under the
+    # monkeypatched quantizer (fresh_artifacts empties it again after,
+    # so the collapsed results never reach a later test)
 
     def collapsed(sample, subs=sim.PQ_SUBS, subdim=sim.PQ_SUBDIM):
         return [[[0.0] * subdim for _ in range(sim.PQ_K)] for _ in range(subs)]
@@ -455,7 +468,9 @@ def test_semantic_dedup_recalls_lexical_truth(spark):
     assert pairs.where("doc_a >= doc_b").count() == 0, "unordered pair leaked"
 
 
-def test_semantic_recall_flips_on_a_collapsed_encoder(spark, monkeypatch):
+def test_semantic_recall_flips_on_a_collapsed_encoder(
+    spark, monkeypatch, fresh_artifacts
+):
     """Sensitivity: replace the pooled embeddings with a constant
     vector (the shape of a collapsed/diverged encoder — after centering
     every vector is zero, cosines are undefined, and nothing is
@@ -477,10 +492,10 @@ def test_semantic_recall_flips_on_a_collapsed_encoder(spark, monkeypatch):
         )
 
     monkeypatch.setattr(sim, "_doc_embeddings", collapsed)
-    # the pair-row memo would replay the REAL pipeline's pairs and hide
-    # the collapsed encoder — give the test its own empty memo (the
-    # real dict is restored, unpolluted, on teardown)
-    monkeypatch.setattr(sim, "_SEM_PAIRS_MEMO", {})
+    # the stored pair rows would replay the REAL pipeline's pairs and
+    # hide the collapsed encoder — fresh_artifacts gives the test an
+    # empty store and empties it again on teardown, so the collapsed
+    # pairs never reach a later test
     row = sim.dedup_semantic_contract(spark, SF_ORACLE).first().asDict()
     assert not row["recall_ok"], row
 
@@ -508,14 +523,13 @@ def test_kmeans_twin_quantizers_agree_on_the_euclidean_objective(spark):
 
 
 def test_kmeans_fit_is_deterministic_within_a_session(spark):
-    from claim_analysis_engine_spark.operators.similarity import (
-        _KM_MEMO,
-        _kmeans_fit,
-    )
+    from claim_analysis_engine_spark import artifacts
+    from claim_analysis_engine_spark.operators.similarity import _kmeans_fit
     from tests.conftest import SF_ORACLE
 
     sizes1, cost1, _ = _kmeans_fit(spark, SF_ORACLE)
-    _KM_MEMO.clear()  # force a real refit, not the memo
+    artifacts.clear()  # force a real refit, not the stored fit
     sizes2, cost2, _ = _kmeans_fit(spark, SF_ORACLE)
+    assert artifacts.stats()["kmeans"] == {"hits": 0, "misses": 1}
     assert sizes1 == sizes2
     assert abs(cost1 - cost2) < 1e-6

@@ -6,9 +6,9 @@ from __future__ import annotations
 
 import math
 
+from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.operators.pipeline_ops import (
     UNI_ITERS,
-    _UNI_MEMO,
     _uni_viterbi,
     _unigram_model,
     corpus_unigram_contract,
@@ -21,8 +21,9 @@ def test_unigram_objective_monotone_and_deterministic(spark):
     seg1, hist1, vocab1 = _unigram_model(spark, SF_ORACLE)
     assert len(hist1) == UNI_ITERS
     assert all(b >= a - 1e-9 * abs(a) for a, b in zip(hist1, hist1[1:]))
-    _UNI_MEMO.clear()  # force a real retrain
+    artifacts.clear()  # force a real retrain
     seg2, hist2, vocab2 = _unigram_model(spark, SF_ORACLE)
+    assert artifacts.stats()["unigram"] == {"hits": 0, "misses": 1}
     assert seg1 == seg2 and hist1 == hist2 and vocab1 == vocab2
 
 
