@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import load, spread_scan
+from claim_analysis_engine_spark.tables import load, pinned_conf, spread_scan
 
 REG = OpRegistry()
 
@@ -545,7 +545,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0))
 
     sig = sum((bit(b) for b in range(SIMHASH_BITS)), F.lit(0)).cast("bigint")
-    sigs = hashed.select("doc_id", sig.alias("sig")).cache()
+    sigs = hashed.select("doc_id", sig.alias("sig")).localCheckpoint()
     mask = (1 << SIMHASH_BLOCK_BITS) - 1
     blocks = sigs.select(
         "doc_id",
@@ -808,9 +808,7 @@ def propagate_min_labels(
     result is materialized eagerly, so the shrunken conf never leaks
     into callers' plans; restored on exit."""
     spark = labels.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "4"):
         # bounded: 1-row convergence aggregate per fixpoint round
         prev_sum = labels.agg(F.sum("label")).collect()[0][0]
         for _ in range(max_iters + 1):
@@ -833,8 +831,6 @@ def propagate_min_labels(
                 return labels, True
             prev_sum = cur_sum
         return labels, False
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @REG.op(
@@ -1079,7 +1075,7 @@ def dedup_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the linear dedup contract (keep_id per doc, min combines
     map-side), identical to dedup_simhash — see that docstring for why
     pair lists are the wrong output shape at 100 TB."""
-    sigs = simhash64_sigs(spark, sf_dir).cache()
+    sigs = simhash64_sigs(spark, sf_dir).localCheckpoint()
     mask = (1 << SIMHASH64_BLOCK_BITS) - 1
     blocks = sigs.select(
         "doc_id",
@@ -1225,9 +1221,7 @@ def star_components(
     every round localCheckpoints both frames (lineage must not grow
     with rounds)."""
     spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "4"):
         e = _canon(edges).localCheckpoint()
 
         def checksum(frame: DataFrame):
@@ -1283,8 +1277,6 @@ def star_components(
             F.least(F.min("v"), F.first("u")).alias("root")
         )
         return assign, converged, rounds
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @REG.op(
@@ -2139,8 +2131,8 @@ def txt_containment_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory to build and broadcast"); disabling auto-broadcast only
     traded that for raw task OOMs (full sorts × 32 threads). The
     working lever is CONCURRENCY: the op runs its whole computation
-    EAGERLY at 8 shuffle partitions (conf save-set-restore, the gate
-    streams' pattern), quadrupling per-task headroom; the single
+    EAGERLY at 8 shuffle partitions (tables.pinned_conf, like the gate
+    streams), quadrupling per-task headroom; the single
     reused intermediate (the ~2 MB candidate pair list) is an
     RDD-level localCheckpoint that never touches the SQL
     CacheManager, and no SQL .cache() exists anywhere in the op.
@@ -2164,9 +2156,7 @@ def _containment_row(spark: SparkSession) -> tuple:
     # allocate sort/hash buffers AT ONCE — 8-way instead of 32-way
     # quadruples per-task headroom and bounds the aggregate footprint,
     # while the tiny dimension tables keep their cheap auto-broadcasts
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         cand = _containment_candidates(sh).localCheckpoint()
         best = _containment_best(sh, cand, broadcast_attach=False)
         planted_df = F.broadcast(
@@ -2205,8 +2195,6 @@ def _containment_row(spark: SparkSession) -> tuple:
         # EXECUTION time, which for a lazily returned frame would be
         # after the conf is restored
         return stats.first(), stats.schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 # ---------------------------------------------- dedup_span_extract

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import load
+from claim_analysis_engine_spark.tables import load, pinned_conf
 
 REG = OpRegistry()
 
@@ -1335,9 +1335,7 @@ def _bpe_induce(spark: SparkSession, sf_dir: str) -> list[tuple]:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         seg = words.select(
             "w", "freq", F.expr("filter(split(w, ''), x -> x <> '')").alias("sym")
         ).localCheckpoint()
@@ -1391,8 +1389,6 @@ def _bpe_induce(spark: SparkSession, sf_dir: str) -> list[tuple]:
                 .where(F.size("sym") >= 2)
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return merges
 
 
@@ -1453,17 +1449,13 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(toks).alias("w")
     )
     vocab = docs.select("w").distinct()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         seg = _bpe_segment(vocab, merges)
         word_tokens = seg.select(
             "w",
             F.size("sym").alias("n_tok"),
             F.length("w").alias("n_chr"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         docs.join(F.broadcast(word_tokens), "w")
         .groupBy("doc_id")
@@ -1536,12 +1528,8 @@ def corpus_bpe_roundtrip_contract(spark: SparkSession, sf_dir: str) -> DataFrame
         "doc_id", F.posexplode(toks).alias("pos", "w")
     )
     vocab = docs.select("w").distinct()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         seg = _bpe_segment(vocab, merges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     decoded = seg.select(
         "w",
         F.concat_ws("", F.col("sym")).alias("decoded"),
@@ -2043,12 +2031,8 @@ def corpus_tokenizer_faceoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(toks).alias("w")
     )
     vocab = docs.select("w").distinct()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         bpe_seg = _bpe_segment(vocab, merges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     bpe_stats = bpe_seg.select(
         "w",
         F.size("sym").alias("bpe_tok"),

@@ -9,14 +9,23 @@ core/analytics.py:56).
 
 Design split:
 
-* Each sub-score of the decision tree is ALSO a standalone relational
-  operator built from Column/window math with an exact DuckDB oracle —
-  the tree's arithmetic is window aggregates, so nothing needs Python.
-  Even the Poisson/NB tail p-values (rs_sparse_tail) and the classical
-  seasonal decomposition (rs_stl_z) are closed-form column expressions.
-* The full interacting tree (rs_wrapper) runs per series via
-  `groupBy(keys).applyInPandas` over `risk_engine.score_series` —
-  golden-tested in tests/test_risk_golden.py, rows-only at the driver.
+* One per-series feature frame (``_features``, the "risk_features"
+  artifact) derives every statistic the risk scores read: history
+  mean/std/variance, zero ratio, the current and previous counts,
+  Nelson rules 2/3, the EWMA, the seasonal decomposition, the plain
+  and STL z-scores, the Poisson/NB tail p-value, the partial-month
+  penalty and momentum. It is window/aggregate math over the series
+  frame, so nothing needs Python.
+* Each sub-score of the decision tree is a standalone relational
+  operator with an exact DuckDB oracle, and each is a filter plus a
+  select over that frame. The scoring formulas the sub-scores and the
+  relational tree (risk_tree.py) share — control limit, warn band,
+  rule-1 score, base score, grade bands, noise cap, tail score, safe
+  zone — are the Column functions below, so each has one definition.
+* The full interacting tree also runs per series via
+  `groupBy(keys).applyInPandas` over `risk_engine.score_series`
+  (rs_wrapper) — an independent implementation the relational tree is
+  tested against, rows-only at the driver.
 
 Determinism: the reference keys partial-month logic off datetime.now()
 (core/analytics.py:69-82); here the as-of day is a fixed injected
@@ -32,6 +41,8 @@ no collect, no Python in the per-row hot path.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -39,7 +50,7 @@ from pyspark.sql import functions as F
 
 from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark.registry import OpRegistry
-from claim_analysis_engine_spark.tables import load
+from claim_analysis_engine_spark.tables import load, pinned_conf
 
 REG = OpRegistry()
 
@@ -136,8 +147,337 @@ def _target_join(
     return s.crossJoin(F.broadcast(tgt))
 
 
-def _is_critical() -> F.Column:
-    return F.col("priority").isin(*_CRIT)
+def _features(
+    spark: SparkSession, sf_dir: str, orders: DataFrame | None = None
+) -> DataFrame:
+    """One row per series with every statistic a risk score reads (see
+    the module docstring). The default substrate is the "risk_features"
+    artifact; ``orders`` builds the same frame over a substituted fact
+    table from its own checkpoint of the series."""
+    if orders is None:
+        return artifacts.get_or_build(
+            "risk_features",
+            spark,
+            sf_dir,
+            lambda: _build_features(spark, _with_target(spark, sf_dir)),
+        )
+    return _build_features(spark, _with_target(spark, sf_dir, orders).localCheckpoint())
+
+
+def _build_features(spark: SparkSession, base: DataFrame) -> DataFrame:
+    key = ["status", "priority"]
+    kp = W.partitionBy(*key)
+    kw = kp.orderBy("month")
+    hist_m = F.col("month") < F.col("target")
+    hist_n = F.when(hist_m, F.col("n"))
+    at = lambda off: F.max(  # noqa: E731
+        F.when(F.col("month") == F.add_months(F.col("target"), off), F.col("n"))
+    )
+    # raw history aggregates: NULL where the history is too short, as
+    # the sub-scores print them
+    stats = base.groupBy(*key).agg(
+        F.count(F.when(hist_m, 1)).alias("n_obs"),
+        F.avg(hist_n).alias("mean_h"),
+        F.stddev_samp(hist_n).alias("std_h"),
+        F.var_samp(hist_n).alias("v"),
+        F.avg(F.when(hist_m, (F.col("n") == 0).cast("double"))).alias("zero_ratio"),
+        at(0).alias("x"),
+        at(-1).alias("prev1"),
+        at(-2).alias("prev2"),
+        (F.lit(AS_OF_DAY) / F.dayofmonth(F.last_day(F.any_value("target")))).alias(
+            "progress"
+        ),
+    )
+
+    # Nelson rules on the FULL series (reference uses self.series):
+    # rule 2, the last 9 months all above the history mean; rule 3, the
+    # last 6 strictly rising. A month with no comparison (no history
+    # mean, no previous month) counts as not satisfying the rule, as in
+    # the numpy engine, which skips both rules on shorter series.
+    def every(window: F.Column, cond: F.Column) -> F.Column:
+        return F.min(F.when(window, F.when(cond, 1).otherwise(0))) == 1
+
+    rules = (
+        base.withColumn("r", F.row_number().over(kp.orderBy(F.col("month").desc())))
+        .withColumn("diff", F.col("n") - F.lag("n").over(kw))
+        .withColumn("mean_h", F.avg(hist_n).over(kp))
+        .groupBy(*key)
+        .agg(
+            every(F.col("r") <= 9, F.col("n") > F.col("mean_h")).alias("rule2"),
+            every(F.col("r") <= 5, F.col("diff") > 0).alias("rule3"),
+        )
+    )
+
+    # EWMA, λ=0.2 adjust=False (reference core/analytics.py:281-283):
+    # the recursion y_t = 0.8·y_{t-1} + 0.2·x_t has the closed form
+    # Σ w_i·x_i with w_0 = 0.8^T, w_i = 0.2·0.8^(T-i)
+    idxd = base.withColumn("idx", F.row_number().over(kw) - 1).withColumn(
+        "t_max", F.count(F.lit(1)).over(kp) - 1
+    )
+    weight = F.pow(0.8, F.col("t_max") - F.col("idx")) * F.when(
+        F.col("idx") == 0, 1.0
+    ).otherwise(0.2)
+    ewma = idxd.groupBy(*key).agg(F.sum(F.col("n") * weight).alias("ewma"))
+
+    # Seasonal decomposition (reference core/analytics.py:144-167 calls
+    # statsmodels seasonal_decompose(additive, period=12)): trend =
+    # centered 13-point MA with half end-weights, seasonal = de-meaned
+    # per-calendar-month averages of the detrended history, expected =
+    # last trend + the target month's seasonal.
+    hist = (
+        base.where(hist_m)
+        .withColumn("idx", F.row_number().over(kw) - 1)
+        .withColumn("moy", F.month("month"))
+    )
+    trend = (
+        F.sum("n").over(kw.rowsBetween(-5, 5))
+        + 0.5 * F.lag("n", 6).over(kw)
+        + 0.5 * F.lead("n", 6).over(kw)
+    ) / 12.0
+    detr = hist.withColumn("trend", trend).withColumn("d", F.col("n") - F.col("trend"))
+    savg = detr.groupBy(*key, "moy").agg(F.avg("d").alias("savg"))
+    smean = savg.groupBy(*key).agg(F.avg("savg").alias("grand"))
+    seasonal = savg.join(smean, key).select(
+        *key, "moy", (F.col("savg") - F.col("grand")).alias("seasonal")
+    )
+    resid = detr.join(seasonal, [*key, "moy"]).select(
+        *key, "idx", "trend", (F.col("d") - F.col("seasonal")).alias("r")
+    )
+    stl_key = resid.groupBy(*key).agg(
+        F.avg("r").alias("resid_mean"),
+        F.stddev_samp("r").alias("resid_std"),
+        F.expr("max_by(trend, CASE WHEN trend IS NOT NULL THEN idx END)").alias(
+            "last_trend"
+        ),
+    )
+    cur = (
+        base.where(F.col("month") == F.col("target"))
+        .groupBy(*key)
+        .agg(F.max(F.month("month")).alias("tmoy"))
+    )
+    stl = (
+        stl_key.join(cur, key)
+        .join(seasonal.withColumnRenamed("moy", "tmoy"), [*key, "tmoy"])
+        .select(
+            *key,
+            (F.col("last_trend") + F.col("seasonal")).alias("expected"),
+            "resid_mean",
+            "resid_std",
+        )
+    )
+
+    # the tree's coalesced statistics (mu/sd/vr) beside the raw ones
+    feat = (
+        stats.join(rules, key)
+        .join(ewma, key)
+        .join(stl, key, "left")
+        .withColumns(
+            {
+                "mu": F.coalesce("mean_h", F.lit(0.0)),
+                "sd": F.coalesce("std_h", F.lit(0.0)),
+                "vr": F.coalesce("v", F.lit(0.0)),
+                "crit": F.col("priority").isin(*_CRIT),
+                "use_nb": (F.col("n_obs") >= 6) & (F.col("v") > 1.2 * F.col("mean_h")),
+            }
+        )
+    )
+    used_stl = (F.col("n_obs") >= 24) & (F.col("sd") > 0) & F.col("expected").isNotNull()
+    expected_cur = F.col("mu") * F.col("progress")
+    partial_penalty = (
+        F.when(F.col("x") <= 1, 0)
+        .when(
+            (F.col("x") >= F.col("mu")) & (F.col("mu") > 0) & (F.col("progress") < 0.7),
+            30,
+        )
+        .when(
+            (F.col("progress") >= 0.2)
+            & (expected_cur > 0.5)
+            & (F.col("x") > expected_cur * 4.0),
+            40,
+        )
+        .when(
+            (F.col("progress") >= 0.2)
+            & (expected_cur > 0.5)
+            & (F.col("x") > expected_cur * 2.5)
+            & F.col("crit"),
+            30,
+        )
+        .otherwise(0)
+    )
+
+    # Poisson / NB tail p-value (reference core/analytics.py:101-129):
+    # overdispersed (var > 1.2·mean, n ≥ 6) → NB(r, p) with
+    # p = mean/var, else Poisson(mean). The CDFs are exact series sums
+    # folded with `F.aggregate` over a `sequence` — term recurrences
+    # term_j = term_{j-1}·mu/j (Poisson) and
+    # term_j = term_{j-1}·(j+r-1)/j·(1-p) (NB), the sums scipy
+    # evaluates. x is a month-level count, so the sequence is short.
+    k = (F.col("x") - 1).cast("int")
+
+    def _cdf(term0: F.Column, ratio) -> F.Column:
+        init = F.struct(term0.alias("cum"), term0.alias("term"))
+        step = lambda acc, j: F.struct(  # noqa: E731
+            (acc["cum"] + acc["term"] * ratio(j.cast("double"))).alias("cum"),
+            (acc["term"] * ratio(j.cast("double"))).alias("term"),
+        )
+        return F.when(k < 0, F.lit(0.0)).otherwise(
+            F.when(k == 0, term0).otherwise(
+                F.aggregate(F.sequence(F.lit(1), k), init, step)["cum"]
+            )
+        )
+
+    p_est = F.col("mu") / F.col("vr")
+    r_est = (F.col("mu") * p_est) / (1 - p_est)
+    pois_cdf = _cdf(F.exp(-F.col("mu")), lambda j: F.col("mu") / j)
+    nb_cdf = _cdf(F.pow(p_est, r_est), lambda j: (j + r_est - 1) / j * (1 - p_est))
+    p_val = F.when(F.col("mu") == 0, F.lit(None)).otherwise(
+        F.when(F.col("use_nb"), 1.0 - nb_cdf).otherwise(1.0 - pois_cdf)
+    )
+
+    calc = feat.withColumns(
+        {
+            "sparse": _is_sparse(F.col("mu")),
+            "z_plain": _z(F.col("mean_h"), F.col("std_h")),
+            "z": F.when(used_stl, _stl_z()).otherwise(_z(F.col("mu"), F.col("sd"))),
+            "used_stl": used_stl,
+            "partial_penalty": partial_penalty,
+            "momentum": (F.col("n_obs") >= 2) & _rising(),
+            "p_val": p_val,
+        }
+    )
+    # Checkpointed under a tiny-frame shuffle width (|keys|x|months|
+    # rows; 32 scheduler rounds per join stage measured ~2 s of pure
+    # task overhead at sf0.1 — the propagate_min_labels lesson).
+    # Consumers then read the checkpointed rows through narrow projects
+    # only. The checkpoint is also a CollapseProject barrier for the
+    # tree: without it the tree's score/reason/band columns each
+    # re-inline z, the tail folds and the penalty cases, and the
+    # collapsed Project's generated code crosses the JVM's 64 KB method
+    # limit (measured: the 2-doc alerts write took 5.5 s warm).
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
+        return calc.localCheckpoint()
+
+
+# ------------------------------------------- scoring shared with the tree
+# Column functions over _features columns, read by the sub-scores below
+# and by the relational tree (risk_tree.py). Where the two differ they
+# differ in the inputs they pass: the sub-scores print the raw, NULL-
+# able statistics (mean_h, std_h, z_plain), the tree scores the
+# coalesced ones (mu, sd, z).
+
+
+def _is_sparse(mean: F.Column) -> F.Column:
+    """Sparse regime: history mean < 1.0 or zero-month ratio > 0.5
+    (reference core/analytics.py:96-99)."""
+    return (mean < 1.0) | (F.col("zero_ratio") > 0.5)
+
+
+def _z(mean: F.Column, sd: F.Column) -> F.Column:
+    return (F.col("x") - mean) / (sd + 1e-6)
+
+
+def _stl_z() -> F.Column:
+    return ((F.col("x") - F.col("expected")) - F.col("resid_mean")) / (
+        F.col("resid_std") + 1e-6
+    )
+
+
+def _rising() -> F.Column:
+    """x(t) > x(t-1) > x(t-2) and x(t) ≥ 3 (reference
+    core/analytics.py:131-142)."""
+    return (
+        (F.col("x") > F.col("prev1")) & (F.col("prev1") > F.col("prev2")) & (F.col("x") >= 3)
+    )
+
+
+def _sparse_method() -> F.Column:
+    return F.when(F.col("mu") == 0, "희소유형 돌발 발생").otherwise("분포 이탈")
+
+
+def _tail_score() -> F.Column:
+    """clip(-log10(p) · 25, 0, 100); a first breakout (mean = 0) with a
+    count scores 100."""
+    return (
+        F.when(F.col("mu") == 0, F.when(F.col("x") > 0, 100.0).otherwise(0.0))
+        .when(F.col("p_val") < 1e-5, 100.0)
+        .otherwise(
+            F.least(F.lit(100.0), F.greatest(F.lit(0.0), -F.log10("p_val") * 25))
+        )
+    )
+
+
+def _cv(mean: F.Column, sd: F.Column) -> F.Column:
+    return F.when(mean > 0, sd / mean).otherwise(0.0)
+
+
+def _limit_z(cv: F.Column, mean: F.Column) -> F.Column:
+    """CV-adaptive control limit (reference core/analytics.py:169-190)."""
+    return (
+        F.when((cv < 0.1) & (mean > 1.0), 2.0)
+        .when(cv > 0.5, 3.5)
+        .otherwise(F.when(F.col("crit"), 2.5).otherwise(3.0))
+    )
+
+
+def _warn_z(limit: F.Column) -> F.Column:
+    return F.greatest(F.lit(1.5), limit - 1.0)
+
+
+def _rule1_score(z: F.Column, limit: F.Column) -> F.Column:
+    """Rule 1: |z| beyond the limit +30, in the warn band +15."""
+    return (
+        F.when(F.abs(z) > limit, 30.0).when(F.abs(z) > _warn_z(limit), 15.0).otherwise(0.0)
+    )
+
+
+def _rule_points(rule: str) -> F.Column:
+    """+20 for a fired pattern rule (rule2 / rule3)."""
+    return F.when(F.col(rule), 20.0).otherwise(0.0)
+
+
+def _ewma_z(mean: F.Column, sd: F.Column) -> F.Column:
+    return (F.col("ewma") - mean) / (sd * math.sqrt(0.2 / 1.8) + 1e-6)
+
+
+def _ewma_score(z_ewma: F.Column) -> F.Column:
+    return F.when(F.abs(z_ewma) > 3.0, 15.0).otherwise(0.0)
+
+
+def _base_score(z: F.Column) -> F.Column:
+    """Grade-aware start sigma: 0.5 for critical grades, else 1.0."""
+    start_sigma = F.when(F.col("crit"), 0.5).otherwise(1.0)
+    return F.least(F.lit(50.0), F.greatest(F.lit(0.0), (z - start_sigma) * 25.0))
+
+
+def _crit_bonus(total: F.Column) -> F.Column:
+    """+10 on any positive critical-grade score, capped at 100."""
+    return F.least(
+        F.lit(100.0), total + F.when(F.col("crit") & (total > 0), 10.0).otherwise(0.0)
+    )
+
+
+def _band(total: F.Column) -> F.Column:
+    """Red/yellow thresholds 75/50 for critical grades, 85/60 else."""
+    thr_red = F.when(F.col("crit"), 75).otherwise(85)
+    thr_yel = F.when(F.col("crit"), 50).otherwise(60)
+    return F.when(total >= thr_red, "🔴").when(total >= thr_yel, "🟡").otherwise("⚪")
+
+
+def _noise_cap(first: F.Column, rare: F.Column) -> F.Column:
+    """Single-count cap: a first occurrence / rare breakout caps general
+    grades at 59, any other single count caps at 30. NULL = no cap."""
+    none = F.lit(None).cast("int")
+    return (
+        F.when(F.col("x") != 1, none)
+        .when(first | rare, F.when(F.col("crit"), none).otherwise(59))
+        .otherwise(30)
+    )
+
+
+def _safe_zone(z: F.Column, pattern: F.Column) -> F.Column:
+    """Dense-regime safe zone: count < 3, z < 0.8 and no pattern rule
+    fired (reference core/analytics.py:304-319)."""
+    return (F.col("x") < 3) & (z < 0.8) & ~pattern
 
 
 # ------------------------------------------------------------- rs_regime
@@ -158,14 +498,17 @@ def _is_critical() -> F.Column:
 def rs_regime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse/dense regime split: sparse if history mean < 1.0 or
     zero-month ratio > 0.5 (reference core/analytics.py:96-99)."""
-    hist = _with_target(spark, sf_dir).where(F.col("month") < F.col("target"))
-    mean = F.avg("n")
-    zr = F.avg(F.when(F.col("n") == 0, 1.0).otherwise(0.0))
-    return hist.groupBy("status", "priority").agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.round(mean, 6).alias("mean_hist"),
-        F.round(zr, 6).alias("zero_ratio"),
-        ((mean < 1.0) | (zr > 0.5)).alias("is_sparse"),
+    return (
+        _features(spark, sf_dir)
+        .where(F.col("n_obs") > 0)
+        .select(
+            "status",
+            "priority",
+            "n_obs",
+            F.round("mean_h", 6).alias("mean_hist"),
+            F.round("zero_ratio", 6).alias("zero_ratio"),
+            _is_sparse(F.col("mean_h")).alias("is_sparse"),
+        )
     )
 
 
@@ -192,18 +535,13 @@ def rs_regime(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rs_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-month strict-rise momentum: x(t) > x(t-1) > x(t-2) and
     x(t) ≥ 3 → +15 (reference core/analytics.py:131-142)."""
-    s = _with_target(spark, sf_dir)
-    at = lambda off: F.max(  # noqa: E731
-        F.when(F.col("month") == F.add_months(F.col("target"), off), F.col("n"))
-    )
-    x_t, x_t1, x_t2 = at(0), at(-1), at(-2)
-    return s.groupBy("status", "priority").agg(
-        x_t.alias("x_t"),
-        x_t1.alias("x_t1"),
-        x_t2.alias("x_t2"),
-        F.when((x_t > x_t1) & (x_t1 > x_t2) & (x_t >= 3), 15)
-        .otherwise(0)
-        .alias("momentum_score"),
+    return _features(spark, sf_dir).select(
+        "status",
+        "priority",
+        F.col("x").alias("x_t"),
+        F.col("prev1").alias("x_t1"),
+        F.col("prev2").alias("x_t2"),
+        F.when(F.col("momentum"), 15).otherwise(0).alias("momentum_score"),
     )
 
 
@@ -237,34 +575,15 @@ def rs_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rs_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA control chart, λ=0.2 adjust=False (reference
-    core/analytics.py:281-283). The recursion y_t = 0.8·y_{t-1} + 0.2·x_t
-    has the closed form Σ w_i·x_i with w_0 = 0.8^T, w_i = 0.2·0.8^(T-i)
-    — a plain weighted window sum, no iteration, no UDF."""
-    key = W.partitionBy("status", "priority")
-    s = (
-        _series(spark, sf_dir)
-        .withColumn("idx", F.row_number().over(key.orderBy("month")) - 1)
-        .withColumn("t_max", F.count(F.lit(1)).over(key) - 1)
-    )
-    weight = F.when(F.col("idx") == 0, F.pow(0.8, F.col("t_max"))).otherwise(
-        0.2 * F.pow(0.8, F.col("t_max") - F.col("idx"))
-    )
-    agg = s.groupBy("status", "priority").agg(
-        F.sum(F.col("n") * weight).alias("ewma"),
-        F.avg(F.when(F.col("idx") < F.col("t_max"), F.col("n"))).alias("mean_h"),
-        F.stddev_samp(F.when(F.col("idx") < F.col("t_max"), F.col("n"))).alias("std_h"),
-    )
-    import math
-
-    z = (F.col("ewma") - F.col("mean_h")) / (
-        F.col("std_h") * math.sqrt(0.2 / 1.8) + 1e-6
-    )
-    return agg.select(
+    core/analytics.py:281-283), standardized against the history mean
+    and std (the closed-form EWMA is built in _features)."""
+    z = _ewma_z(F.col("mean_h"), F.col("std_h"))
+    return _features(spark, sf_dir).select(
         "status",
         "priority",
         F.round("ewma", 6).alias("ewma"),
         F.round(z, 6).alias("z_ewma"),
-        F.when(F.abs(z) > 3.0, 15.0).otherwise(0.0).alias("ewma_score"),
+        _ewma_score(z).alias("ewma_score"),
     )
 
 
@@ -317,69 +636,21 @@ def rs_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rs_sparse_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson / negative-binomial tail p-value score for sparse series
-    (reference core/analytics.py:101-129): overdispersed (var > 1.2·mean,
-    n ≥ 6) → NB(r, p) with p = mean/var, else Poisson(mean); score =
-    clip(-log10(1 - cdf(x-1)) · 25, 0, 100), breakout (mean = 0) → 100.
-
-    The CDFs are exact series sums evaluated with `F.aggregate` over a
-    `sequence` — term recurrences term_j = term_{j-1}·mu/j (Poisson) and
-    term_j = term_{j-1}·(j+r-1)/j·(1-p) (NB) — pure JVM column math, the
-    same sums scipy evaluates. x and mean are month-level counts, so the
-    sequence is short; cost is per-series, not per-fact-row."""
-    hist_m = F.col("month") < F.col("target")
-    stats = (
-        _with_target(spark, sf_dir)
-        .groupBy("status", "priority")
-        .agg(
-            F.count(F.when(hist_m, 1)).alias("n_obs"),
-            F.avg(F.when(hist_m, F.col("n"))).alias("mu"),
-            F.var_samp(F.when(hist_m, F.col("n"))).alias("v"),
-            F.avg(F.when(hist_m, (F.col("n") == 0).cast("double"))).alias("zero_ratio"),
-            F.max(F.when(F.col("month") == F.col("target"), F.col("n"))).alias("x"),
+    with a current count (reference core/analytics.py:101-129):
+    score = clip(-log10(1 - cdf(x-1)) · 25, 0, 100), breakout
+    (mean = 0) → 100. The p-value is built in _features."""
+    return (
+        _features(spark, sf_dir)
+        .where(_is_sparse(F.col("mean_h")) & (F.col("x") > 0))
+        .select(
+            "status",
+            "priority",
+            "x",
+            "n_obs",
+            "use_nb",
+            _sparse_method().alias("method"),
+            F.round(_tail_score(), 4).alias("tail_score"),
         )
-        .where(((F.col("mu") < 1.0) | (F.col("zero_ratio") > 0.5)) & (F.col("x") > 0))
-        .withColumn("use_nb", (F.col("n_obs") >= 6) & (F.col("v") > 1.2 * F.col("mu")))
-        .withColumn("p_est", F.col("mu") / F.col("v"))
-        .withColumn(
-            "r_est", (F.col("mu") * F.col("p_est")) / (1 - F.col("p_est"))
-        )
-    )
-    k = (F.col("x") - 1).cast("int")
-
-    def _cdf(term0: F.Column, ratio) -> F.Column:
-        """Σ_{j=0..k} term_j with term_j = term_{j-1} · ratio(j), folded
-        over sequence(1, k) with a (cum, term) struct accumulator."""
-        init = F.struct(term0.alias("cum"), term0.alias("term"))
-        step = lambda acc, j: F.struct(  # noqa: E731
-            (acc["cum"] + acc["term"] * ratio(j.cast("double"))).alias("cum"),
-            (acc["term"] * ratio(j.cast("double"))).alias("term"),
-        )
-        return F.when(k < 0, F.lit(0.0)).otherwise(
-            F.when(k == 0, term0).otherwise(
-                F.aggregate(F.sequence(F.lit(1), k), init, step)["cum"]
-            )
-        )
-
-    pois_cdf = _cdf(F.exp(-F.col("mu")), lambda j: F.col("mu") / j)
-    nb_cdf = _cdf(
-        F.pow(F.col("p_est"), F.col("r_est")),
-        lambda j: (j + F.col("r_est") - 1) / j * (1 - F.col("p_est")),
-    )
-    p_val = F.when(F.col("use_nb"), 1.0 - nb_cdf).otherwise(1.0 - pois_cdf)
-    first = F.col("mu") == 0
-    score = (
-        F.when(first, 100.0)
-        .when(p_val < 1e-5, 100.0)
-        .otherwise(F.least(F.lit(100.0), F.greatest(F.lit(0.0), -F.log10(p_val) * 25)))
-    )
-    return stats.select(
-        "status",
-        "priority",
-        "x",
-        "n_obs",
-        "use_nb",
-        F.when(first, "희소유형 돌발 발생").otherwise("분포 이탈").alias("method"),
-        F.round(score, 4).alias("tail_score"),
     )
 
 
@@ -444,61 +715,19 @@ def rs_sparse_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rs_stl_z(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-decomposition z-score (reference core/analytics.py:144-167).
-
-    The reference calls statsmodels seasonal_decompose(additive,
-    period=12); that algorithm IS window math: trend = centered 13-point
-    MA with half end-weights, seasonal = de-meaned per-calendar-month
-    averages of the detrended series, z = standardized current residual
-    vs expected = last trend + target-month seasonal. Implemented
-    entirely with per-key windows — distributes by series key, no UDF."""
-    key = ["status", "priority"]
-    kw = W.partitionBy(*key).orderBy("month")
-    # the zero-filled series is |keys|×|months| rows, checkpointed once
-    # (the series artifact), so the decomposition's many
-    # self-references (trend, seasonal, residual, current) read one
-    # materialization instead of re-scanning the fact table per branch
-    base = _with_target(spark, sf_dir)
-    hist = (
-        base.where(F.col("month") < F.col("target"))
-        .withColumn("idx", F.row_number().over(kw) - 1)
-        .withColumn("moy", F.month("month"))
-    )
-    trend = (
-        F.sum("n").over(kw.rowsBetween(-5, 5))
-        + 0.5 * F.lag("n", 6).over(kw)
-        + 0.5 * F.lead("n", 6).over(kw)
-    ) / 12.0
-    detr = hist.withColumn("trend", trend).withColumn("d", F.col("n") - F.col("trend"))
-    savg = detr.groupBy(*key, "moy").agg(F.avg("d").alias("savg"))
-    smean = savg.groupBy(*key).agg(F.avg("savg").alias("grand"))
-    seasonal = savg.join(smean, key).select(
-        *key, "moy", (F.col("savg") - F.col("grand")).alias("seasonal")
-    )
-    resid = detr.join(seasonal, [*key, "moy"]).select(
-        *key, "idx", "trend", (F.col("d") - F.col("seasonal")).alias("r")
-    )
-    per_key = resid.groupBy(*key).agg(
-        F.avg("r").alias("resid_mean"),
-        F.stddev_samp("r").alias("resid_std"),
-        F.expr("max_by(trend, CASE WHEN trend IS NOT NULL THEN idx END)").alias(
-            "last_trend"
-        ),
-    )
-    cur = (
-        base.where(F.col("month") == F.col("target"))
-        .groupBy(*key)
-        .agg(F.max("n").alias("x"), F.max(F.month("month")).alias("tmoy"))
-    )
-    expected = F.col("last_trend") + F.col("seasonal")
-    z = ((F.col("x") - expected) - F.col("resid_mean")) / (F.col("resid_std") + 1e-6)
+    """Seasonal-decomposition z-score (reference core/analytics.py:144-167):
+    the standardized current residual against expected = last trend +
+    target-month seasonal (the decomposition is built in _features).
+    A series has a seasonal value for the target's calendar month once
+    its history covers 12 months."""
     return (
-        per_key.join(cur, key)
-        .join(seasonal.withColumnRenamed("moy", "tmoy"), [*key, "tmoy"])
+        _features(spark, sf_dir)
+        .where(F.col("n_obs") >= 12)
         .select(
-            *key,
-            F.round(expected, 5).alias("expected"),
-            F.round(z, 5).alias("z_stl"),
+            "status",
+            "priority",
+            F.round("expected", 5).alias("expected"),
+            F.round(_stl_z(), 5).alias("z_stl"),
         )
     )
 
@@ -561,63 +790,20 @@ def rs_nelson(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference core/analytics.py:169-212): Rule 1 |z| beyond the
     adaptive limit (+30, half in the warn band), Rule 2 last 9 months
     all above the mean (+20), Rule 3 last 6 strictly rising (+20).
-    z here is the plain standardized score; rs_wrapper composes the
+    z here is the plain standardized score; the tree composes the
     STL variant. Rules scan the FULL series including the current month
     (reference uses self.series)."""
-    key = W.partitionBy("status", "priority")
-    s = (
-        _with_target(spark, sf_dir)
-        .withColumn("r", F.row_number().over(key.orderBy(F.col("month").desc())))
-        .withColumn("diff", F.col("n") - F.lag("n").over(key.orderBy("month")))
-        .withColumn(
-            "mean_h",
-            F.avg(F.when(F.col("month") < F.col("target"), F.col("n"))).over(key),
-        )
-        .withColumn(
-            "std_h",
-            F.stddev_samp(F.when(F.col("month") < F.col("target"), F.col("n"))).over(
-                key
-            ),
-        )
-    )
-    agg = s.groupBy("status", "priority").agg(
-        F.any_value("mean_h").alias("mean_h"),
-        F.any_value("std_h").alias("std_h"),
-        F.max(F.when(F.col("month") == F.col("target"), F.col("n"))).alias("x"),
-        (
-            F.min(
-                F.when(F.col("r") <= 9, (F.col("n") > F.col("mean_h")).cast("int"))
-            )
-            == 1
-        ).alias("rule2"),
-        (F.min(F.when(F.col("r") <= 5, (F.col("diff") > 0).cast("int"))) == 1).alias(
-            "rule3"
-        ),
-    )
-    z = (F.col("x") - F.col("mean_h")) / (F.col("std_h") + 1e-6)
-    cv = F.when(F.col("mean_h") > 0, F.col("std_h") / F.col("mean_h")).otherwise(0.0)
-    base_limit = F.when(_is_critical(), 2.5).otherwise(3.0)
-    limit_z = (
-        F.when((cv < 0.1) & (F.col("mean_h") > 1.0), 2.0)
-        .when(cv > 0.5, 3.5)
-        .otherwise(base_limit)
-    )
-    warn_z = F.greatest(F.lit(1.5), limit_z - 1.0)
-    rule1 = (
-        F.when(F.abs(z) > limit_z, 30.0).when(F.abs(z) > warn_z, 15.0).otherwise(0.0)
-    )
-    score = (
-        rule1
-        + F.when(F.col("rule2"), 20).otherwise(0)
-        + F.when(F.col("rule3"), 20).otherwise(0)
-    )
-    return agg.select(
+    z = F.col("z_plain")
+    cv = _cv(F.col("mean_h"), F.col("std_h"))
+    limit_z = _limit_z(cv, F.col("mean_h"))
+    score = _rule1_score(z, limit_z) + _rule_points("rule2") + _rule_points("rule3")
+    return _features(spark, sf_dir).select(
         "status",
         "priority",
         F.round(z, 5).alias("z"),
         F.round(cv, 5).alias("cv"),
         limit_z.alias("limit_z"),
-        warn_z.alias("warn_z"),
+        _warn_z(limit_z).alias("warn_z"),
         score.alias("nelson_score"),
         "rule2",
         "rule3",
@@ -660,47 +846,13 @@ def rs_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled expectation (guarded to ≥20% progress); critical-grade warn
     +30 beyond 2.5×. The as-of day is the injected AS_OF_DAY constant,
     never datetime.now()."""
-    stats = (
-        _with_target(spark, sf_dir)
-        .groupBy("status", "priority")
-        .agg(
-            F.avg(F.when(F.col("month") < F.col("target"), F.col("n"))).alias("mean_h"),
-            F.max(F.when(F.col("month") == F.col("target"), F.col("n"))).alias("x"),
-            (
-                F.lit(AS_OF_DAY)
-                / F.dayofmonth(F.last_day(F.any_value("target")))
-            ).alias("progress"),
-        )
-    )
-    expected = F.col("mean_h") * F.col("progress")
-    penalty = (
-        F.when(F.col("x") <= 1, 0)
-        .when(
-            (F.col("x") >= F.col("mean_h"))
-            & (F.col("mean_h") > 0)
-            & (F.col("progress") < 0.7),
-            30,
-        )
-        .when(
-            (F.col("progress") >= 0.2) & (expected > 0.5) & (F.col("x") > expected * 4.0),
-            40,
-        )
-        .when(
-            (F.col("progress") >= 0.2)
-            & (expected > 0.5)
-            & (F.col("x") > expected * 2.5)
-            & _is_critical(),
-            30,
-        )
-        .otherwise(0)
-    )
-    return stats.select(
+    return _features(spark, sf_dir).select(
         "status",
         "priority",
         "x",
         F.round("mean_h", 6).alias("mean_h"),
         F.round("progress", 6).alias("progress"),
-        penalty.alias("partial_penalty"),
+        "partial_penalty",
     )
 
 
@@ -734,25 +886,23 @@ def rs_cold_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-scarcity rules on a truncated (< 3-month history) series
     (reference core/analytics.py:247-257). Replicates the reference
     quirk that a critical-grade series with x < 2 falls THROUGH to
-    regular scoring instead of returning — surfaced as 'fallthrough'."""
-    short = (
-        _with_target(spark, sf_dir)
-        .where(F.col("month") >= F.add_months(F.col("target"), -2))
-        .groupBy("status", "priority")
-        .agg(
-            F.count(F.when(F.col("month") < F.col("target"), 1)).alias("n_obs"),
-            F.max(F.when(F.col("month") == F.col("target"), F.col("n"))).alias("x"),
-        )
-    )
-    crit = _is_critical()
+    regular scoring instead of returning — surfaced as 'fallthrough'.
+    On the contiguous spine, min(n_obs, 2) is the number of months in
+    [target-2, target)."""
+    crit = F.col("crit")
     score = F.when(
         crit, F.when(F.col("x") >= 2, 100).otherwise(F.lit(None).cast("int"))
     ).otherwise(F.when(F.col("x") >= 3, 50).otherwise(0))
     status = F.when(
         crit, F.when(F.col("x") >= 2, "🔴").otherwise("fallthrough")
     ).otherwise(F.when(F.col("x") >= 3, "🟡").otherwise("⚪"))
-    return short.select(
-        "status", "priority", "n_obs", "x", score.alias("score"), status.alias("risk_status")
+    return _features(spark, sf_dir).select(
+        "status",
+        "priority",
+        F.least("n_obs", F.lit(2)).alias("n_obs"),
+        "x",
+        score.alias("score"),
+        status.alias("risk_status"),
     )
 
 
@@ -805,55 +955,18 @@ def rs_safe_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is < 3, z < 0.8, and no pattern rule (bias/trend/momentum)
     fired. Rule-1 warn-band hits don't block the safe zone (they are
     score-only, never appended to the trigger list)."""
-    key = W.partitionBy("status", "priority")
-    hist_n = F.when(F.col("month") < F.col("target"), F.col("n"))
-    s = (
-        _with_target(spark, sf_dir)
-        .withColumn("r", F.row_number().over(key.orderBy(F.col("month").desc())))
-        .withColumn("diff", F.col("n") - F.lag("n").over(key.orderBy("month")))
-        .withColumn("mean_h", F.avg(hist_n).over(key))
-        .withColumn("std_h", F.stddev_samp(hist_n).over(key))
-        .withColumn(
-            "zero_ratio",
-            F.avg(
-                F.when(F.col("month") < F.col("target"), (F.col("n") == 0).cast("double"))
-            ).over(key),
+    has_pattern = F.col("rule2") | F.col("rule3") | _rising()
+    return (
+        _features(spark, sf_dir)
+        .where(~_is_sparse(F.col("mean_h")))
+        .select(
+            "status",
+            "priority",
+            "x",
+            F.round("z_plain", 5).alias("z"),
+            has_pattern.alias("has_pattern"),
+            _safe_zone(F.col("z_plain"), has_pattern).alias("is_safe"),
         )
-    )
-    at = lambda off: F.max(  # noqa: E731
-        F.when(F.col("month") == F.add_months(F.col("target"), off), F.col("n"))
-    )
-    agg = (
-        s.groupBy("status", "priority")
-        .agg(
-            F.any_value("mean_h").alias("mean_h"),
-            F.any_value("std_h").alias("std_h"),
-            F.any_value("zero_ratio").alias("zero_ratio"),
-            at(0).alias("x"),
-            at(-1).alias("x1"),
-            at(-2).alias("x2"),
-            (
-                F.min(
-                    F.when(F.col("r") <= 9, (F.col("n") > F.col("mean_h")).cast("int"))
-                )
-                == 1
-            ).alias("rule2"),
-            (
-                F.min(F.when(F.col("r") <= 5, (F.col("diff") > 0).cast("int"))) == 1
-            ).alias("rule3"),
-        )
-        .where(~((F.col("mean_h") < 1.0) | (F.col("zero_ratio") > 0.5)))
-    )
-    z = (F.col("x") - F.col("mean_h")) / (F.col("std_h") + 1e-6)
-    momentum = (F.col("x") > F.col("x1")) & (F.col("x1") > F.col("x2")) & (F.col("x") >= 3)
-    has_pattern = F.col("rule2") | F.col("rule3") | momentum
-    return agg.select(
-        "status",
-        "priority",
-        "x",
-        F.round(z, 5).alias("z"),
-        has_pattern.alias("has_pattern"),
-        ((F.col("x") < 3) & (z < 0.8) & ~has_pattern).alias("is_safe"),
     )
 
 
@@ -889,37 +1002,15 @@ def rs_noise_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     score at 59 for general grades (threshold_yellow_general − 1;
     critical grades keep full score), any other single count caps at
     30. NULL cap = no cap applies."""
-    stats = (
-        _with_target(spark, sf_dir)
-        .groupBy("status", "priority")
-        .agg(
-            F.avg(F.when(F.col("month") < F.col("target"), F.col("n"))).alias("mean_h"),
-            F.avg(
-                F.when(F.col("month") < F.col("target"), (F.col("n") == 0).cast("double"))
-            ).alias("zero_ratio"),
-            F.max(F.when(F.col("month") == F.col("target"), F.col("n"))).alias("x"),
-            F.max(
-                F.when(
-                    F.col("month") == F.add_months(F.col("target"), -1), F.col("n")
-                )
-            ).alias("prev"),
-        )
-    )
-    sparse = (F.col("mean_h") < 1.0) | (F.col("zero_ratio") > 0.5)
     first = F.col("mean_h") == 0
-    rare = sparse & (F.col("prev") == 0)
-    cap = (
-        F.when(F.col("x") != 1, F.lit(None).cast("int"))
-        .when(first | rare, F.when(_is_critical(), F.lit(None).cast("int")).otherwise(59))
-        .otherwise(30)
-    )
-    return stats.select(
+    rare = _is_sparse(F.col("mean_h")) & (F.col("prev1") == 0)
+    return _features(spark, sf_dir).select(
         "status",
         "priority",
         "x",
         first.alias("first_occurrence"),
         rare.alias("rare_breakout"),
-        cap.alias("score_cap"),
+        _noise_cap(first, rare).alias("score_cap"),
     )
 
 
@@ -964,31 +1055,12 @@ def rs_grade_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     372-380): critical grades get a lower start-sigma (0.5 vs 1.0), a
     +10 bonus on any positive score, and lower red/yellow thresholds
     (75/50 vs 85/60). Applied here to the base z-score component."""
-    hist_n = F.when(F.col("month") < F.col("target"), F.col("n"))
-    stats = (
-        _with_target(spark, sf_dir)
-        .groupBy("status", "priority")
-        .agg(
-            F.avg(hist_n).alias("mean_h"),
-            F.stddev_samp(hist_n).alias("std_h"),
-            F.max(F.when(F.col("month") == F.col("target"), F.col("n"))).alias("x"),
-        )
-    )
-    crit = _is_critical()
-    z = (F.col("x") - F.col("mean_h")) / (F.col("std_h") + 1e-6)
-    start_sigma = F.when(crit, 0.5).otherwise(1.0)
-    base = F.least(F.lit(50.0), F.greatest(F.lit(0.0), (z - start_sigma) * 25.0))
-    total = F.least(F.lit(100.0), base + F.when(crit & (base > 0), 10).otherwise(0))
-    thr_red = F.when(crit, 75).otherwise(85)
-    thr_yel = F.when(crit, 50).otherwise(60)
-    status = (
-        F.when(total >= thr_red, "🔴").when(total >= thr_yel, "🟡").otherwise("⚪")
-    )
-    return stats.select(
+    total = _crit_bonus(_base_score(F.col("z_plain")))
+    return _features(spark, sf_dir).select(
         "status",
         "priority",
         F.floor(total).cast("int").alias("score"),
-        status.alias("risk_status"),
+        _band(total).alias("risk_status"),
     )
 
 

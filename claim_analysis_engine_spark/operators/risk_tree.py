@@ -2,27 +2,27 @@
 core/analytics.py:214-426) as one relational query with a full DuckDB
 value oracle — no Python in the scoring path.
 
-operators/risk.py proves every sub-score individually and runs the
-interacting tree through applyInPandas (rs_wrapper, rows-only at the
-gate). This module composes those same proven pieces — regime split,
+operators/risk.py builds one per-series feature frame (risk._features)
+and proves every sub-score as a projection of it, each against its own
+oracle. This module composes those same proven pieces — regime split,
 Poisson/NB tails, seasonal-decomposition z, Nelson rules, EWMA,
 momentum, partial-month guards, cold start, safe zone, noise caps,
-grade thresholds, and the Korean reason-string consolidation — into a
-single Column-expression cascade, so the flagship semantics get a
-value-level correctness check, and tests/test_risk_tree.py asserts it
-agrees row-for-row with the numpy engine behind rs_wrapper.
+grade thresholds — from the same frame and the same scoring Column
+functions, and adds the Korean reason-string consolidation. So the
+flagship semantics get a value-level correctness check, and
+tests/test_risk_tree.py asserts it agrees row-for-row with the numpy
+engine behind rs_wrapper, on the sf0.001/sf0.01 series and on branch
+fixtures (short spines, sparse tails, breakouts, single counts,
+seasonal spikes).
 
 Scale shape: identical to the sub-ops — one monthly-count aggregate of
 the fact table, then window/column math over the |keys|×|months|
-series frame. The whole tree is a single Catalyst plan.
+series frame, checkpointed once as per-series features.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from claim_analysis_engine_spark import artifacts
@@ -30,8 +30,20 @@ from claim_analysis_engine_spark.operators.risk import (
     AS_OF_DAY,
     _CRIT_SQL,
     _SERIES_CTE,
-    _is_critical,
-    _with_target,
+    _band,
+    _base_score,
+    _crit_bonus,
+    _cv,
+    _ewma_score,
+    _ewma_z,
+    _features,
+    _limit_z,
+    _noise_cap,
+    _rule1_score,
+    _rule_points,
+    _safe_zone,
+    _sparse_method,
+    _tail_score,
 )
 from claim_analysis_engine_spark.registry import OpRegistry
 
@@ -335,228 +347,24 @@ def rs_tree_relational(
     ep5_p2_summary) consumes it too."""
     if orders is None:
         return artifacts.get_or_build(
-            "risk_tree", spark, sf_dir, lambda: _tree(spark, sf_dir, None)
+            "risk_tree", spark, sf_dir, lambda: _tree(_features(spark, sf_dir))
         )
-    return _tree(spark, sf_dir, orders)
+    return _tree(_features(spark, sf_dir, orders))
 
 
-def _tree(spark: SparkSession, sf_dir: str, orders: DataFrame | None) -> DataFrame:
-    # The tree reads the series from many branches, so it reads
-    # checkpointed rows: the series artifact on the default path, its
-    # own checkpoint of the substituted fact table otherwise. Neither
-    # is a CacheManager entry, which would match a later read of the
-    # same path by plan and serve the old blocks after a rewrite.
-    base = _with_target(spark, sf_dir, orders)
-    if orders is not None:
-        base = base.localCheckpoint()
-    key = ["status", "priority"]
-    hist_m = F.col("month") < F.col("target")
-    hist_n = F.when(hist_m, F.col("n"))
-    at = lambda off: F.max(  # noqa: E731
-        F.when(F.col("month") == F.add_months(F.col("target"), off), F.col("n"))
-    )
-    stats = base.groupBy(*key).agg(
-        F.count(F.when(hist_m, 1)).alias("n_obs"),
-        F.coalesce(F.avg(hist_n), F.lit(0.0)).alias("mu"),
-        F.coalesce(F.stddev_samp(hist_n), F.lit(0.0)).alias("sd"),
-        F.coalesce(F.var_samp(hist_n), F.lit(0.0)).alias("vr"),
-        F.coalesce(
-            F.avg(F.when(hist_m, (F.col("n") == 0).cast("double"))), F.lit(0.0)
-        ).alias("zero_ratio"),
-        at(0).alias("x"),
-        at(-1).alias("prev1"),
-        at(-2).alias("prev2"),
-        (F.lit(AS_OF_DAY) / F.dayofmonth(F.last_day(F.any_value("target")))).alias(
-            "progress"
-        ),
-    )
-
-    kw_desc = W.partitionBy(*key).orderBy(F.col("month").desc())
-    kw_asc = W.partitionBy(*key).orderBy("month")
-    kp = W.partitionBy(*key)
-    rules = (
-        base.withColumn("r", F.row_number().over(kw_desc))
-        .withColumn("diff", F.col("n") - F.lag("n").over(kw_asc))
-        .withColumn("mean_h", F.avg(hist_n).over(kp))
-        .groupBy(*key)
-        .agg(
-            (
-                F.min(F.when(F.col("r") <= 9, (F.col("n") > F.col("mean_h")).cast("int")))
-                == 1
-            ).alias("raw_rule2"),
-            (
-                F.min(F.when(F.col("r") <= 5, (F.col("diff") > 0).cast("int"))) == 1
-            ).alias("raw_rule3"),
-        )
-    )
-
-    idxd = base.withColumn("idx", F.row_number().over(kw_asc) - 1).withColumn(
-        "t_max", F.count(F.lit(1)).over(kp) - 1
-    )
-    weight = F.when(F.col("idx") == 0, F.pow(0.8, F.col("t_max"))).otherwise(
-        0.2 * F.pow(0.8, F.col("t_max") - F.col("idx"))
-    )
-    ewma = idxd.groupBy(*key).agg(F.sum(F.col("n") * weight).alias("ewma_val"))
-
-    # classical decomposition (same chain as rs_stl_z)
-    hist = (
-        base.where(hist_m)
-        .withColumn("idx", F.row_number().over(kw_asc) - 1)
-        .withColumn("moy", F.month("month"))
-    )
-    trend = (
-        F.sum("n").over(kw_asc.rowsBetween(-5, 5))
-        + 0.5 * F.lag("n", 6).over(kw_asc)
-        + 0.5 * F.lead("n", 6).over(kw_asc)
-    ) / 12.0
-    detr = hist.withColumn("trend", trend).withColumn("d", F.col("n") - F.col("trend"))
-    savg = detr.groupBy(*key, "moy").agg(F.avg("d").alias("savg"))
-    smean = savg.groupBy(*key).agg(F.avg("savg").alias("grand"))
-    seasonal = savg.join(smean, key).select(
-        *key, "moy", (F.col("savg") - F.col("grand")).alias("seasonal")
-    )
-    resid = detr.join(seasonal, [*key, "moy"]).select(
-        *key, "idx", "trend", (F.col("d") - F.col("seasonal")).alias("r")
-    )
-    stl_key = resid.groupBy(*key).agg(
-        F.avg("r").alias("resid_mean"),
-        F.stddev_samp("r").alias("resid_std"),
-        F.expr("max_by(trend, CASE WHEN trend IS NOT NULL THEN idx END)").alias(
-            "last_trend"
-        ),
-    )
-    cur = (
-        base.where(F.col("month") == F.col("target"))
-        .groupBy(*key)
-        .agg(F.max(F.month("month")).alias("tmoy"))
-    )
-    stl = (
-        stl_key.join(cur, key)
-        .join(seasonal.withColumnRenamed("moy", "tmoy"), [*key, "tmoy"])
-        .select(
-            *key,
-            (F.col("last_trend") + F.col("seasonal")).alias("expected"),
-            "resid_mean",
-            "resid_std",
-        )
-    )
-
-    feat = (
-        stats.join(rules, key)
-        .join(ewma, key)
-        .join(stl, key, "left")
-        .withColumn("crit", _is_critical())
-        .withColumn("sparse", (F.col("mu") < 1.0) | (F.col("zero_ratio") > 0.5))
-    )
-
-    used_stl = (
-        (F.col("n_obs") >= 24) & (F.col("sd") > 0) & F.col("expected").isNotNull()
-    )
-    z = F.when(
-        used_stl,
-        ((F.col("x") - F.col("expected")) - F.col("resid_mean"))
-        / (F.col("resid_std") + 1e-6),
-    ).otherwise((F.col("x") - F.col("mu")) / (F.col("sd") + 1e-6))
-
-    expected_cur = F.col("mu") * F.col("progress")
-    partial_penalty = (
-        F.when(F.col("x") <= 1, 0)
-        .when(
-            (F.col("x") >= F.col("mu")) & (F.col("mu") > 0) & (F.col("progress") < 0.7),
-            30,
-        )
-        .when(
-            (F.col("progress") >= 0.2)
-            & (expected_cur > 0.5)
-            & (F.col("x") > expected_cur * 4.0),
-            40,
-        )
-        .when(
-            (F.col("progress") >= 0.2)
-            & (expected_cur > 0.5)
-            & (F.col("x") > expected_cur * 2.5)
-            & F.col("crit"),
-            30,
-        )
-        .otherwise(0)
-    )
-    momentum = (
-        (F.col("n_obs") >= 2)
-        & (F.col("x") > F.col("prev1"))
-        & (F.col("prev1") > F.col("prev2"))
-        & (F.col("x") >= 3)
-    )
-
-    # Poisson / NB tail via the same term recurrences as rs_sparse_tail
-    k = (F.col("x") - 1).cast("int")
-
-    def _cdf(term0: F.Column, ratio) -> F.Column:
-        init = F.struct(term0.alias("cum"), term0.alias("term"))
-        step = lambda acc, j: F.struct(  # noqa: E731
-            (acc["cum"] + acc["term"] * ratio(j.cast("double"))).alias("cum"),
-            (acc["term"] * ratio(j.cast("double"))).alias("term"),
-        )
-        return F.when(k < 0, F.lit(0.0)).otherwise(
-            F.when(k == 0, term0).otherwise(
-                F.aggregate(F.sequence(F.lit(1), k), init, step)["cum"]
-            )
-        )
-
-    p_est = F.col("mu") / F.col("vr")
-    r_est = (F.col("mu") * p_est) / (1 - p_est)
-    use_nb = (F.col("n_obs") >= 6) & (F.col("vr") > 1.2 * F.col("mu"))
-    pois_cdf = _cdf(F.exp(-F.col("mu")), lambda j: F.col("mu") / j)
-    nb_cdf = _cdf(F.pow(p_est, r_est), lambda j: (j + r_est - 1) / j * (1 - p_est))
-    p_val = F.when(F.col("mu") == 0, F.lit(None)).otherwise(
-        F.when(use_nb, 1.0 - nb_cdf).otherwise(1.0 - pois_cdf)
-    )
-
-    # The checkpoint is a CollapseProject barrier, not (primarily) a
-    # reuse cache: without it the final select's
-    # score/reason/band trees each re-inline z, the Poisson/NB fold
-    # recurrences of p_val, and the penalty cases — the collapsed
-    # Project's generated code crosses the JVM's 64 KB method limit, and
-    # EVERY execution then pays a failed Janino compile plus interpreted
-    # fallback (measured: the tiny 2-doc alerts write took 5.5 s warm).
-    # With the barrier both codegen units stay under the limit. The
-    # frame is per-series-key rows — KB-scale at any SF.
-    calc = (
-        feat.withColumn("z", z)
-        .withColumn("used_stl", used_stl)
-        .withColumn("partial_penalty", partial_penalty)
-        .withColumn("momentum", momentum)
-        .withColumn("p_val", p_val)
-    )
-    # Checkpoint calc now, under a tiny-frame shuffle width
-    # (|keys|x|months| rows; 32 scheduler rounds per join stage
-    # measured ~2 s of pure task overhead at sf0.1 — the
-    # propagate_min_labels lesson). Consumers then read the
-    # checkpointed rows through narrow projects only.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        calc = calc.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    # From here down the score/band/reason pyramid is STAGED into
-    # withColumns levels instead of one nested Column expression. A
-    # Column is a TREE, not a DAG: writing `total1` inline nests
-    # `total0` four times, and the final select then references
-    # `total1` five more times — the single collapsed Project's
-    # generated code crossed the JVM's 64 KB method limit and every
-    # execution paid a failed Janino compile + interpreted fallback
-    # (measured: the 2-doc alerts write took 5.5 s warm at sf0.1).
-    # Staged columns become attribute refs — each heavy subtree is
-    # generated and evaluated exactly once per level.
-    sparse_core = F.when(
-        ~F.col("sparse"), 0.0
-    ).otherwise(
-        F.when(F.col("mu") == 0, F.when(F.col("x") > 0, 100.0).otherwise(0.0))
-        .when(F.col("p_val") < 1e-5, 100.0)
-        .otherwise(
-            F.least(F.lit(100.0), F.greatest(F.lit(0.0), -F.log10("p_val") * 25))
-        )
+def _tree(calc: DataFrame) -> DataFrame:
+    # calc is the checkpointed feature frame. From here down the
+    # score/band/reason pyramid is STAGED into withColumns levels
+    # instead of one nested Column expression. A Column is a TREE, not
+    # a DAG: writing `total1` inline nests `total0` several times, and
+    # the final select then references `total1` five more times — the
+    # single collapsed Project's generated code crossed the JVM's 64 KB
+    # method limit and every execution paid a failed Janino compile +
+    # interpreted fallback (measured: the 2-doc alerts write took 5.5 s
+    # warm at sf0.1). Staged columns become attribute refs — each heavy
+    # subtree is generated and evaluated exactly once per level.
+    sparse_core = F.when(~F.col("sparse"), 0.0).otherwise(
+        _tail_score()
         + F.when(
             (F.col("prev1") > 0)
             & (F.col("x") / F.col("prev1") >= 3.0)
@@ -564,30 +372,11 @@ def _tree(spark: SparkSession, sf_dir: str, orders: DataFrame | None) -> DataFra
             20.0,
         ).otherwise(0.0)
     )
-    start_sigma = F.when(F.col("crit"), 0.5).otherwise(1.0)
-    base_score = F.when(F.col("sparse"), 0.0).otherwise(
-        F.least(F.lit(50.0), F.greatest(F.lit(0.0), (F.col("z") - start_sigma) * 25.0))
-    )
-    cv = F.when(F.col("mu") > 0, F.col("sd") / F.col("mu")).otherwise(0.0)
-    z_ewma = (F.col("ewma_val") - F.col("mu")) / (
-        F.col("sd") * math.sqrt(0.2 / 1.8) + 1e-6
-    )
-    limit_z = (
-        F.when((F.col("cv") < 0.1) & (F.col("mu") > 1.0), 2.0)
-        .when(F.col("cv") > 0.5, 3.5)
-        .otherwise(F.when(F.col("crit"), 2.5).otherwise(3.0))
-    )
-    warn_z = F.greatest(F.lit(1.5), F.col("limit_z") - 1.0)
-    rule1_score = (
-        F.when(F.abs("z") > F.col("limit_z"), 30.0)
-        .when(F.abs("z") > warn_z, 15.0)
-        .otherwise(0.0)
-    )
     core = F.when(F.col("sparse"), F.col("sparse_core")).otherwise(
         F.col("base_score")
         + F.col("rule1_score")
-        + F.when(F.col("raw_rule2"), 20.0).otherwise(0.0)
-        + F.when(F.col("raw_rule3"), 20.0).otherwise(0.0)
+        + _rule_points("rule2")
+        + _rule_points("rule3")
         + F.col("ewma_score")
     )
     pre_bonus = (
@@ -595,51 +384,31 @@ def _tree(spark: SparkSession, sf_dir: str, orders: DataFrame | None) -> DataFra
         + F.when(F.col("momentum"), 15.0).otherwise(0.0)
         + F.col("partial_penalty")
     )
-    total0 = F.least(
-        F.lit(100.0),
-        F.when(
-            F.col("crit") & (F.col("pre_bonus") > 0), F.col("pre_bonus") + 10.0
-        ).otherwise(F.col("pre_bonus")),
-    )
-    total1 = (
-        F.when(F.col("x") != 1, F.col("total0"))
-        .when(
-            F.col("first_occ") | F.col("rare"),
-            F.when(~F.col("crit"), F.least(F.col("total0"), F.lit(59.0))).otherwise(
-                F.col("total0")
-            ),
-        )
-        .otherwise(F.least(F.col("total0"), F.lit(30.0)))
-    )
     partial_reason = F.when(F.col("partial_penalty") > 0, "상승세 가속").otherwise("")
     partial_reason2 = F.when(
         (F.col("x") == 1) & ~(F.col("first_occ") | F.col("rare")), ""
     ).otherwise(F.col("partial_reason"))
-    has_parts = (
-        (F.col("partial_reason2") != "")
-        | F.col("rule1_trig")
-        | F.col("rule2")
-        | F.col("rule3")
+    triggered = (
+        F.col("rule1_trig")
+        | F.col("rule2_trig")
+        | F.col("rule3_trig")
         | F.col("momentum")
     )
     mom_detail = F.concat_ws(
         ", ",
         F.nullif(F.col("partial_reason2"), F.lit("")),
-        F.when(F.col("rule2"), "지속적 상승 - 9개월"),
-        F.when(F.col("rule3"), "지속적 상승 - (6개월)"),
+        F.when(F.col("rule2_trig"), "지속적 상승 - 9개월"),
+        F.when(F.col("rule3_trig"), "지속적 상승 - (6개월)"),
         F.when(F.col("momentum"), "연속 상승 모멘텀"),
     )
     method_str = (
-        F.when(
-            F.col("sparse"),
-            F.when(F.col("mu") == 0, "희소유형 돌발 발생").otherwise("분포 이탈"),
-        )
+        F.when(F.col("sparse"), _sparse_method())
         .when(F.col("used_stl"), "정상패턴 이탈")
         .otherwise("평균 대비 급증")
     )
     alert_reason = (
         F.when(
-            F.col("has_parts"),
+            (F.col("partial_reason2") != "") | triggered,
             F.concat_ws(
                 " / ",
                 F.when(F.col("rule1_trig"), "📊추세이탈(정상범위 이탈)"),
@@ -655,29 +424,14 @@ def _tree(spark: SparkSession, sf_dir: str, orders: DataFrame | None) -> DataFra
         )
         .otherwise(F.concat(F.lit("📊추세이탈("), F.col("method_str"), F.lit(")")))
     )
-    thr_red = F.when(F.col("crit"), 75).otherwise(85)
-    thr_yel = F.when(F.col("crit"), 50).otherwise(60)
-    band = (
-        F.when(F.col("total1") >= thr_red, "🔴")
-        .when(F.col("total1") >= thr_yel, "🟡")
-        .otherwise("⚪")
+    safe = (
+        ~F.col("sparse")
+        & _safe_zone(F.col("z"), triggered)
+        & (F.col("partial_reason") == "")
     )
     sparse_yellow = (
         F.col("sparse") & (F.col("x") == 2) & F.col("crit") & (F.col("mu") >= 0.5)
     )
-    safe = (
-        ~F.col("sparse")
-        & (F.col("x") < 3)
-        & (F.col("z") < 0.8)
-        & ~(
-            F.col("rule1_trig")
-            | F.col("rule2")
-            | F.col("rule3")
-            | F.col("momentum")
-        )
-        & (F.col("partial_reason") == "")
-    )
-    cold = F.col("n_obs") < 3
 
     # dependency-levelled staging (see comment above): every column in
     # a level references only calc columns or columns from EARLIER
@@ -687,37 +441,44 @@ def _tree(spark: SparkSession, sf_dir: str, orders: DataFrame | None) -> DataFra
         calc.withColumns(
             {
                 "sparse_core": sparse_core,
-                "base_score": base_score,
-                "cv": cv,
-                "z_ewma": z_ewma,
+                "base_score": F.when(F.col("sparse"), 0.0).otherwise(
+                    _base_score(F.col("z"))
+                ),
+                "cv": _cv(F.col("mu"), F.col("sd")),
                 "first_occ": F.col("mu") == 0,
                 "rare": F.col("sparse") & (F.col("prev1") == 0),
-                "cold": cold,
+                "cold": F.col("n_obs") < 3,
                 "partial_reason": partial_reason,
                 "sparse_yellow": sparse_yellow,
                 "method_str": method_str,
-                "rule2": ~F.col("sparse") & F.col("raw_rule2"),
-                "rule3": ~F.col("sparse") & F.col("raw_rule3"),
+                "rule2_trig": ~F.col("sparse") & F.col("rule2"),
+                "rule3_trig": ~F.col("sparse") & F.col("rule3"),
+                "ewma_score": _ewma_score(_ewma_z(F.col("mu"), F.col("sd"))),
             }
         )
         .withColumns(
             {
-                "limit_z": limit_z,
-                "ewma_score": F.when(F.abs(z_ewma) > 3.0, 15.0).otherwise(0.0),
+                "limit_z": _limit_z(F.col("cv"), F.col("mu")),
                 "partial_reason2": partial_reason2,
             }
         )
         .withColumns(
             {
-                "rule1_score": rule1_score,
+                "rule1_score": _rule1_score(F.col("z"), F.col("limit_z")),
                 "rule1_trig": ~F.col("sparse") & (F.abs("z") > F.col("limit_z")),
             }
         )
-        .withColumns({"core": core, "has_parts": has_parts, "mom_detail": mom_detail})
+        .withColumns({"core": core, "mom_detail": mom_detail})
         .withColumns({"pre_bonus": pre_bonus, "safe": safe, "alert_reason": alert_reason})
-        .withColumns({"total0": total0})
-        .withColumns({"total1": total1})
-        .withColumns({"band": band})
+        .withColumns({"total0": _crit_bonus(F.col("pre_bonus"))})
+        .withColumns(
+            {
+                "total1": F.least(
+                    F.col("total0"), _noise_cap(F.col("first_occ"), F.col("rare"))
+                )
+            }
+        )
+        .withColumns({"band": _band(F.col("total1"))})
     )
 
     risk_status = (

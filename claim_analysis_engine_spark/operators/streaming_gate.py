@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from claim_analysis_engine_spark.tmputil import fresh_dir
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +35,8 @@ from pyspark.sql import functions as F
 
 from claim_analysis_engine_spark import streaming
 from claim_analysis_engine_spark.registry import OpRegistry
+from claim_analysis_engine_spark.tables import pinned_conf
+from claim_analysis_engine_spark.tmputil import fresh_dir
 
 REG = OpRegistry()
 
@@ -58,6 +59,14 @@ def _stage_events(sf_dir: str, copies: int) -> str:
 STREAM_STATE_PARTITIONS = 8
 
 
+def _state_partitions(spark: SparkSession):
+    """Run the enclosed stream at STREAM_STATE_PARTITIONS shuffle
+    partitions, restoring the caller's width afterwards."""
+    return pinned_conf(
+        spark, "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    )
+
+
 def _drain_to_parquet(
     spark: SparkSession,
     result: DataFrame,
@@ -72,9 +81,7 @@ def _drain_to_parquet(
     of the finalized windows at that point)."""
     out = out or fresh_dir("cae_stream_out_")
     ckpt = ckpt or fresh_dir("cae_stream_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         q = (
             result.writeStream.format("parquet")
             .option("path", out)
@@ -84,8 +91,6 @@ def _drain_to_parquet(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     if not read_back:
         return None
     back = spark.read.parquet(out)
@@ -287,9 +292,7 @@ def _drain_until_eof(spark: SparkSession, result: DataFrame) -> DataFrame:
 
     out = fresh_dir("cae_stream_out_")
     ckpt = fresh_dir("cae_stream_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         q = (
             result.writeStream.format("parquet")
             .option("path", out)
@@ -319,8 +322,6 @@ def _drain_until_eof(spark: SparkSession, result: DataFrame) -> DataFrame:
             # failed drain can't leak a live query into the session
             q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     back = spark.read.parquet(out)
     if back.isEmpty():
         raise RuntimeError(
@@ -575,9 +576,7 @@ def evt_mart_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         upd.write.mode("overwrite").parquet(v)
         versions.append(v)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         q = (
             counts.writeStream.foreachBatch(apply_batch)
             .outputMode("update")
@@ -586,8 +585,6 @@ def evt_mart_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if not versions:
         raise RuntimeError("mart refresh stream produced no versions")
     # surface the version trail for the incrementality contract test
@@ -663,9 +660,7 @@ def evt_scd2_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         upd.write.mode("overwrite").parquet(v)
         versions.append(v)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)
@@ -673,8 +668,6 @@ def evt_scd2_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if not versions:
         raise RuntimeError("scd2 refresh stream produced no versions")
     evt_scd2_refresh_stream.last_versions = versions  # type: ignore[attr-defined]
@@ -873,9 +866,7 @@ def evt_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc.write.mode("overwrite").parquet(v)
         versions.append(v)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .outputMode("append")
@@ -884,8 +875,6 @@ def evt_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if len(versions) < 2:
         raise RuntimeError(
             f"cms stream produced {len(versions)} versions — expected one "
@@ -1001,16 +990,12 @@ def evt_mart_restart_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         run_leg()  # pre-restart leg
         n_pre = len(list(mart_root.glob("v*")))
         for f in sorted(pending.glob("*.parquet")):
             os.rename(f, stage / f.name)  # atomic same-fs appearance
         run_leg()  # restart from the same checkpoint
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     n_post = len(list(mart_root.glob("v*")))
     if not (0 < n_pre < n_post):
         raise RuntimeError(
@@ -1087,9 +1072,7 @@ def evt_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc.write.mode("overwrite").parquet(v)
         versions.append(v)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
+    with _state_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .outputMode("append")
@@ -1098,8 +1081,6 @@ def evt_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if len(versions) < 2:
         raise RuntimeError(
             f"hll stream produced {len(versions)} versions — expected one "
@@ -1322,16 +1303,13 @@ def evt_span_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stage))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     n_batches = 0
 
     def counted(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
         apply_batch(batch_df, batch_id)
-
-    try:
+    with _state_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(counted)
             .outputMode("append")
@@ -1340,8 +1318,6 @@ def evt_span_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if n_batches != SPAN_STREAM_SPLITS:
         raise RuntimeError(
             f"span dedup stream ran {n_batches} micro-batches — expected "

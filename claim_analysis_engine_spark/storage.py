@@ -20,7 +20,6 @@ spine grew (rebuild everything) or only the touched series change.
 from __future__ import annotations
 
 import shutil
-from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from claim_analysis_engine_spark.config import PARTITION_COLS
+from claim_analysis_engine_spark.tables import pinned_conf
 
 HUB_PARTITIONS = list(PARTITION_COLS)
 
@@ -35,32 +35,12 @@ _OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 _AQE_KEY = "spark.sql.adaptive.enabled"
 
 
-@contextmanager
-def _pinned_conf(spark: SparkSession, key: str, value: str):
-    """Pin a SQL conf for the enclosed block, restoring the caller's
-    value afterwards. The hub merge-upsert's keep-untouched-partitions
-    semantics DEPEND on dynamic partition overwrite; under Spark's
-    default (static) the same write truncates the entire hub root —
-    silent data loss on any externally built SparkSession. Ops must
-    never assume ambient session conf (the tables._load_events
-    lesson), so such a mode is asserted at the site itself."""
-    prev = spark.conf.get(key)
-    if prev.lower() == value:
-        yield
-        return
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _collect_small(df: DataFrame) -> list:
     """Collect a driver-decision frame as ONE Spark job. Adaptive
     execution would submit every shuffle stage as a job of its own; on
     frames this small (1-row or keys × months) that per-job launch cost
     is all the collect costs."""
-    with _pinned_conf(df.sparkSession, _AQE_KEY, "false"):
+    with pinned_conf(df.sparkSession, _AQE_KEY, "false"):
         # bounded: callers pass 1-row or keys × months aggregates
         return df.collect()
 
@@ -73,7 +53,7 @@ def write_hub(df: DataFrame, hub_path: str) -> None:
     core/storage.py:47-69). Dynamic partition overwrite is pinned at
     the write site, so only partitions present in ``df`` are replaced
     regardless of how the caller's session was configured."""
-    with _pinned_conf(df.sparkSession, _OVERWRITE_MODE_KEY, "dynamic"):
+    with pinned_conf(df.sparkSession, _OVERWRITE_MODE_KEY, "dynamic"):
         df.write.partitionBy(*HUB_PARTITIONS).mode("overwrite").parquet(hub_path)
 
 
@@ -127,7 +107,7 @@ def merge_upsert(
     # may coalesce the exchange when volumes are small; coalesced
     # buckets keep whole (year, month) groups together, so the
     # one-file-per-dir property survives.)
-    with _pinned_conf(spark, _OVERWRITE_MODE_KEY, "dynamic"):
+    with pinned_conf(spark, _OVERWRITE_MODE_KEY, "dynamic"):
         deduped.repartition(*HUB_PARTITIONS).write.partitionBy(
             *HUB_PARTITIONS
         ).mode("overwrite").parquet(hub_path)

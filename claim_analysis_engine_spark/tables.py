@@ -1,5 +1,6 @@
 """Access to the driver-generated synthetic tables (TESTDATA.md), plus
-the execution helpers operators share (fanout_apply, spread_scan).
+the execution helpers operators share (fanout_apply, spread_scan,
+pinned_conf).
 
 Reads are plain `spark.read.parquet` so Catalyst gets full pushdown and
 pruning. Nothing here caches: a frame reused across requests is an
@@ -7,6 +8,8 @@ artifact (artifacts.py), keyed by the files it was computed from.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,6 +55,25 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, key: str, value: str):
+    """Pin a SQL conf for the enclosed block, restoring the caller's
+    value afterwards. The one place operators set session conf: ops
+    never assume ambient conf (see _load_events), so a mode a result
+    depends on — dynamic partition overwrite for the hub merge-upsert,
+    a small shuffle width for a tiny frame or a stateful gate — is
+    asserted at the site itself."""
+    prev = spark.conf.get(key)
+    if prev.lower() == value:
+        yield
+        return
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

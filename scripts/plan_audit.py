@@ -158,9 +158,10 @@ def main() -> None:
     KNOWN_HEAVY = {
         "graph_pagerank": "10 power-iteration rounds — each is a tiny "
         "dst-keyed shuffle + broadcast of the rank vector; iterative floor",
-        "rs_tree_relational": "the whole risk decision tree as ONE "
-        "relational query — every global scalar joins back as a "
-        "broadcast (the bnlj/bcast count IS the tree's node count)",
+        "rs_tree_relational": "the risk decision tree and the 11 rs_* "
+        "sub-scores plan as projections of the checkpointed risk_features "
+        "frame; its build (windows, decomposition joins, tail folds) runs "
+        "once per input version inside risk._features, outside this plan",
         "sim_nprobe_sweep": "4 probe/search passes over one trained "
         "quantizer (the tuning curve costs its points)",
         "sim_nprobe_contract": "same sweep + the exact-truth branch",

@@ -20,8 +20,9 @@ from tests.conftest import SF_SMALL
 from tests.oracle_harness import compare, duck_connection
 
 # every artifact family the dashboard path reads (the series substrate,
-# the tree, the alerts read-back, the CC labels) plus one result-row
-# replay (ep15)
+# the tree, the alerts read-back, the CC labels), an op that reuses a
+# frame within one call (dedup_simhash's signatures) and one
+# result-row replay (ep15)
 REWRITE_OPS = (
     "rs_tree_relational",
     "p6_rule_engine",
@@ -30,6 +31,7 @@ REWRITE_OPS = (
     "f_month_end_pred",
     "ep2_risk_radar",
     "dedup_cluster_cc",
+    "dedup_simhash",
     "ep15_plant_analysis",
 )
 # rows-only ops checked against their relational twin's oracle

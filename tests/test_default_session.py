@@ -13,7 +13,7 @@ upsert and asserts no partition is lost, and (b) runs every
 sink-writing / sink-reading registry op against its DuckDB oracle on
 the stripped session. Ops must self-heal any conf their semantics
 depend on (the tables._load_events pattern, now also
-storage._pinned_conf).
+tables.pinned_conf).
 """
 
 from __future__ import annotations

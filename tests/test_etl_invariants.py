@@ -188,6 +188,25 @@ def test_no_memo_outside_the_artifact_store():
     assert not offenders, f"memos outside artifacts.py: {offenders}"
 
 
+
+def test_conf_is_set_only_through_pinned_conf():
+    """Operators never assume ambient session conf, and never leak a
+    conf they changed: a setting a result depends on is pinned for a
+    block by tables.pinned_conf, which restores the caller's value. So
+    no package module except tables.py may call ``.conf.set(``."""
+    import pathlib
+
+    import claim_analysis_engine_spark as pkg
+
+    offenders = [
+        f"{p.name}:{n}"
+        for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py"))
+        if p.name != "tables.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if ".conf.set(" in line
+    ]
+    assert not offenders, f"conf set outside tables.pinned_conf: {offenders}"
+
 def test_bench_exclusion_ledger_is_consistent_with_the_registry():
     """The BENCH_DETAIL `excluded` map (r11 verdict ask) must stay
     honest: every excluded id is a real registered op, no excluded op
