@@ -2,28 +2,25 @@
 (reference core/engine/models.py + trainer.py re-expressed as pure
 numpy so it runs inside `applyInPandas` with zero extra dependencies).
 
-Model slots mirror the reference's three families:
+Each of the reference's three model families is one numpy class, the
+only implementation of its slot (``SLOTS``):
 
 * ``hw``      — SARIMAX(p,d,q)×(P,D,Q,12) by exact state-space
-  Kalman-filter Gaussian MLE in pure numpy (NumpySarimax — the
-  statistical slot, reference models.py:113-173). When statsmodels is
-  importable the slot upgrades to statsmodels SARIMAX transparently
-  (same orders, same grid). HoltWinters remains exported as the
-  legacy cheap smoother.
+  Kalman-filter Gaussian MLE (NumpySarimax — the statistical slot,
+  reference models.py:113-173).
 * ``laglin``  — gradient-boosted regression trees on lag-k features
   with RECURSIVE multi-step prediction feeding its own outputs
-  (NumpyGBDT — the boosting slot, exactly the reference's CatBoost
-  feature/predict shape, models.py:206-303; upgrades to CatBoost when
-  importable). LagLinear remains exported as the legacy OLS baseline.
+  (NumpyGBDT — the boosting slot, the reference's CatBoost
+  feature/predict shape, models.py:206-303).
 * ``snaive``  — single-layer LSTM + linear head by full numpy BPTT
   (NumpyLSTM — the sequence slot, reference models.py:310-474, same
   scale/window/recursive-predict pipeline at a smaller documented
-  config; upgrades to the torch LSTM when importable).
-  SeasonalNaiveDrift remains exported as the legacy cheap baseline.
+  config).
 
-All three families are therefore semantically REAL in a bare
-numpy environment — genuine SARIMAX MLE, genuine boosting, genuine
-backprop — not linear approximations.
+The slot ids are historical names kept as output values. All three
+families are semantically REAL — genuine SARIMAX MLE, genuine boosting,
+genuine backprop — not linear approximations, and they give the same
+champions, parameters and forecasts wherever they run.
 
 Tuning is a DETERMINISTIC grid (reference uses Optuna TPE seeded 42,
 trainer.py:133-398 — optuna is not in this environment; the grid is
@@ -43,25 +40,6 @@ from pathlib import Path
 import numpy as np
 
 TEST_MONTHS = 3  # reference trainer.py:148 temporal split
-
-try:  # pragma: no cover - not present in this environment
-    import statsmodels.api as _sm  # noqa: F401
-
-    HAVE_STATSMODELS = True
-except ImportError:
-    HAVE_STATSMODELS = False
-try:  # pragma: no cover
-    import catboost as _cb  # noqa: F401
-
-    HAVE_CATBOOST = True
-except ImportError:
-    HAVE_CATBOOST = False
-try:  # pragma: no cover
-    import torch as _torch  # noqa: F401
-
-    HAVE_TORCH = True
-except ImportError:
-    HAVE_TORCH = False
 
 
 def temporal_split(y: np.ndarray, test_months: int = TEST_MONTHS):
@@ -136,10 +114,8 @@ def _nelder_mead(f, x0, step=0.25, maxfev=None, ftol=1e-5, xtol=1e-4):
 
 class NumpySarimax:
     """SARIMAX(p,d,q)×(P,D,Q,m) by exact state-space Gaussian MLE in
-    pure numpy — the semantically-real stand-in for the reference's
-    statsmodels slot (core/engine/models.py:113-173) in environments
-    where statsmodels cannot be installed (no package-index access,
-    README):
+    pure numpy — the reference's statsmodels slot
+    (core/engine/models.py:113-173):
 
     * the differenced series w = (1−B)^d (1−B^m)^D y follows the
       multiplicative SARMA φ(B)Φ(B^m) w = θ(B)Θ(B^m) ε, expanded by
@@ -148,10 +124,9 @@ class NumpySarimax:
       r = max(p̃, q̃+1)); the Kalman filter yields the prediction-error
       decomposition of the exact Gaussian likelihood, with σ²
       concentrated out in closed form;
-    * initialization is approximate-diffuse (κ·I) — the statsmodels
-      behavior under enforce_stationarity=False, which is exactly how
-      the upgraded twin is configured, so the two estimators share
-      their objective;
+    * initialization is approximate-diffuse (κ·I) — what statsmodels
+      SARIMAX does under enforce_stationarity=False, the setting the
+      reference fits with, so both estimators share their objective;
     * coefficients minimize the concentrated negative log-likelihood
       via the deterministic Nelder-Mead above (statsmodels uses
       L-BFGS; same optimum on these unimodal small problems, fixed
@@ -161,7 +136,7 @@ class NumpySarimax:
       reference's joint regression-with-SARIMA-errors MLE;
     * forecasts iterate the transition matrix from the last predicted
       state, integrate the differencing back stage by stage, and clip
-      at 0 — matching the upgraded slot's post-processing.
+      at 0 — the reference's post-processing.
 
     Fast path: once the covariance recursion reaches steady state
     (companion P converges), gain and innovation variance freeze and
@@ -363,7 +338,8 @@ class NumpySarimax:
         fc = self._integrate(w_fc)
         if self._beta is not None:
             if exog_future is None:
-                # match SarimaxSlot: missing forecast-window exog pads 0
+                # the reference pads missing forecast-window exog
+                # with zeros (join_exog_align's missing-month contract)
                 exog_future = np.zeros(steps)
             Xf = np.asarray(exog_future, float)
             Xf = Xf.reshape(-1, 1) if Xf.ndim == 1 else Xf
@@ -375,65 +351,6 @@ class NumpySarimax:
             "order": list(self.order),
             "seasonal_order": list(self.seasonal_order),
         }
-
-
-class HoltWinters:
-    """Additive Holt-Winters; degrades to double (no-seasonal)
-    smoothing when the series is shorter than two seasons. LEGACY: the
-    hw slot ran on this through round 5; NumpySarimax (exact
-    state-space MLE) replaced it as the no-statsmodels stand-in. Kept
-    exported — it is still a useful cheap smoother and its unit tests
-    pin the algorithm."""
-
-    name = "hw"
-
-    def __init__(self, alpha: float = 0.5, beta: float = 0.1, gamma: float = 0.1, m: int = 12):
-        self.alpha, self.beta, self.gamma, self.m = alpha, beta, gamma, m
-        self.level = 0.0
-        self.trend = 0.0
-        self.seasonal: np.ndarray | None = None
-        self._t = 0
-
-    def fit(self, y, exog=None) -> "HoltWinters":
-        y = np.asarray(y, float)
-        m = self.m
-        seasonal_ok = len(y) >= 2 * m
-        if seasonal_ok:
-            s1, s2 = y[:m].mean(), y[m : 2 * m].mean()
-            self.level = s1
-            self.trend = (s2 - s1) / m
-            # detrended seasonal init: subtract the in-season trend
-            # ramp, else the seasonal factors absorb half a season of
-            # slope and bias every forecast low
-            ramp = self.trend * (np.arange(m) - (m - 1) / 2.0)
-            self.seasonal = y[:m] - s1 - ramp
-        else:
-            self.level = float(y[0])
-            self.trend = float(y[1] - y[0]) if len(y) > 1 else 0.0
-            self.seasonal = None
-        for t, x in enumerate(y):
-            s = self.seasonal[t % m] if self.seasonal is not None else 0.0
-            prev_level = self.level
-            self.level = self.alpha * (x - s) + (1 - self.alpha) * (self.level + self.trend)
-            self.trend = self.beta * (self.level - prev_level) + (1 - self.beta) * self.trend
-            if self.seasonal is not None:
-                self.seasonal[t % m] = self.gamma * (x - self.level) + (1 - self.gamma) * s
-        self._t = len(y)
-        return self
-
-    def predict(self, steps: int, exog_future=None) -> np.ndarray:
-        out = []
-        for h in range(1, steps + 1):
-            s = (
-                self.seasonal[(self._t + h - 1) % self.m]
-                if self.seasonal is not None
-                else 0.0
-            )
-            out.append(max(0.0, self.level + h * self.trend + s))
-        return np.array(out)
-
-    def params(self) -> dict:
-        return {"alpha": self.alpha, "beta": self.beta, "gamma": self.gamma, "m": self.m}
 
 
 class _RegTree:
@@ -493,18 +410,14 @@ class _RegTree:
 
 class NumpyGBDT:
     """Gradient-boosted regression trees on lag-1..k features with
-    RECURSIVE multi-step prediction — the semantically-real stand-in
-    for the reference's CatBoost slot (models.py:206-303) in
-    environments where catboost cannot be installed: same features,
-    same recursive predict, and genuine boosting-ensemble behavior
-    (piecewise-constant response, no extrapolation beyond the training
-    range — exactly how tree models forecast) instead of the previous
-    linear-OLS approximation. Classic Friedman GBDT with squared loss,
-    depth-3 exact greedy trees, shrinkage 0.1; CatBoost's ordered
-    boosting and oblivious trees remain library-only refinements and
-    engage via the upgraded slot when catboost is importable.
-    Deterministic: no row/feature sampling, stable sorts, fixed
-    tie-breaks."""
+    RECURSIVE multi-step prediction — the reference's CatBoost slot
+    (models.py:206-303): same features, same recursive predict, and
+    genuine boosting-ensemble behavior (piecewise-constant response, no
+    extrapolation beyond the training range — exactly how tree models
+    forecast). Classic Friedman GBDT with squared loss, depth-3 exact
+    greedy trees, shrinkage 0.1; CatBoost's ordered boosting and
+    oblivious trees are not reproduced. Deterministic: no row/feature
+    sampling, stable sorts, fixed tie-breaks."""
 
     name = "laglin"  # historical slot id: the lag-feature learner
 
@@ -565,62 +478,17 @@ class NumpyGBDT:
         }
 
 
-class LagLinear:
-    """OLS on lag-1..k features, recursive multi-step prediction
-    feeding its own outputs (the reference CatBoost shape,
-    models.py:206-303). LEGACY: the laglin slot ran on this through
-    round 6; NumpyGBDT (real boosted trees) replaced it as the
-    no-catboost stand-in. Kept exported — a useful linear baseline
-    whose unit tests pin the algorithm."""
-
-    name = "laglin"
-
-    def __init__(self, lags: int = 3):
-        self.lags = lags
-        self.coef: np.ndarray | None = None
-        self._tail: np.ndarray | None = None
-
-    def fit(self, y, exog=None) -> "LagLinear":
-        y = np.asarray(y, float)
-        k = min(self.lags, max(1, len(y) - 1))
-        self.lags = k
-        rows = [
-            np.concatenate([y[t - k : t][::-1], [1.0]]) for t in range(k, len(y))
-        ]
-        X = np.array(rows)
-        t = y[k:]
-        self.coef, *_ = np.linalg.lstsq(X, t, rcond=None)
-        self._tail = y[-k:].copy()
-        return self
-
-    def predict(self, steps: int, exog_future=None) -> np.ndarray:
-        tail = list(self._tail)
-        out = []
-        for _ in range(steps):
-            feats = np.concatenate([np.array(tail[-self.lags :][::-1]), [1.0]])
-            yhat = max(0.0, float(feats @ self.coef))
-            out.append(yhat)
-            tail.append(yhat)  # recursive: feed own prediction
-        return np.array(out)
-
-    def params(self) -> dict:
-        return {"lags": self.lags}
-
-
 class NumpyLSTM:
     """Single-layer LSTM + linear head, trained by full backprop
-    through time in pure numpy — the semantically-real stand-in for
-    the reference's torch LSTM slot (models.py:310-474) in
-    environments where torch cannot be installed. Same pipeline as the
-    torch twin: min-max scale to [0,1], sliding lookback windows,
-    LSTM→Linear head, Adam on MSE, recursive multi-step forecast fed
-    its own outputs, rescale, clip at 0. Differences are documented
-    config, not structure: hidden 12 (torch twin: 64), full-batch
-    gradient steps (torch twin: sequential minibatches of 16), 60
-    epochs (100) — sized so a per-series fit stays well under a
-    second; on a cluster with torch installed the upgraded slot runs
-    the reference's exact dimensions. Deterministic: seeded
-    numpy Generator init, no shuffling, fixed float64 math."""
+    through time in pure numpy — the reference's torch LSTM slot
+    (models.py:310-474). Same pipeline: min-max scale to [0,1],
+    sliding lookback windows, LSTM→Linear head, Adam on MSE, recursive
+    multi-step forecast fed its own outputs, rescale, clip at 0.
+    Differences are documented config, not structure: hidden 12
+    (reference: 64), full-batch gradient steps (reference: sequential
+    minibatches of 16), 60 epochs (100) — sized so a per-series fit
+    stays well under a second. Deterministic: seeded numpy Generator
+    init, no shuffling, fixed float64 math."""
 
     name = "snaive"  # historical slot id: the sequence-model slot
 
@@ -755,291 +623,25 @@ class NumpyLSTM:
         }
 
 
-class SeasonalNaiveDrift:
-    """y(T+h) = y(T+h−12) (when available, else y(T)) + w·drift·h.
-    LEGACY: the snaive slot ran on this through round 6; NumpyLSTM
-    (real BPTT sequence model) replaced it as the no-torch stand-in.
-    Kept exported — still the cheapest sane baseline, pinned by its
-    unit tests."""
-
-    name = "snaive"
-
-    def __init__(self, drift_weight: float = 0.5, m: int = 12):
-        self.drift_weight, self.m = drift_weight, m
-        self._y: np.ndarray | None = None
-
-    def fit(self, y, exog=None) -> "SeasonalNaiveDrift":
-        self._y = np.asarray(y, float)
-        return self
-
-    def predict(self, steps: int, exog_future=None) -> np.ndarray:
-        y = self._y
-        drift = (y[-1] - y[0]) / max(1, len(y) - 1)
-        out = []
-        for h in range(1, steps + 1):
-            idx = len(y) + h - 1 - self.m
-            base = y[idx] if 0 <= idx < len(y) else y[-1]
-            out.append(max(0.0, base + self.drift_weight * drift * h))
-        return np.array(out)
-
-    def params(self) -> dict:
-        return {"drift_weight": self.drift_weight, "m": self.m}
-
-
-# ------------------------------------------------- upgraded slots
-# Each numpy slot has a real-library twin with the SAME fit/predict/
-# params interface; slot_factory()/slot_grid() below dispatch on the
-# HAVE_* flags so the upgrade engages transparently wherever the libs
-# exist. Library calls live inside methods (import at call time) so the
-# dispatch itself is testable with sys.modules fakes — see
-# tests/test_forecast_upgrade.py.
-
-class SarimaxSlot:
-    """statsmodels SARIMAX twin of the ``hw`` slot (reference
-    core/engine/models.py:95-173): SARIMAX(p,d,q)×(P,D,Q,12) with
-    optional exog, enforce_stationarity/invertibility False,
-    maxiter 200, forecasts clipped at 0."""
-
-    name = "hw"
-
-    def __init__(self, order=(1, 1, 1), seasonal_order=(1, 1, 1, 12)):
-        self.order = tuple(order)
-        self.seasonal_order = tuple(seasonal_order)
-        self._results = None
-
-    def fit(self, y, exog=None) -> "SarimaxSlot":
-        from statsmodels.tsa.statespace.sarimax import SARIMAX
-
-        self._results = SARIMAX(
-            np.asarray(y, float),
-            exog=None if exog is None else np.asarray(exog, float),
-            order=self.order,
-            seasonal_order=self.seasonal_order,
-            enforce_stationarity=False,
-            enforce_invertibility=False,
-        ).fit(disp=False, maxiter=200)
-        self._used_exog = exog is not None
-        return self
-
-    def predict(self, steps: int, exog_future=None) -> np.ndarray:
-        if self._used_exog and exog_future is None:
-            # reference raises when exog was trained but not supplied
-            # for the forecast window (models.py:159-161); we pad zeros
-            # to match join_exog_align's missing-month contract
-            exog_future = np.zeros(steps)
-        fc = self._results.forecast(
-            steps,
-            exog=None if exog_future is None else np.asarray(exog_future, float),
-        )
-        return np.maximum(0.0, np.asarray(fc, float))
-
-    def params(self) -> dict:
-        return {
-            "order": list(self.order),
-            "seasonal_order": list(self.seasonal_order),
-        }
-
-
-class CatBoostSlot:
-    """CatBoost twin of the ``laglin`` slot (reference
-    models.py:190-303): lag-1..k features, CatBoostRegressor with a
-    fixed seed, recursive multi-step prediction feeding its own
-    outputs — identical feature/predict shape to LagLinear."""
-
-    name = "laglin"
-
-    def __init__(self, lag_features: int = 3, iterations: int = 100):
-        self.lag_features = lag_features
-        self.iterations = iterations
-        self._model = None
-        self._tail: np.ndarray | None = None
-
-    def fit(self, y, exog=None) -> "CatBoostSlot":
-        from catboost import CatBoostRegressor
-
-        y = np.asarray(y, float)
-        k = min(self.lag_features, max(1, len(y) - 1))
-        self.lag_features = k
-        X = np.array([y[t - k : t][::-1] for t in range(k, len(y))])
-        self._model = CatBoostRegressor(
-            iterations=self.iterations, random_seed=42, verbose=0
-        )
-        self._model.fit(X, y[k:])
-        self._tail = y[-k:].copy()
-        return self
-
-    def predict(self, steps: int, exog_future=None) -> np.ndarray:
-        tail = list(self._tail)
-        out = []
-        for _ in range(steps):
-            feats = np.array(tail[-self.lag_features :][::-1]).reshape(1, -1)
-            yhat = max(0.0, float(np.asarray(self._model.predict(feats)).ravel()[0]))
-            out.append(yhat)
-            tail.append(yhat)
-        return np.array(out)
-
-    def params(self) -> dict:
-        return {"lag_features": self.lag_features, "iterations": self.iterations}
-
-
-def _lstm_fit_forecast(
-    y: np.ndarray,
-    steps: int,
-    lookback: int = 12,
-    hidden_size: int = 64,
-    epochs: int = 100,
-    batch_size: int = 16,
-) -> np.ndarray:
-    """All torch code for the LSTM slot in one function (reference
-    models.py:310-474): min-max scale, sliding-window dataset,
-    LSTM→Linear head, Adam/MSE training, recursive forecast. Seeded
-    torch.manual_seed(42) for determinism. Kept separate so the slot's
-    dispatch/plumbing is testable without faking torch's autograd."""
-    import torch
-    from torch import nn
-
-    torch.manual_seed(42)
-    y = np.asarray(y, float)
-    lo, hi = float(y.min()), float(y.max())
-    scale = (hi - lo) or 1.0
-    ys = (y - lo) / scale
-    lb = min(lookback, max(1, len(ys) - 1))
-    X = np.array([ys[i : i + lb] for i in range(len(ys) - lb)])
-    t = ys[lb:]
-
-    class Net(nn.Module):
-        def __init__(self) -> None:
-            super().__init__()
-            self.lstm = nn.LSTM(1, hidden_size, batch_first=True)
-            self.head = nn.Linear(hidden_size, 1)
-
-        def forward(self, x):
-            out, _ = self.lstm(x)
-            return self.head(out[:, -1, :])
-
-    net = Net()
-    opt = torch.optim.Adam(net.parameters(), lr=0.01)
-    loss_fn = nn.MSELoss()
-    Xt = torch.tensor(X, dtype=torch.float32).unsqueeze(-1)
-    tt = torch.tensor(t, dtype=torch.float32).unsqueeze(-1)
-    for _ in range(epochs):
-        for i in range(0, len(Xt), batch_size):
-            opt.zero_grad()
-            loss = loss_fn(net(Xt[i : i + batch_size]), tt[i : i + batch_size])
-            loss.backward()
-            opt.step()
-    window = list(ys[-lb:])
-    out = []
-    with torch.no_grad():
-        for _ in range(steps):
-            x = torch.tensor(window[-lb:], dtype=torch.float32).reshape(1, lb, 1)
-            yhat = float(net(x).ravel()[0])
-            out.append(yhat)
-            window.append(yhat)
-    return np.maximum(0.0, np.array(out) * scale + lo)
-
-
-class LSTMSlot:
-    """torch-LSTM twin of the ``snaive`` slot (reference
-    models.py:310-474). fit() stores the series; predict() trains and
-    forecasts via _lstm_fit_forecast (fit-at-predict is fine for the
-    per-series applyInPandas shape — each series trains exactly once)."""
-
-    name = "snaive"
-
-    def __init__(self, lookback: int = 12, hidden_size: int = 64, epochs: int = 100, batch_size: int = 16):
-        self.lookback = lookback
-        self.hidden_size = hidden_size
-        self.epochs = epochs
-        self.batch_size = batch_size
-        self._y: np.ndarray | None = None
-
-    def fit(self, y, exog=None) -> "LSTMSlot":
-        self._y = np.asarray(y, float)
-        return self
-
-    def predict(self, steps: int, exog_future=None) -> np.ndarray:
-        return _lstm_fit_forecast(
-            self._y,
-            steps,
-            lookback=self.lookback,
-            hidden_size=self.hidden_size,
-            epochs=self.epochs,
-            batch_size=self.batch_size,
-        )
-
-    def params(self) -> dict:
-        return {
-            "lookback": self.lookback,
-            "hidden_size": self.hidden_size,
-            "epochs": self.epochs,
-            "batch_size": self.batch_size,
-        }
-
-
-# deterministic grids for the upgraded slots: fixed-order subsets of
-# the reference's Optuna search spaces (trainer.py:217-222 SARIMAX
-# p,d,q∈[0,2] D∈[0,1]; :275-276 catboost; :330-332 lstm), small enough
-# for grid search to stand in for 50 seeded TPE trials
-UPGRADED_GRIDS: dict[str, list[dict]] = {
+# deterministic tuning grids (fixed trial order — the seeded-Optuna
+# equivalent): fixed-order subsets of the reference's search spaces
+# (trainer.py:217-222 SARIMAX p,d,q∈[0,2] D∈[0,1]; :275-276 catboost
+# lags; :330-332 lstm lookback), small enough for grid search to stand
+# in for 50 seeded TPE trials
+GRIDS: dict[str, list[dict]] = {
     "hw": [
         {"order": (1, 1, 1), "seasonal_order": (1, 1, 1, 12)},
         {"order": (0, 1, 1), "seasonal_order": (0, 1, 1, 12)},
         {"order": (2, 1, 2), "seasonal_order": (1, 1, 0, 12)},
         {"order": (1, 0, 0), "seasonal_order": (1, 0, 1, 12)},
     ],
-    "laglin": [
-        {"lag_features": k, "iterations": n} for k in (2, 3, 6) for n in (100, 200)
-    ],
-    "snaive": [
-        {"lookback": lb, "hidden_size": h, "epochs": 100}
-        for lb in (6, 12)
-        for h in (32, 64)
-    ],
-}
-
-_UPGRADES: dict[str, tuple[str, type]] = {
-    # slot id -> (HAVE_* flag name, upgraded class)
-    "hw": ("HAVE_STATSMODELS", SarimaxSlot),
-    "laglin": ("HAVE_CATBOOST", CatBoostSlot),
-    "snaive": ("HAVE_TORCH", LSTMSlot),
-}
-
-
-def _upgraded(name: str) -> bool:
-    flag, _ = _UPGRADES[name]
-    return bool(globals()[flag])
-
-
-def slot_factory(name: str) -> type:
-    """The class backing a slot in THIS environment: the real-library
-    twin when importable, the numpy stand-in otherwise."""
-    if _upgraded(name):
-        return _UPGRADES[name][1]
-    return _FACTORY[name]
-
-
-def slot_grid(name: str) -> list[dict]:
-    """The tuning grid matching slot_factory(name)'s constructor."""
-    if _upgraded(name):
-        return UPGRADED_GRIDS[name]
-    return GRIDS[name]
-
-
-# deterministic tuning grids (fixed trial order — the seeded-Optuna
-# equivalent; reference search spaces at trainer.py:199-330)
-GRIDS: dict[str, list[dict]] = {
-    # the hw slot IS a SARIMAX family now (NumpySarimax), so its grid
-    # is the same order grid the statsmodels twin searches — slot and
-    # grid stay constructor-compatible whichever backend engages
-    "hw": UPGRADED_GRIDS["hw"],
     "laglin": [{"lags": k} for k in (2, 3, 6, 12)],
-    # the snaive slot IS a sequence model now (NumpyLSTM): the grid
-    # mirrors the torch twin's lookback search at the numpy config
     "snaive": [{"lookback": lb} for lb in (6, 12)],
 }
 
-_FACTORY = {
+# the class behind each slot id; every GRIDS entry is a keyword set of
+# its constructor
+SLOTS: dict[str, type] = {
     "hw": NumpySarimax,
     "laglin": NumpyGBDT,
     "snaive": NumpyLSTM,
@@ -1049,16 +651,14 @@ _FACTORY = {
 def tune_model(name: str, y: np.ndarray, test_months: int = TEST_MONTHS, exog=None):
     """Grid search one family: fit on train, score test RMSE, first
     minimum wins (deterministic trial order). Failed fits score inf
-    (reference trainer.py failed-trial → inf). The grid and factory
-    come from slot_grid/slot_factory, so the same call tunes the real
-    SARIMAX/CatBoost/LSTM families wherever their libraries exist."""
+    (reference trainer.py failed-trial → inf)."""
     train, test = temporal_split(y, test_months)
     ex_train, ex_test = _split_exog(exog, len(train))
-    grid = slot_grid(name)
+    grid = GRIDS[name]
     best_params, best_rmse = None, math.inf
     for params in grid:
         try:
-            model = slot_factory(name)(**params).fit(train, exog=ex_train)
+            model = SLOTS[name](**params).fit(train, exog=ex_train)
             score = rmse(model.predict(len(test), exog_future=ex_test), test)
         except Exception:
             score = math.inf
@@ -1103,7 +703,7 @@ def forecast_with_champion(
     When exog is given and exog_future is not, the forecast window pads
     zeros (the reference pads missing exog months with zeros)."""
     result = select_champion(y, test_months, exog=exog)
-    model = slot_factory(result.champion)(**result.champion_params).fit(y, exog=exog)
+    model = SLOTS[result.champion](**result.champion_params).fit(y, exog=exog)
     if exog is not None and exog_future is None:
         exog_future = np.zeros(steps)
     fc = model.predict(steps, exog_future=exog_future)

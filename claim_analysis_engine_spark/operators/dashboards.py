@@ -189,9 +189,9 @@ def ep3_forecast_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "status", "priority", "h", "yhat", "ci_lo", "ci_hi", "model"
                 ]
             )
-        # exog rides along: the numpy slots ignore it; the SARIMAX slot
-        # consumes it when statsmodels is available (zeros pad the
-        # 3-month forecast window, matching join_exog_align's contract)
+        # exog rides along: the SARIMAX slot regresses on it two-step,
+        # the GBDT and LSTM slots ignore it (zeros pad the 3-month
+        # forecast window, matching join_exog_align's contract)
         exog = pdf["exog"].to_numpy(dtype=float)
         model, params, fc, test_rmse = fm.forecast_with_champion(y, steps=3, exog=exog)
         lo, hi = fm.confidence_interval(fc, test_rmse)

@@ -686,7 +686,7 @@ def _ep14_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         y = pdf["n"].to_numpy(dtype=float)
         name = pdf["model"].iloc[0]
         params, test_rmse = fm.tune_model(name, y)
-        model = fm.slot_factory(name)(**params).fit(y)
+        model = fm.SLOTS[name](**params).fit(y)
         fc = model.predict(H)
         lo, hi = fm.confidence_interval(fc, test_rmse)
         return pd.DataFrame(

@@ -326,9 +326,9 @@ def src_parquet_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_excel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Excel scan (reference pd.read_excel, core/etl.py:39-40): write
-    the nation table to a real .xlsx (zip-of-XML, built-in writer —
-    no openpyxl in this environment), read it back through the Excel
-    source, and re-type the string columns. Values must round-trip."""
+    the nation table to a real .xlsx (zip-of-XML, stdlib-only writer),
+    read it back through the Excel source, and re-type the string
+    columns. Values must round-trip."""
     import os
 
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")

@@ -12,10 +12,9 @@ Split of responsibilities:
   series via tables.fanout_apply (pack each series to one row →
   round-robin → mapInPandas; see that docstring for why plain
   groupBy().applyInPandas serializes under AQE) — embarrassingly
-  parallel, model fitting on ≤ |months| points per group. The numpy
-  slots are semantically REAL (exact SARIMAX MLE, Friedman GBDT,
-  BPTT LSTM); the library twins engage automatically when importable
-  (forecast_models.HAVE_*).
+  parallel, model fitting on ≤ |months| points per group. Each slot
+  is one numpy class (forecast_models.SLOTS), semantically REAL:
+  exact SARIMAX MLE, Friedman GBDT, BPTT LSTM.
 
 Scale shape: identical to the reference's intent — the fact table
 collapses to (keys × months) BEFORE any Python runs; a 1000-executor
@@ -254,7 +253,7 @@ def _forecast_op(model_name: str):
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             y = _series_pdf_to_values(pdf)
             params, test_rmse = fm.tune_model(model_name, y)
-            model = fm.slot_factory(model_name)(**params).fit(y)
+            model = fm.SLOTS[model_name](**params).fit(y)
             fc = model.predict(HORIZON)
             lo, hi = fm.confidence_interval(fc, test_rmse)
             return pd.DataFrame(
@@ -283,9 +282,8 @@ def ml_sarimax(spark: SparkSession, sf_dir: str) -> DataFrame:
     SARIMAX(p,d,q)×(P,D,Q,12) per series via applyInPandas —
     Kalman-filter Gaussian MLE in pure numpy (fm.NumpySarimax,
     CSS-searched then exact-likelihood-polished, the R arima CSS-ML
-    strategy); upgrades to statsmodels SARIMAX when importable
-    (fm.HAVE_STATSMODELS) with the same order grid. Tuned on the
-    last-3-month split, CI = ±1.96·RMSE."""
+    strategy). Tuned on the last-3-month split over the order grid
+    fm.GRIDS["hw"], CI = ±1.96·RMSE."""
     return _forecast_op("hw")(spark, sf_dir)
 
 
@@ -296,8 +294,7 @@ def ml_catboost(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fm.NumpyGBDT — Friedman GBDT, depth-3 exact greedy, shrinkage
     0.1, deterministic) with RECURSIVE multi-step prediction feeding
     its own outputs — the exact feature/predict shape of the
-    reference; CatBoost's ordered-boosting refinements engage when the
-    library is importable."""
+    reference."""
     return _forecast_op("laglin")(spark, sf_dir)
 
 
@@ -306,10 +303,9 @@ def ml_lstm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-model slot (reference torch LSTM, models.py:310-474):
     a real single-layer LSTM trained by full numpy backprop through
     time (fm.NumpyLSTM — same scale/window/recursive-predict pipeline
-    as the torch twin at a smaller documented config; gradients
-    verified against numerical differentiation). Upgrades to the torch
-    LSTM when importable. Clip-at-zero predictions mirror the
-    reference's post-processing."""
+    as the reference's torch model at a smaller documented config;
+    gradients verified against numerical differentiation). Clip-at-zero
+    predictions mirror the reference's post-processing."""
     return _forecast_op("snaive")(spark, sf_dir)
 
 

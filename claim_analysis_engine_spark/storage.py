@@ -351,8 +351,8 @@ def util_clear(path: str, *, confirm: bool = False) -> bool:
 # parts; a single sheet with inline strings needs four fixed parts plus
 # the sheet. Enough for the reference's ingestion (core/etl.py:39-40)
 # and download-card export (app.py:509-516) surfaces — both small,
-# driver-side datasets. When openpyxl/pandas-excel IS available the
-# same functions prefer it (richer type handling).
+# driver-side datasets. This is the only Excel path: every cell lands
+# as a string, and the canonical layer types it (same contract as CSV).
 
 _XLSX_STATIC = {
     "[Content_Types].xml": (
@@ -414,8 +414,25 @@ def xlsx_write_rows(path: str, header: list[str], rows: list[tuple]) -> None:
         z.writestr("xl/worksheets/sheet1.xml", sheet)
 
 
+def _xlsx_col(ref: str) -> int:
+    """0-based column index of a cell reference ("C2" -> 2, "AB7" -> 27)."""
+    col = 0
+    for ch in ref:
+        if not ch.isalpha():
+            break
+        col = col * 26 + ord(ch.upper()) - 64
+    return col - 1
+
+
 def xlsx_read_rows(path: str) -> tuple[list[str], list[tuple]]:
-    """Read the first sheet of an .xlsx (inline or shared strings)."""
+    """Read the first sheet of an .xlsx (inline or shared strings).
+
+    Excel omits empty cells and skipped rows, and marks each written cell
+    with its reference (``r="C2"``). A cell lands in the column its
+    reference names (a cell without one follows the previous cell), and
+    every data row is padded to the header's width with None. A skipped
+    row yields no tuple. An empty header cell is named ``Unnamed: <i>``,
+    as pandas names it."""
     import xml.etree.ElementTree as ET
     import zipfile
 
@@ -426,37 +443,43 @@ def xlsx_read_rows(path: str) -> tuple[list[str], list[tuple]]:
             root = ET.fromstring(z.read("xl/sharedStrings.xml"))
             shared = ["".join(t.text or "" for t in si.iter(f"{ns}t")) for si in root]
         sheet = ET.fromstring(z.read("xl/worksheets/sheet1.xml"))
-        out: list[tuple] = []
+        out: list[list] = []
         for row in sheet.iter(f"{ns}row"):
-            cells = []
+            cells: list = []
             for c in row.iter(f"{ns}c"):
+                ref = c.get("r")
+                col = _xlsx_col(ref) if ref else len(cells)
                 if c.get("t") == "inlineStr":
-                    cells.append("".join(t.text or "" for t in c.iter(f"{ns}t")))
+                    value = "".join(t.text or "" for t in c.iter(f"{ns}t"))
                 elif c.get("t") == "s":
                     v = c.find(f"{ns}v")
-                    cells.append(shared[int(v.text)] if v is not None else "")
+                    value = shared[int(v.text)] if v is not None else ""
                 else:
                     v = c.find(f"{ns}v")
-                    cells.append(v.text if v is not None else None)
-            out.append(tuple(cells))
-    header = [str(h) for h in out[0]] if out else []
-    return header, out[1:]
+                    value = v.text if v is not None else None
+                cells.extend([None] * (col + 1 - len(cells)))
+                cells[col] = value
+            out.append(cells)
+    if not out:
+        return [], []
+    header = [f"Unnamed: {i}" if h is None else str(h) for i, h in enumerate(out[0])]
+    rows = []
+    for cells in out[1:]:
+        if len(cells) > len(header):
+            raise ValueError(
+                f"{path}: a data cell lies right of the header's "
+                f"{len(header)} columns"
+            )
+        rows.append(tuple(cells + [None] * (len(header) - len(cells))))
+    return header, rows
 
 
-def read_excel(spark: SparkSession, path: str, sheet_name: int | str = 0) -> DataFrame:
-    """Excel source (reference pd.read_excel, core/etl.py:39-40):
-    pandas/openpyxl bridge when available, else the built-in minimal
-    xlsx reader. All columns land as strings — the canonical layer
-    types them (same contract as CSV)."""
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
-
-        pdf = pd.read_excel(path, sheet_name=sheet_name, dtype=str)
-        return spark.createDataFrame(pdf)
-    except ImportError:
-        header, rows = xlsx_read_rows(path)
-        return spark.createDataFrame(rows, schema=", ".join(f"`{h}` string" for h in header))
+def read_excel(spark: SparkSession, path: str) -> DataFrame:
+    """Excel source (reference pd.read_excel, core/etl.py:39-40) via
+    the built-in xlsx reader above. All columns land as strings — the
+    canonical layer types them (same contract as CSV)."""
+    header, rows = xlsx_read_rows(path)
+    return spark.createDataFrame(rows, schema=", ".join(f"`{h}` string" for h in header))
 
 
 def write_excel(df: DataFrame, path: str) -> None:

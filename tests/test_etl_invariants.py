@@ -207,6 +207,33 @@ def test_conf_is_set_only_through_pinned_conf():
     ]
     assert not offenders, f"conf set outside tables.pinned_conf: {offenders}"
 
+
+def test_no_optional_import_fallback():
+    """Every result comes from one implementation, whatever a host has
+    installed: no package module may switch code paths on an import
+    probe, i.e. catch ``ImportError``/``ModuleNotFoundError`` or call
+    ``importlib.util.find_spec``."""
+    import ast
+    import pathlib
+
+    import claim_analysis_engine_spark as pkg
+
+    probes = {"ImportError", "ModuleNotFoundError"}
+    offenders = []
+    for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.ExceptHandler) and node.type is not None:
+                caught = {n.id for n in ast.walk(node.type) if isinstance(n, ast.Name)}
+                if caught & probes:
+                    offenders.append(f"{p.name}:{node.lineno}")
+            elif isinstance(node, (ast.Attribute, ast.Name)) and (
+                getattr(node, "attr", None) == "find_spec"
+                or getattr(node, "id", None) == "find_spec"
+            ):
+                offenders.append(f"{p.name}:{node.lineno}")
+    assert not offenders, f"optional-import fallback: {offenders}"
+
+
 def test_bench_exclusion_ledger_is_consistent_with_the_registry():
     """The BENCH_DETAIL `excluded` map (r11 verdict ask) must stay
     honest: every excluded id is a real registered op, no excluded op

@@ -23,42 +23,9 @@ def test_confidence_interval_clips_at_zero():
     assert hi[0] == pytest.approx(1.0 + 1.96 * 2.0)
 
 
-def test_holtwinters_tracks_trend_and_season():
-    # strong seasonal pattern + slope: HW should forecast near the
-    # next season's values
-    t = np.arange(48)
-    y = 10 + 0.5 * t + 5 * np.sin(2 * np.pi * t / 12)
-    model = fm.HoltWinters(alpha=0.5, beta=0.1, gamma=0.1).fit(y)
-    fc = model.predict(3)
-    truth = 10 + 0.5 * (t[-1] + np.arange(1, 4)) + 5 * np.sin(
-        2 * np.pi * (t[-1] + np.arange(1, 4)) / 12
-    )
-    assert np.allclose(fc, truth, atol=3.0)
-
-
-def test_laglinear_recovers_ar_process():
-    # y_t = 0.5 y_{t-1} + 4 exactly → OLS must recover it and predict
-    # the fixed-point trajectory
-    y = [8.0]
-    for _ in range(40):
-        y.append(0.5 * y[-1] + 4)
-    model = fm.LagLinear(lags=2).fit(np.array(y))
-    fc = model.predict(3)
-    expect = [0.5 * y[-1] + 4]
-    expect.append(0.5 * expect[-1] + 4)
-    expect.append(0.5 * expect[-1] + 4)
-    assert np.allclose(fc, expect, atol=1e-6)
-
-
-def test_snaive_uses_last_season():
-    y = np.array([1.0, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12] * 3)
-    model = fm.SeasonalNaiveDrift(drift_weight=0.0).fit(y)
-    assert list(model.predict(3)) == [1.0, 2.0, 3.0]
-
-
 def test_predictions_never_negative():
     y = np.array([3.0, 2, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0] * 3)
-    for name, cls in fm._FACTORY.items():
+    for name, cls in fm.SLOTS.items():
         fc = cls().fit(y).predict(6)
         assert (fc >= 0).all(), name
 

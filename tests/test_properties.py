@@ -83,7 +83,7 @@ def test_models_finite_and_nonnegative(values, steps):
     (simple-differencing deviation, documented in NumpySarimax);
     silent garbage is the only failure mode this property forbids."""
     y = np.asarray(values)
-    for name, cls in fm._FACTORY.items():
+    for name, cls in fm.SLOTS.items():
         try:
             fc = cls().fit(y).predict(steps)
         except ValueError:

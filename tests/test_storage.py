@@ -459,8 +459,8 @@ def test_util_clear_guards(tmp_path):
 
 
 def test_excel_round_trip(spark):
-    # built-in zip-of-XML xlsx path (no openpyxl in this environment);
-    # values — including special XML characters — must round-trip
+    # the zip-of-XML xlsx writer and reader; values — including special
+    # XML characters — must round-trip
     out = os.path.join(tempfile.mkdtemp(), "t.xlsx")
     df = spark.createDataFrame(
         [("a", "1"), ("b & <c>", "2"), ("유형", "3")], "name string, v string"
@@ -481,6 +481,67 @@ def test_xlsx_helpers_low_level(tmp_path):
     header, rows = storage.xlsx_read_rows(p)
     assert header == ["h1", "h2"]
     assert rows == [("r1", ""), ("r2", "v")]
+
+
+_EXCEL_HEADER_ROW = (
+    '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c>'
+    '<c r="C1" t="s"><v>2</v></c></row>'
+)
+
+
+def _hand_built_xlsx(path: str, rows_xml: str) -> None:
+    """A workbook as Excel writes it: a shared-strings table and the
+    given sheet rows, whose cells carry their references."""
+    import zipfile
+
+    main = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    strings = ["상담번호", "플랜트", "수량", "C001", "P2"]
+    shared = f'<sst xmlns="{main}">' + "".join(
+        f"<si><t>{t}</t></si>" for t in strings
+    ) + "</sst>"
+    sheet = f'<worksheet xmlns="{main}"><sheetData>{rows_xml}</sheetData></worksheet>'
+    with zipfile.ZipFile(path, "w") as z:
+        for name, content in storage._XLSX_STATIC.items():
+            z.writestr(name, content)
+        z.writestr("xl/sharedStrings.xml", shared)
+        z.writestr("xl/worksheets/sheet1.xml", sheet)
+
+
+def test_xlsx_reader_places_cells_by_reference(spark, tmp_path):
+    """Excel omits empty cells and skipped rows. Omitted cells must not
+    shift later cells left: C2's quantity stays under 수량 and B4's
+    plant under 플랜트, every row is padded to the header's width, the
+    skipped row 3 yields no row, and cells without a reference follow
+    the previous cell. A cell right of the header is refused."""
+    p = str(tmp_path / "excel_written.xlsx")
+    _hand_built_xlsx(
+        p,
+        _EXCEL_HEADER_ROW
+        + '<row r="2"><c r="A2" t="s"><v>3</v></c><c r="C2"><v>7</v></c></row>'
+        '<row r="4"><c r="B4" t="s"><v>4</v></c></row>'
+        '<row r="5"><c t="inlineStr"><is><t>C009</t></is></c>'
+        '<c t="inlineStr"><is><t>P9</t></is></c></row>',
+    )
+    header, rows = storage.xlsx_read_rows(p)
+    assert header == ["상담번호", "플랜트", "수량"]
+    assert rows == [("C001", None, "7"), (None, "P2", None), ("C009", "P9", None)]
+    back = storage.read_excel(spark, p)
+    assert back.columns == header
+    assert [tuple(r) for r in back.collect()] == rows
+
+    _hand_built_xlsx(p, _EXCEL_HEADER_ROW + '<row r="2"><c r="D2"><v>1</v></c></row>')
+    with pytest.raises(ValueError, match="right of the header"):
+        storage.xlsx_read_rows(p)
+
+    # empty header cells get pandas' names, so two gaps stay distinct
+    _hand_built_xlsx(
+        p,
+        '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="C1" t="s"><v>2</v></c>'
+        '<c r="E1" t="s"><v>1</v></c></row><row r="2"><c r="E2" t="s"><v>4</v></c></row>',
+    )
+    header, rows = storage.xlsx_read_rows(p)
+    assert header == ["상담번호", "Unnamed: 1", "수량", "Unnamed: 3", "플랜트"]
+    assert rows == [(None, None, None, None, "P2")]
 
 
 def test_mart_diff_exercises_all_change_classes(spark):

@@ -24,9 +24,9 @@ failure mode this test exists to catch.
 
 Re-derived in round 6: the hw slot changed from the Holt-Winters
 smoother to NumpySarimax (exact state-space SARIMAX MLE — the
-semantically-real stand-in for the reference's statsmodels family),
-and its grid changed from 12 smoothing triples to the same 4-order
-grid the statsmodels twin searches. The sparse-bursts golden was
+reference's statsmodels family in numpy), and its grid changed from
+12 smoothing triples to 4 SARIMAX orders drawn from the reference's
+search space. The sparse-bursts golden was
 unaffected (both slots fit exact periodicity at RMSE 0); the other two
 moved because SARIMAX fits the deterministic seasonal+trend series
 exactly (RMSE 0, now champion by the name tie-break) and scores
@@ -108,7 +108,7 @@ def test_grid_is_the_declared_search_space():
     """The deviation is 'exhaustive over THIS grid' — freeze the grid
     cardinalities so a silent grid edit re-derives the goldens."""
     assert {name: len(g) for name, g in fm.GRIDS.items()} == {
-        "hw": 4,  # the 4 SARIMAX orders — same grid as the statsmodels twin
+        "hw": 4,  # 4 SARIMAX orders from the reference's search space
         "laglin": 4,  # lags 2, 3, 6, 12
         "snaive": 2,  # LSTM lookbacks 6, 12
     }
