@@ -1,12 +1,15 @@
 """Canonical ETL chain (reference core/etl.py): canonicalizing
 projection to the 54-field contract, cascade date parsing, reception-
 date assembly, keep-last dedup with an explicit sequence, and lag
-derivation. Pure Column transformations — composable with any source.
+derivation.
 
-Every step is declarative DataFrame API, so Catalyst prunes unused
-canonical columns right back out when a downstream query only reads a
-few — canonicalizing to 54 columns costs nothing at scan time unless
-all 54 are consumed.
+``canonicalize`` and the date helpers are pure Column transformations,
+composable with any source: Catalyst prunes unused canonical columns
+right back out when a downstream query only reads a few, so
+canonicalizing to 54 columns costs nothing at scan time unless all 54
+are consumed. ``preprocess`` ends the chain in ONE materialization (a
+``localCheckpoint``): an upload's consumers -- the hub merge, the mart
+refresh -- read the prepared batch, never its source again.
 """
 
 from __future__ import annotations
@@ -20,19 +23,23 @@ from claim_analysis_engine_spark.config import CANONICAL_COLS, KOREAN_TO_ASCII
 
 def canonicalize(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Reindex any input frame to exactly the 54 canonical columns
-    (reference extract_54_fields, core/etl.py:50-71): Korean source
-    names map through the alias table, missing fields become typed
-    nulls, extra columns are dropped. 1 row in = 1 row out. ``keep``
-    names passthrough metadata columns (e.g. an ingest load_seq) to
-    carry alongside the canonical 54."""
-    renamed = df
-    for kr, en in KOREAN_TO_ASCII.items():
-        if kr in df.columns:
-            renamed = renamed.withColumnRenamed(kr, en)
-    present = set(renamed.columns)
-    return renamed.select(
+    (reference extract_54_fields, core/etl.py:50-71) in one projection:
+    each field reads its Korean source name or its ASCII name, missing
+    fields become typed nulls, extra columns are dropped. 1 row in = 1
+    row out. ``keep`` names passthrough metadata columns (e.g. an
+    ingest load_seq) to carry alongside the canonical 54.
+
+    An input holding a field under BOTH names is refused with a
+    ValueError: which of the two the user meant is not knowable."""
+    present = set(df.columns)
+    both = [f"{kr}/{en}" for kr, en in KOREAN_TO_ASCII.items() if kr in present and en in present]
+    if both:
+        raise ValueError(f"input holds both the Korean and the ASCII name of: {', '.join(both)}")
+    source = {c: c for c in CANONICAL_COLS if c in present}
+    source.update({en: kr for kr, en in KOREAN_TO_ASCII.items() if kr in present})
+    return df.select(
         *[
-            (F.col(c).cast("string") if c in present else F.lit(None).cast("string")).alias(c)
+            (F.col(source[c]).cast("string") if c in source else F.lit(None).cast("string")).alias(c)
             for c in CANONICAL_COLS
         ],
         *[F.col(c) for c in keep],
@@ -75,9 +82,13 @@ def preprocess(df: DataFrame, load_seq: str | None = None) -> DataFrame:
     4. cascade-parse manufacture_date / expiry_date;
     5. lag_days = reception − manufacture (days); lag_valid = both
        present AND lag ≥ 0 — invalid rows are FLAGGED, never dropped;
-    6. coerce partition ints reception_year/month, backfilled from
-       reception_date only when the source column is entirely null
-       (reference core/etl.py:270-277 all-NaN backfill).
+    6. coerce partition ints reception_year/month (the reference's
+       all-NaN backfill from reception_date, core/etl.py:270-277, can
+       only ever yield nulls — see below).
+
+    The chain runs ONCE, here: the result is a ``localCheckpoint`` (one
+    Spark action over the source), so every consumer of the batch reads
+    the materialized rows, never the source again.
     """
     out = df.withColumn("claim_id", F.trim("claim_id")).where(
         F.col("claim_id").isNotNull() & (F.col("claim_id") != "")
@@ -109,26 +120,11 @@ def preprocess(df: DataFrame, load_seq: str | None = None) -> DataFrame:
         & (lag >= 0),
     )
 
-    # partition ints; backfill from reception_date only when the whole
-    # source column is null (global 1-row aggregate, broadcast back)
-    counts = out.agg(
-        F.count("reception_year").alias("_n_year"),
-        F.count("reception_month").alias("_n_month"),
-    )
-    out = (
-        out.crossJoin(F.broadcast(counts))
-        .withColumn(
-            "reception_year",
-            F.when(
-                F.col("_n_year") == 0, F.year("reception_date")
-            ).otherwise(F.col("reception_year").cast("int")),
-        )
-        .withColumn(
-            "reception_month",
-            F.when(
-                F.col("_n_month") == 0, F.month("reception_date")
-            ).otherwise(F.col("reception_month").cast("int")),
-        )
-        .drop("_n_year", "_n_month")
-    )
-    return out
+    # partition ints. The reference back-derives a wholly missing
+    # year/month column from reception_date (core/etl.py:270-277), but
+    # reception_date is assembled from these very columns: where one is
+    # wholly null, every reception_date is null too, so the derivation
+    # yields exactly the nulls the cast gives.
+    return out.withColumns({
+        c: F.col(c).cast("int") for c in ("reception_year", "reception_month")
+    }).localCheckpoint()

@@ -317,9 +317,11 @@ def ep1_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     check proves the 1998 overlap rows were REPLACED by batch 2 and
     everything else survived — the upsert contract, not just a write.
 
-    Scale: merge_upsert scans only the partitions batch 2 touches
-    (left-semi on a broadcast key set) and rewrites only those
-    directories — the reference's full-hub rewrite cliff never occurs."""
+    Scale: merge_upsert reads the whole hub's claim_id column only,
+    reads in full just the directories batch 2 touches or whose claims
+    it re-uploads (named by a small driver-side manifest, read by path), and
+    rewrites only those — the reference's full-hub rewrite cliff never
+    occurs."""
     from claim_analysis_engine_spark.tmputil import fresh_dir as _fresh_dir
 
     from claim_analysis_engine_spark import storage

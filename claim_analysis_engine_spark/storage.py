@@ -4,10 +4,12 @@ the nested series mart, JSON/Excel sinks, and guarded store cleanup.
 
 Key scalability inversion vs the reference: the reference rewrites the
 ENTIRE hub on every upload (core/storage.py:94-130 full-load → concat
-→ rewrite — its documented cliff). Here the merge-upsert unions only
-against the hub partitions the new batch touches, and the write pins
-dynamic partition overwrite at the write site so untouched
-(year, month) directories are never rewritten — on ANY session.
+→ rewrite — its documented cliff). Here the merge-upsert reads in full
+only the partition directories it rewrites (the batch's months and the
+months that hold one of its claim ids), named by a small driver-side
+manifest, and the write pins dynamic partition overwrite at the write site so
+untouched (year, month) directories are never rewritten — on ANY
+session. Every hub write leaves one file per (year, month) directory.
 
 The series mart reads the hub in one scan and builds every document in
 three aggregations (cell → child → parent), zero-filling the month
@@ -33,6 +35,7 @@ HUB_PARTITIONS = list(PARTITION_COLS)
 
 _OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 _AQE_KEY = "spark.sql.adaptive.enabled"
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _collect_small(df: DataFrame) -> list:
@@ -50,11 +53,31 @@ def _collect_small(df: DataFrame) -> list:
 def write_hub(df: DataFrame, hub_path: str) -> None:
     """Partitioned hub write → <hub>/reception_year=YYYY/reception_month=MM/
     (reference ds.write_dataset with DirectoryPartitioning,
-    core/storage.py:47-69). Dynamic partition overwrite is pinned at
-    the write site, so only partitions present in ``df`` are replaced
-    regardless of how the caller's session was configured."""
+    core/storage.py:47-69), one file per directory. Dynamic partition
+    overwrite is pinned at the write site, so only partitions present
+    in ``df`` are replaced regardless of how the caller's session was
+    configured.
+
+    The rows are re-clustered on the partition keys first: straight
+    from any other shuffle, EVERY task holds rows of EVERY (year,
+    month) and the sink writes tasks × dirs files (the small-file
+    explosion snk_compaction exists to clean up). One exchange makes
+    each directory the product of exactly one task. (AQE may coalesce
+    the exchange when volumes are small; coalesced buckets keep whole
+    (year, month) groups together, so the one-file-per-dir property
+    survives.)"""
     with pinned_conf(df.sparkSession, _OVERWRITE_MODE_KEY, "dynamic"):
-        df.write.partitionBy(*HUB_PARTITIONS).mode("overwrite").parquet(hub_path)
+        df.repartition(*HUB_PARTITIONS).write.partitionBy(*HUB_PARTITIONS).mode(
+            "overwrite"
+        ).parquet(hub_path)
+
+
+def _partition_dir(hub_path: str, key: tuple) -> Path:
+    """The directory of one (year, month) hub partition; a null key is
+    Hive's default partition name, as the partitioned writer spells it."""
+    return Path(hub_path).joinpath(*(
+        f"{c}={_NULL_PARTITION if v is None else v}" for c, v in zip(HUB_PARTITIONS, key)
+    ))
 
 
 def read_hub(
@@ -78,39 +101,50 @@ def merge_upsert(
     spark: SparkSession, hub_path: str, new_batch: DataFrame, load_seq: str = "load_seq"
 ) -> None:
     """Hub merge-upsert with keep-last semantics (reference
-    core/storage.py:94-130): union the new batch against ONLY the hub
-    partitions it touches, window-dedup per claim_id ordered by
-    ``load_seq`` (new batch must carry a higher seq than stored rows),
-    rewrite just those partitions via dynamic overwrite."""
+    core/storage.py:94-130): every claim_id ends up in exactly one hub
+    row, the one with the highest ``load_seq`` (the new batch must
+    carry a higher seq than stored rows), while only the partitions
+    that can change are read and rewritten.
+
+    A small manifest, collected on the driver, names those partitions:
+    the batch's own (year, month) keys plus every partition now holding
+    one of its claim ids (a claim_id-only scan of the hub, so a claim
+    that moved month leaves its old partition, and null keys match as
+    Hive's default partition). Only their directories are read in
+    full, by path; the union is deduped per claim_id and written back
+    through ``write_hub``. A read partition that keeps no row is
+    deleted, since a dynamic overwrite only replaces partitions it
+    writes. Pass a materialized batch (``etl.preprocess`` returns one):
+    the manifest and the merge both read it."""
+    merged, dirs = new_batch, []
     if Path(hub_path).exists():
-        touched = F.broadcast(new_batch.select(*HUB_PARTITIONS).distinct())
-        # left-semi on the partition keys: dynamic partition pruning
-        # restricts the hub scan to touched directories — no collect
-        existing = spark.read.parquet(hub_path).join(
-            touched, HUB_PARTITIONS, "left_semi"
+        hub = spark.read.parquet(hub_path)
+        held = hub.select("claim_id", *HUB_PARTITIONS).join(
+            F.broadcast(new_batch.select("claim_id")), "claim_id", "left_semi"
         )
-        merged = existing.unionByName(new_batch, allowMissingColumns=True)
-    else:
-        merged = new_batch
+        manifest = new_batch.select(*HUB_PARTITIONS).union(held.select(*HUB_PARTITIONS))
+        dirs = [_partition_dir(hub_path, tuple(r)) for r in _collect_small(manifest.distinct())]
+        dirs = [d for d in dirs if d.exists()]
+        if dirs:
+            # an explicit schema keeps the partition types of the whole
+            # hub (a null-key directory alone would infer them as void)
+            existing = spark.read.schema(hub.schema).option("basePath", hub_path).parquet(
+                *map(str, dirs)
+            )
+            merged = existing.unionByName(new_batch, allowMissingColumns=True)
     w = W.partitionBy("claim_id").orderBy(F.col(load_seq).desc())
     deduped = (
         merged.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    # re-cluster on the partition keys before the partitioned write:
-    # straight from the claim_id window shuffle, EVERY task holds rows
-    # of EVERY (year, month) and the sink writes tasks×dirs files (the
-    # small-file explosion snk_compaction exists to clean up). One
-    # extra exchange makes each directory the product of exactly one
-    # task — bounded files per dir and parallel directory writes. (AQE
-    # may coalesce the exchange when volumes are small; coalesced
-    # buckets keep whole (year, month) groups together, so the
-    # one-file-per-dir property survives.)
-    with pinned_conf(spark, _OVERWRITE_MODE_KEY, "dynamic"):
-        deduped.repartition(*HUB_PARTITIONS).write.partitionBy(
-            *HUB_PARTITIONS
-        ).mode("overwrite").parquet(hub_path)
+    read = {d: list(d.glob("*.parquet")) for d in dirs}
+    write_hub(deduped, hub_path)
+    # the overwrite replaced the files of every partition it wrote; a
+    # read partition whose files are all still there kept no row
+    for d, files in read.items():
+        if files and all(f.exists() for f in files):
+            shutil.rmtree(d)
 
 
 def available_periods(spark: SparkSession, hub_path: str) -> DataFrame:

@@ -44,6 +44,56 @@ def test_canonicalize_maps_aliases_and_drops_extras(spark):
     assert row["grade"] is None  # missing → typed null
 
 
+def test_canonicalize_refuses_a_field_under_both_names(spark):
+    """A Korean alias and its ASCII name in one input: which column the
+    user meant is not knowable, so the input is refused by name."""
+    import pytest
+
+    raw = spark.createDataFrame([("C1", "C2", "P")], ["상담번호", "claim_id", "plant"])
+    with pytest.raises(ValueError, match="상담번호/claim_id"):
+        etl.canonicalize(raw)
+
+
+def test_preprocess_partition_ints(spark):
+    """reception_year/month become ints. A wholly null source column
+    stays null: reception_date, the reference's backfill source
+    (core/etl.py:270-277), is null wherever a part is missing. A partly
+    null column keeps its own integers, and its nulls stay null."""
+    cols = ["상담번호", "접수년", "접수월", "접수일"]
+    wholly = spark.createDataFrame(
+        [("C1", None, "3", "5"), ("C2", None, "4", "6")], "a string, b string, c string, d string"
+    ).toDF(*cols)
+    out = etl.preprocess(etl.canonicalize(wholly))
+    assert dict(out.dtypes)["reception_year"] == "int"
+    assert sorted(
+        (r.claim_id, r.reception_year, r.reception_month, r.reception_date) for r in out.collect()
+    ) == [("C1", None, 3, None), ("C2", None, 4, None)]
+
+    partly = spark.createDataFrame(
+        [("C1", "2024", None, "5"), ("C2", None, "4", "6"), ("C3", "2023", "12", "1")],
+        "a string, b string, c string, d string",
+    ).toDF(*cols)
+    got = sorted(
+        (r.claim_id, r.reception_year, r.reception_month)
+        for r in etl.preprocess(etl.canonicalize(partly)).collect()
+    )
+    assert got == [("C1", 2024, None), ("C2", None, 4), ("C3", 2023, 12)]
+
+
+def test_preprocess_output_is_materialized(spark, tmp_path):
+    """The preprocessed batch is read by several consumers (the hub
+    merge, the mart refresh); it is materialized once, so none of them
+    reads the uploaded file again."""
+    src = str(tmp_path / "upload.csv")
+    spark.createDataFrame([("C1", "2024", "1", "5")], ["상담번호", "접수년", "접수월", "접수일"]) \
+        .write.option("header", True).csv(src)
+    raw = spark.read.option("header", True).csv(src)
+    assert raw.inputFiles()
+    out = etl.preprocess(etl.canonicalize(raw))
+    assert out.inputFiles() == []
+    assert [(r.claim_id, r.reception_year) for r in out.collect()] == [("C1", 2024)]
+
+
 def test_keep_last_dedup_uses_load_seq(spark):
     raw = spark.createDataFrame(
         [

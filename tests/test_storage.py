@@ -60,6 +60,104 @@ def test_merge_upsert_keep_last_and_partition_scope(spark):
     assert periods == {(2023, 12): 1, (2024, 1): 2, (2024, 2): 1}
 
 
+def _hub_rows(spark, hub):
+    return sorted(
+        (r["claim_id"], r["plant"], r["reception_year"], r["reception_month"])
+        for r in spark.read.parquet(hub).collect()
+    )
+
+
+def test_merge_upsert_moved_claim_keeps_one_row(spark, tmp_path):
+    """A re-upload that moves a claim to another month replaces its old
+    row: the partition that held it is read and rewritten too, and a
+    partition left without rows disappears."""
+    hub = str(tmp_path / "hub")
+    storage.write_hub(_claims(spark, [("C1", "OLD", 2024, 1, 0)]), hub)
+    storage.merge_upsert(spark, hub, _claims(spark, [("C1", "NEW", 2024, 2, 1)]))
+    assert _hub_rows(spark, hub) == [("C1", "NEW", 2024, 2)]
+    assert not (tmp_path / "hub" / "reception_year=2024" / "reception_month=1").exists()
+
+
+def test_merge_upsert_keeps_undated_claims(spark, tmp_path):
+    """A batch of undated claims (null partition keys) merges into the
+    hub's null-key partition; the undated claims already there stay."""
+    hub = str(tmp_path / "hub")
+    storage.write_hub(
+        _claims(spark, [("C1", "U", None, None, 0), ("C2", "D", 2024, 1, 0)]), hub
+    )
+    storage.merge_upsert(spark, hub, _claims(spark, [("C3", "U", None, None, 1)]))
+    assert _hub_rows(spark, hub) == [
+        ("C1", "U", None, None), ("C2", "D", 2024, 1), ("C3", "U", None, None)
+    ]
+
+
+def test_merge_upsert_job_budget_and_scan_scope(spark, tmp_path):
+    """A one-month batch merged into a 36-month hub: at most 8 Spark
+    jobs; only the claim_id column is read from the whole hub, all
+    columns only from the directories it rewrites; every hub directory
+    holds one file."""
+    import re
+
+    hub = tmp_path / "hub"
+    months = [(2021 + m // 12, m % 12 + 1) for m in range(36)]
+    storage.write_hub(
+        _claims(spark, [(f"C{i}", "OLD", y, m, 0) for i, (y, m) in enumerate(months * 3)]),
+        str(hub),
+    )
+    # C5 moves from 2021-06 into the batch's month, 2023-12
+    batch = _claims(
+        spark, [("C5", "NEW", 2023, 12, 1), ("C900", "ADD", 2023, 12, 1)]
+    ).localCheckpoint()
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> list:
+        # the store keeps only the newest executions; select by id
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    first = max((e.executionId() for e in executions()), default=-1)
+    sc.setJobGroup("merge_upsert_budget", "merge_upsert")
+    try:
+        storage.merge_upsert(spark, str(hub), batch)
+        jobs = sc.statusTracker().getJobIdsForGroup("merge_upsert_budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 8, f"merge_upsert launched {len(jobs)} jobs"
+
+    scans = [
+        (loc, schema)
+        for e in executions()
+        if e.executionId() > first
+        for loc, schema in re.findall(
+            r"Location: \w+ \[([^\]]*)\]\n(?:[^\n]*\n)*?ReadSchema: (\S+)",
+            e.physicalPlanDescription(),
+        )
+    ]
+    rewritten = {
+        f"{hub.as_uri()}/reception_year={y}/reception_month={m}".replace("file:///", "file:/")
+        for y, m in ((2021, 6), (2023, 12))
+    }
+
+    def paths(loc: str) -> tuple[str, int]:
+        """(first path, path count): a multi-path Location names its
+        first path, then "... <n> entries"."""
+        first, _, more = loc.partition(", ... ")
+        return first, 1 + (int(more.split()[0]) if more else 0)
+
+    full = [paths(loc) for loc, schema in scans if schema != "struct<claim_id:string>"]
+    assert full and all(p in rewritten and n == len(rewritten) for p, n in full), scans
+    assert any(schema == "struct<claim_id:string>" for _, schema in scans), scans
+
+    files = {}
+    for f in hub.rglob("*.parquet"):
+        files.setdefault(f.parent, []).append(f)
+    assert len(files) == 36 and all(len(v) == 1 for v in files.values())
+    got = {r["claim_id"]: (r["plant"], r["reception_month"]) for r in spark.read.parquet(str(hub)).collect()}
+    assert len(got) == 109 and got["C5"] == ("NEW", 12) and got["C900"] == ("ADD", 12)
+
+
 def test_series_mart_golden(spark):
     # the reference dummy-fixture scenario: one group, 3-month spine,
     # mixed valid/invalid lag, two middle categories
