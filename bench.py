@@ -5,10 +5,16 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect). Timings include plan + execution, not session
 startup.
+
+    python bench.py                  # headline set + every extra
+    python bench.py --ops a,b        # only the named ops, timed like
+                                     # extras; detail goes to
+                                     # BENCH_DETAIL.local.json
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -219,14 +225,14 @@ EXTRA = [
     "ep13_span_curation_e2e",
     "agg_cms_heavy_hitters",
     # the second learned tokenizer (training memoized per session —
-    # the warm-up pass carries the cold EM cost)
+    # the cold run carries the EM cost)
     "corpus_unigram_train",
     "corpus_unigram_encode",
     "corpus_unigram_contract",
     "evt_cms_stream",
     "txt_dup_span_frac",
     # the sixth MLlib family (EM LDA; fit memoized — cold 18.9 s at
-    # sf0.1 carried by the warm-up pass, warm report 0.4 s)
+    # sf0.1 carried by the cold run, warm report 0.4 s)
     "ml_lda_topics",
     "ml_lda_contract",
     "dedup_span_incremental",
@@ -234,7 +240,7 @@ EXTRA = [
     "evt_mart_restart_stream",
     "evt_hll_stream",
     # round-12 additions: the champion-forecast lifecycle (board +
-    # forecast rows memoized per session — the warm-up pass carries
+    # forecast rows memoized per session — the cold run carries
     # the election + refit fanout), the tokenizer head-to-head (both
     # models session-memoized), and the 14th gate (per-run staging +
     # three foreachBatch waves, the stream-gate floor)
@@ -244,7 +250,7 @@ EXTRA = [
     "evt_span_dedup_stream",
     # late round-12: PMI collocations (pure aggregates), the ALS
     # recommender lifecycle (fit memoized per session via the
-    # parquet-path memo — the warm-up pass carries the cold fit)
+    # parquet-path memo — the cold run carries the fit)
     "txt_collocations",
     "ml_als_recs",
     "ml_als_contract",
@@ -253,7 +259,7 @@ EXTRA = [
     # round-13: the plant-analysis page capstone (one tree pass over
     # the history substrate + one ROLLUP + the lag histogram), the
     # warning-scanner contract (per-series numpy forecasts — the
-    # warm-up pass carries the fanout), and PQ/ADC over the TRAINED
+    # cold run carries the fanout), and PQ/ADC over the TRAINED
     # doc vectors (reuses the session's pooled-embedding parquet memo)
     "ep15_plant_analysis",
     "ml_warning_contract",
@@ -402,78 +408,17 @@ def _stderr_stack_frames(path: str | None) -> int | None:
     return n
 
 
-# Extras that get one TIMED warm-up pass before their median-of-3 (the
-# round-10 steady-state discipline; rationale at the use site in
-# main()).
-WARMUP_EXTRA = [
-    "rs_wrapper",
-    "p6_rule_engine",
-    "dedup_cluster_cc",
-    "dedup_cluster_cc_star",
-    "dedup_simhash_fast",
-    "dedup_minhash_lsh_fast",
-    "evt_dedup_stream",
-    "evt_sessionize_stream",
-    "evt_tumbling_stream",
-    "evt_join_stream",
-    "evt_outer_join_stream",
-    "evt_scd2_refresh_stream",
-    "evt_mart_refresh_stream",
-    "evt_enrich_stream",
-    "ep3_forecast_contract",
-    "agg_hll_error_contract",
-    "evt_pydatasource_stream",
-    "ml_gbt_mllib",
-    # round-11: the restart gate pays two full streaming legs per
-    # pass; the ep12/semantic/champion ops build their session
-    # memos (w2v vectors, pooled embeddings, GBT, tuning board) on
-    # first run — the warm-up IS their cold number
-    "evt_restart_recovery_stream",
-    "ep12_embed_retrieval_e2e",
-    "dedup_semantic_trained",
-    "ml_champion4",
-    # late round-11: the KMeans fit memoizes on first run (~13 s
-    # cold at sf0.1 — the distributed k-means|| + 20 Lloyd rounds);
-    # the unigram trainer builds its EM memo on first run
-    "sim_kmeans_mllib",
-    "corpus_unigram_train",
-    # the 11th gate pays the staged-files + checkpoint floor
-    "evt_cms_stream",
-    # the EM LDA fit memoizes on first run (~19 s cold at sf0.1)
-    "ml_lda_topics",
-    # the 12th gate runs two full foreachBatch legs per pass
-    "evt_mart_restart_stream",
-    # the 13th gate pays the staged-files + checkpoint floor
-    "evt_hll_stream",
-    # round-12: the champion-forecast lifecycle fills the election
-    # board + refit-forecast memos on first run; the 14th gate pays
-    # the wave staging + gram-index seed + three foreachBatch legs
-    "ep14_champion_forecast_e2e",
-    "evt_span_dedup_stream",
-    # late round-12: the ALS fit memoizes on first run
-    "ml_als_recs",
-    # round-13: ep15 builds the risk-tree substrate for its history
-    # frame on first run; the warning contract pays the per-series
-    # champion-forecast fanout; trained-PQ builds the pooled-
-    # embedding memo when it runs before the ep12 family
-    "ep15_plant_analysis",
-    "ml_warning_contract",
-    "sim_pq_adc_trained",
-    # round-14: ep16 builds its result-row memo (two full DAG passes +
-    # the parquet save) on first run; the trained-PQ recall contract
-    # pays the brute-force exact truth once
-    "ep16_sales_management",
-    "sim_pq_trained_recall_contract",
-    # round-14 optimization pass: the norm-precompute rewrite made
-    # sim_mips_topk's generated fold code diverge from sim_topk_brute's
-    # (they used to share a janino-compiled class), so its first run
-    # now pays its own ~5 s whole-stage compile — the round-10
-    # JIT-warm-up criterion; one timed warm-up pass keeps its median
-    # steady-state like every other compile-heavy extra
-    "sim_mips_topk",
-]
-
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--ops",
+        type=lambda v: v.split(","),
+        help="comma-separated op ids: time only these, under the extras "
+        "protocol, and write only BENCH_DETAIL.local.json",
+    )
+    args = ap.parse_args()
+    headline = [] if args.ops else HEADLINE
+    extras_to_run = args.ops or EXTRA
     _install_staging()
     stderr_log = _install_stderr_tee()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -499,7 +444,7 @@ def main() -> None:
     reg = registry()
     queries = {}
     total = 0.0
-    missing = [name for name in HEADLINE + EXTRA if name not in reg]
+    missing = [name for name in headline + extras_to_run if name not in reg]
     if missing:
         # a typo'd or unregistered bench op must be an error, not a
         # silent shrink of the metric
@@ -549,10 +494,10 @@ def main() -> None:
     # three rounds of drift adjudication were measuring JVM state,
     # not plans. Timing after a full warm-up pass converges both
     # environments to the steady state the metric is meant to track.
-    for name in HEADLINE:
+    for name in headline:
         reg[name].query(spark, sf_dir).write.mode("overwrite").format("noop").save()
 
-    for name in HEADLINE:
+    for name in headline:
         queries[name] = run(name, N_RUNS_HEADLINE)
         total += queries[name]
 
@@ -572,28 +517,13 @@ def main() -> None:
         .save()
     )
 
-    # local-iteration escape hatch: headline-only runs finish in ~1 min
-    # (the driver never sets this; the official artifact always carries
-    # the full extra set)
-    extras_to_run = [] if os.environ.get("SPARK_GRAFT_BENCH_SKIP_EXTRA") else EXTRA
-
     # Every extra starts cold: the artifact store and Spark's cache are
-    # emptied before its first run, so no earlier op's artifacts or
-    # cached blocks make that run warm. Its first run is the op's cold
-    # number, and the artifact kinds it missed are what it built.
-    #
-    # Steady-state warm-up for the HEAVIEST extras (round 10): the
-    # round-9 headline fix left the 80+ extras median-of-3 with
-    # first-run JIT inside the spread (isolated probe:
-    # dedup_simhash_fast [9.58, 4.44, 3.58], still declining at run 3),
-    # so their medians drifted ±2× across rounds on unchanged code.
-    # The ops whose first run dominates — the stateful stream gates
-    # (state-store + checkpoint floor), the iterative CC fixpoints, the
-    # model fits — take their first run as a timed warm-up pass outside
-    # the median-of-3, which makes those medians comparable
-    # round-over-round. The others count their first run as run 1.
+    # emptied before its first run, so no earlier op's artifacts make
+    # that run warm (no op leaves a CacheManager entry). The first run
+    # is the op's cold number, and the artifact kinds it missed are
+    # what it built; the published number is the median of the
+    # N_RUNS_EXTRA runs after it.
     extra: dict[str, float] = {}
-    warm_first: dict[str, float] = {}
     cold: dict[str, dict] = {}
     artifact_stats: dict[str, dict] = {}
     for name in extras_to_run:
@@ -602,12 +532,7 @@ def main() -> None:
         first = timed(name)
         built = sorted(k for k, v in artifacts.stats().items() if v["misses"])
         cold[name] = {"sec": first, "built": built}
-        if name in WARMUP_EXTRA:
-            warm_first[name] = first
-            spread[name] = [timed(name) for _ in range(N_RUNS_EXTRA)]
-        else:
-            spread[name] = [first] + [timed(name) for _ in range(N_RUNS_EXTRA - 1)]
-        extra[name] = sorted(spread[name])[N_RUNS_EXTRA // 2]
+        extra[name] = run(name, N_RUNS_EXTRA)
         # hits and misses over all of the op's runs (clear() reset them)
         artifact_stats[name] = artifacts.stats()
 
@@ -624,10 +549,8 @@ def main() -> None:
         "JIT-warm-up sensitivity behind the r7-r9 drift adjudications); "
         "every extra starts with an empty artifact store and Spark cache "
         "and its first run is its cold number (cold: sec + artifact "
-        "kinds built); the heaviest extras (stream gates, CC fixpoints, "
-        "model fits) take that first run as a timed warm-up pass outside "
-        "the median, recorded in warmup_first_run; median-of-5 per "
-        "headline query, median-of-3 per extra (since round 6; round 4-5 "
+        "kinds built), outside its median; median-of-5 per headline "
+        "query, median-of-3 per extra (since round 6; round 4-5 "
         "were median-of-3 everywhere; rounds 1-3 one-shot incl. "
         "first-run warm-up)"
     )
@@ -637,7 +560,7 @@ def main() -> None:
     # that three rounds ago (BENCH_r08/r09 record `parsed: null` with
     # only the tail extras visible). The FINAL stdout line is now a
     # compact summary guaranteed to fit the driver's tail window; the
-    # full per-op detail (spreads, extras, cold map, warm-up timings)
+    # full per-op detail (spreads, extras, cold map)
     # goes to a committed BENCH_DETAIL.json so extras stay diffable
     # across rounds from the repo itself.
     stderr_frames = _stderr_stack_frames(stderr_log)
@@ -675,7 +598,6 @@ def main() -> None:
         "spread": spread,
         "extra_queries": extra,
         "extras_cold_total_sec": extras_cold_total,
-        "warmup_first_run": warm_first,
         "queries": queries,
         "runs_per_query": {"headline": N_RUNS_HEADLINE, "extra": N_RUNS_EXTRA},
         "cold": cold,
@@ -691,23 +613,20 @@ def main() -> None:
         "unit": "sec",
         "value": round(total, 3),
     }
-    if extras_to_run:  # headline-only escape-hatch runs don't clobber it
-        # The COMMITTED BENCH_DETAIL.json holds the official cooled-down
-        # reading; a driver/CI bench runs right after the full suite and
-        # its contention-inflated numbers kept overwriting it (r10
-        # verdict). Only an explicit SPARK_GRAFT_BENCH_OFFICIAL=1 run
-        # may touch the committed path — everything else writes an
-        # untracked sibling so `git status` stays clean.
-        name = (
-            "BENCH_DETAIL.json"
-            if os.environ.get("SPARK_GRAFT_BENCH_OFFICIAL") == "1"
-            else "BENCH_DETAIL.local.json"
-        )
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), name
-        )
-        with open(detail_path, "w") as fh:
-            json.dump(detail, fh, indent=1, sort_keys=True)
+    # The COMMITTED BENCH_DETAIL.json holds the official cooled-down
+    # reading of the full set; a driver/CI bench runs right after the
+    # full suite and its contention-inflated numbers kept overwriting it
+    # (r10 verdict). Only an explicit SPARK_GRAFT_BENCH_OFFICIAL=1 run
+    # without --ops may touch the committed path — everything else
+    # writes an untracked sibling so `git status` stays clean.
+    name = (
+        "BENCH_DETAIL.json"
+        if os.environ.get("SPARK_GRAFT_BENCH_OFFICIAL") == "1" and not args.ops
+        else "BENCH_DETAIL.local.json"
+    )
+    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
+    with open(detail_path, "w") as fh:
+        json.dump(detail, fh, indent=1, sort_keys=True)
 
     line = json.dumps(
         {
@@ -718,10 +637,10 @@ def main() -> None:
             "n_extra_queries": len(extra),
             "extras_total_sec": round(sum(extra.values()), 3),
             "extras_cold_total_sec": extras_cold_total,
-            "detail": "BENCH_DETAIL.json (committed: per-run spreads, "
-            "extras, cold map, warm-up timings, methodology)",
-            "methodology": "steady-state medians after warm-up passes "
-            "(headline set + heaviest extras); see BENCH_DETAIL.json",
+            "detail": f"{name} (per-run spreads, extras, cold map, "
+            "methodology)",
+            "methodology": "headline medians after a warm-up pass; each "
+            "extra's median follows its cold run; see BENCH_DETAIL.json",
             "value": round(total, 3),
         }
     )
@@ -736,7 +655,7 @@ def main() -> None:
             "sf": detail["sf"],
             "queries": queries,
             "n_extra_queries": len(extra),
-            "detail": "BENCH_DETAIL.json",
+            "detail": name,
             "value": round(total, 3),
         }
         line = json.dumps(slim)

@@ -20,7 +20,8 @@ objects, a path, a frame reading files nothing rewrites, or a
 ``localCheckpoint``ed frame. The CacheManager matches a later read of
 the same path by plan, so a ``.cache()``d frame would keep serving
 the old blocks after a rewrite; checkpointed blocks belong to their
-own RDD and die with it.
+own RDD and die with it. Operators follow the same no-CacheManager
+rule: a frame reused within one call is ``localCheckpoint``ed.
 
 One bound, ``MAX_ENTRIES``, evicts least-recently-used entries across
 all kinds. Path-valued artifacts pass ``on_evict`` (usually

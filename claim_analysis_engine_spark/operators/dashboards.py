@@ -481,10 +481,12 @@ def ep4_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plans/r14/ep4_corpus_e2e_before.txt). Now ONE window labels
     # every doc (partitioning by (pass_quality, md5) leaves the ranks
     # of pass rows untouched — the window was previously computed on
-    # the pass-only subset), the labeled frame is cached once, and the
+    # the pass-only subset), the labeled frame is checkpointed once, and the
     # whole funnel is ONE hash aggregate over a CASE stage label.
     wmd5 = W.partitionBy("pass_quality", F.md5("text")).orderBy("doc_id")
-    labeled = flagged.withColumn("copy_rank", F.row_number().over(wmd5)).cache()
+    labeled = flagged.withColumn(
+        "copy_rank", F.row_number().over(wmd5)
+    ).localCheckpoint()
     exk = labeled.where(F.col("pass_quality") & (F.col("copy_rank") == 1)).select(
         "doc_id", "text", "n_tokens"
     )
@@ -515,7 +517,7 @@ def ep4_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("k", "blk"),
-    ).cache()
+    ).localCheckpoint()
     a = blocks.select("k", "blk", F.col("doc_id").alias("da"), F.col("sig").alias("sa"))
     b = blocks.select("k", "blk", F.col("doc_id").alias("doc_id"), F.col("sig").alias("sb"))
     near_dup = (
@@ -1103,7 +1105,7 @@ def ep11_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (the per-term counts are conditional counts, so the
     posting prune happens inside the aggregate instead of as a second
     explode); chunk stats are broadcast-sized; the per-(chunk,term)
-    posting frame is a stack() over that cached chunk-grain table, so
+    posting frame is a stack() over that checkpointed chunk-grain table, so
     df, the idf join and the score rollup all reuse its
     (doc, chunk) partitioning with no further corpus pass; the
     best-chunk window partitions by doc_id; the final top-k is
@@ -1119,7 +1121,7 @@ def ep11_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         BM25_TERMS,
     )
 
-    chunks = chunk_frame(spark, sf_dir).cache()
+    chunks = chunk_frame(spark, sf_dir).localCheckpoint()
     ctoks = chunks.select(
         "doc_id", "chunk_idx", F.explode("ctoks").alias("tok")
     )
@@ -1130,7 +1132,7 @@ def ep11_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("tok") == t, True)).alias(f"tf_{i}")
             for i, t in enumerate(BM25_TERMS)
         ],
-    ).cache()
+    ).localCheckpoint()
     stats = per_chunk.agg(
         F.count(F.lit(1)).cast("double").alias("n_chunks"),
         F.avg("clen").alias("avgcl"),

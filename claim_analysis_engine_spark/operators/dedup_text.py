@@ -241,7 +241,7 @@ def dedup_minhash_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # windows 0 and 1 both live in the seed-0 md5 → ONE md5 per shingle;
-    # cached so the self-join's two sides hash the corpus exactly once
+    # checkpointed so the self-join's two sides hash the corpus once
     sigs = (
         _shingles(spark, sf_dir)
         .select(
@@ -252,7 +252,7 @@ def dedup_minhash_block(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dig"),
         )
         .select("doc_id", "sh", mh(0).alias("mh0"), mh(1).alias("mh1"))
-        .cache()
+        .localCheckpoint()
     )
     a = sigs.select(
         F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha"), "mh0", "mh1"
@@ -306,7 +306,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode from a single projection — the signature frame is never
     # recomputed per band and the verify join below only touches the
     # cheap shingle frame
-    sh = _shingles(spark, sf_dir).cache()
+    sh = _shingles(spark, sf_dir).localCheckpoint()
     sigs = sh.select("doc_id", "sh", _digest_col().alias("dig")).select(
         "doc_id", "sh", *_minhash_cols()
     )
@@ -326,8 +326,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = (
         sigs.select("doc_id", F.explode(band_structs).alias("bs"))
         .select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-        .cache()  # tiny (4 rows/doc); both self-join sides reuse it, so
-        # the md5 signature pass over the corpus runs exactly once
+        .localCheckpoint()  # tiny (4 rows/doc); both self-join sides
+        # reuse it, so the md5 signature pass over the corpus runs once
     )
     cand = (
         bands.alias("a")
@@ -385,11 +385,9 @@ def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     15.5 s (md5) → ~6 s end-to-end. The md5 op stays registered
     because the cross-engine oracle needs a hash DuckDB can replicate
     bit-for-bit."""
-    # hashed-shingle frame: ONE substring pass over the corpus, cached
-    # as compact long arrays that feed the signature pass AND both
-    # sides of the exact-Jaccard verify join (at cluster scale this
-    # cache is a persist(DISK_ONLY) checkpoint of a corpus-sized
-    # intermediate)
+    # hashed-shingle frame: ONE substring pass over the corpus,
+    # checkpointed as compact long arrays that feed the signature pass
+    # AND both sides of the exact-Jaccard verify join
     hashed = F.array_distinct(
         F.transform(
             F.sequence(
@@ -401,7 +399,7 @@ def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         spread_scan(load(spark, sf_dir, "documents"))
         .select("doc_id", hashed.alias("sh"))
-        .cache()
+        .localCheckpoint()
     )
 
     def mh(j: int) -> F.Column:
@@ -425,7 +423,7 @@ def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = (
         sigs.select("doc_id", F.explode(band_structs).alias("bs"))
         .select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-        .cache()
+        .localCheckpoint()
     )
     cand = (
         bands.alias("a")
@@ -1767,7 +1765,7 @@ def txt_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary makes candidates sparse again —
     txt_containment_sparse MEASURES exactly that claim on a
     Zipf-vocabulary fixture)."""
-    sh = _shingles(spark, sf_dir).cache()
+    sh = _shingles(spark, sf_dir).localCheckpoint()
     return _containment_best(sh, _containment_candidates(sh))
 
 

@@ -106,10 +106,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
         .union(pair.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
     )
-    # tiny iterative frames: low partition count (the CC lesson), cache
-    # the loop-invariant edge+degree table once
+    # tiny iterative frames: low partition count (the CC lesson),
+    # checkpoint the loop-invariant edge+degree table once
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = edges.join(deg, "src").repartition(8, "dst").cache()
+    ed = edges.join(deg, "src").repartition(8, "dst").localCheckpoint()
     n_nodes = deg.count()  # |V|: model-state scalar, like the IVF centroids
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
@@ -216,7 +216,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Clustering = 2T/(d(d-1)); the ratio of small ints rounds
     identically in both engines (denominators here never terminate at
     the 5th decimal, so no rounding tie exists)."""
-    pair = _canonical_pairs(spark, sf_dir).cache()
+    pair = _canonical_pairs(spark, sf_dir).localCheckpoint()
     e1 = pair.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
     e2 = pair.select(F.col("pa").alias("b"), F.col("pb").alias("c"))
     e3 = pair.select(F.col("pa").alias("a"), F.col("pb").alias("c"))
@@ -295,7 +295,7 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     only novel candidates. Same Σ deg(mid)² scale bound as
     graph_triangles, same hub remedy. The HAVING prunes the pair tail
     BEFORE the anti join and degree joins touch it."""
-    pair = _canonical_pairs(spark, sf_dir).cache()
+    pair = _canonical_pairs(spark, sf_dir).localCheckpoint()
     edges = pair.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).union(
         pair.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )

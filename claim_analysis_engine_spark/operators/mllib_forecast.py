@@ -181,79 +181,74 @@ def _gbt_forecast_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _train_and_forecast(spark: SparkSession, sf_dir: str):
     """Training core → (collected forecast rows, schema)."""
     # the lag frame is bounded (series-keys × months) and consumed by
-    # the fit, both recursions, and the RMSE join — cache once, release
-    # after the series-grain result is materialized below
-    s = _lag_features(_series(spark, sf_dir)).cache()
+    # the fit, both recursions, and the RMSE join — checkpoint once
+    s = _lag_features(_series(spark, sf_dir)).localCheckpoint()
     out_schema = (
         "status string, priority string, h int, yhat double, "
         "ci_lo double, ci_hi double, model string"
     )
-    try:
-        bounds = s.agg(
-            F.max("idx").alias("m"), F.min("month").alias("first_month")
-        ).first()
-        m, first_month = bounds["m"], bounds["first_month"]
-        if m is None or m < MIN_MONTHS:  # the oracle's eligibility mirror
-            return [], out_schema, None, None
+    bounds = s.agg(
+        F.max("idx").alias("m"), F.min("month").alias("first_month")
+    ).first()
+    m, first_month = bounds["m"], bounds["first_month"]
+    if m is None or m < MIN_MONTHS:  # the oracle's eligibility mirror
+        return [], out_schema, None, None
 
-        train = s.where(F.col("idx") <= m - HORIZON)
-        assembler, model = _fit_gbt(train)
+    train = s.where(F.col("idx") <= m - HORIZON)
+    assembler, model = _fit_gbt(train)
 
-        hist = s.select("status", "priority", "idx", "n")
-        # honest backtest: recursion replayed from the train boundary,
-        # so held-out months are predicted exactly the way the future is
-        bt = _recursive_forecast(
-            assembler,
-            model,
-            hist.where(F.col("idx") <= m - HORIZON),
-            m - HORIZON,
-            first_month,
+    hist = s.select("status", "priority", "idx", "n")
+    # honest backtest: recursion replayed from the train boundary,
+    # so held-out months are predicted exactly the way the future is
+    bt = _recursive_forecast(
+        assembler,
+        model,
+        hist.where(F.col("idx") <= m - HORIZON),
+        m - HORIZON,
+        first_month,
+    )
+    actual = hist.where(F.col("idx") > m - HORIZON).select(
+        "status",
+        "priority",
+        (F.col("idx") - (m - HORIZON)).alias("h"),
+        F.col("n").alias("y"),
+    )
+    rmse = (
+        bt.join(actual, ["status", "priority", "h"])
+        .groupBy("status", "priority")
+        .agg(
+            F.sqrt(F.avg((F.col("y") - F.col("yhat")) ** 2)).alias("bt_rmse")
         )
-        actual = hist.where(F.col("idx") > m - HORIZON).select(
-            "status",
-            "priority",
-            (F.col("idx") - (m - HORIZON)).alias("h"),
-            F.col("n").alias("y"),
-        )
-        rmse = (
-            bt.join(actual, ["status", "priority", "h"])
-            .groupBy("status", "priority")
-            .agg(
-                F.sqrt(F.avg((F.col("y") - F.col("yhat")) ** 2)).alias("bt_rmse")
-            )
-        )
-        # materialize the keys-sized RMSE once: the band join below AND
-        # the 4-way champion election (ml_champion4) both consume it —
-        # rows into the artifact, frame rebuilt from them (gate-safe)
-        rmse_rows, rmse_schema = rmse.collect(), rmse.schema
-        rmse = spark.createDataFrame(rmse_rows, rmse_schema)
+    )
+    # materialize the keys-sized RMSE once: the band join below AND
+    # the 4-way champion election (ml_champion4) both consume it —
+    # rows into the artifact, frame rebuilt from them (gate-safe)
+    rmse_rows, rmse_schema = rmse.collect(), rmse.schema
+    rmse = spark.createDataFrame(rmse_rows, rmse_schema)
 
-        fc = _recursive_forecast(assembler, model, hist, m, first_month)
-        result = fc.join(F.broadcast(rmse), ["status", "priority"]).select(
-            "status",
-            "priority",
-            "h",
-            F.round("yhat", 4).alias("yhat"),
-            F.round(
-                F.greatest(F.lit(0.0), F.col("yhat") - 1.96 * F.col("bt_rmse")),
-                4,
-            ).alias("ci_lo"),
-            F.round(F.col("yhat") + 1.96 * F.col("bt_rmse"), 4).alias("ci_hi"),
-            F.lit("gbt_mllib").alias("model"),
-        )
-        # materialize the series-grain result (keys × HORIZON rows — the
-        # same size class every forecast op returns and the driver
-        # collects) so the cache can be released here; a production run
-        # forecasting millions of series would write `result` to a sink
-        # instead and unpersist after the write
-        return (
-            result.collect(),  # bounded: keys × HORIZON
-            result.schema,
-            (assembler, model),
-            (rmse_rows, rmse_schema),
-        )
-    finally:
-        s.unpersist()
+    fc = _recursive_forecast(assembler, model, hist, m, first_month)
+    result = fc.join(F.broadcast(rmse), ["status", "priority"]).select(
+        "status",
+        "priority",
+        "h",
+        F.round("yhat", 4).alias("yhat"),
+        F.round(
+            F.greatest(F.lit(0.0), F.col("yhat") - 1.96 * F.col("bt_rmse")),
+            4,
+        ).alias("ci_lo"),
+        F.round(F.col("yhat") + 1.96 * F.col("bt_rmse"), 4).alias("ci_hi"),
+        F.lit("gbt_mllib").alias("model"),
+    )
+    # materialize the series-grain result (keys × HORIZON rows — the
+    # same size class every forecast op returns and the driver
+    # collects); a production run forecasting millions of series would
+    # write `result` to a sink instead
+    return (
+        result.collect(),  # bounded: keys × HORIZON
+        result.schema,
+        (assembler, model),
+        (rmse_rows, rmse_schema),
+    )
 
 
 @REG.op("ml_gbt_mllib")  # rows-only: yhat comes from fitted JVM tree

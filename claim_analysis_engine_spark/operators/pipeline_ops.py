@@ -149,8 +149,8 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     The benchmark's distinct-shingle set BROADCASTS (eval sets are tiny
     versus the corpus); the corpus side explodes shingles once and
     equi-joins — contamination never becomes a doc×doc comparison.
-    The shingle frame is cached: it feeds both the bench and corpus
-    branches, and without the cache the 5-char shingle transform runs
+    The shingle frame is checkpointed: it feeds both the bench and corpus
+    branches, and without it the 5-char shingle transform runs
     twice over the full text column (the same single-pass pattern as
     dedup_minhash_lsh_fast); the left-join spine comes from the raw
     table, not the shingled frame, so it never touches text at all."""
@@ -165,7 +165,7 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda i: F.col("text").substr(i, F.lit(SHINGLE_K)),
             )
         ).alias("s"),
-    ).cache()
+    ).localCheckpoint()
     is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench = (
         sh.where(is_bench)

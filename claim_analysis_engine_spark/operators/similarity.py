@@ -515,15 +515,13 @@ def _train_ivf(
     # Project once: (vec_id, embedding, ‖e‖). Precomputing the vector
     # norm here means each broadcast-join row evaluates ONE dot product
     # (e·c) instead of three — the norm would otherwise be recomputed
-    # per centroid pair (8× per vector per round). Cached across the
-    # Lloyd rounds (the canonical Spark iterative-ML choice: the
-    # training set is the reuse unit); unpersisted after training so
-    # nothing leaks into the caller's session.
+    # per centroid pair (8× per vector per round). Checkpointed once
+    # for the Lloyd rounds (the training set is the reuse unit).
     emb_n = emb.select(
         "vec_id",
         "embedding",
         F.sqrt(_dot("embedding", "embedding")).alias("enorm"),
-    ).cache()
+    ).localCheckpoint()
     # centroid state lives driver-side as plain lists (8×64 — the model)
     # sorted(): collect() row order follows task completion order, which
     # varies run-to-run under contention; sorting pins the frame's row
@@ -630,10 +628,6 @@ def _train_ivf(
             F.round(F.avg("cos"), 4).alias("mean_within_cos"),
         )
     )
-    # training is done — drop the cache now (the returned plan simply
-    # recomputes the projection from parquet when the caller evaluates:
-    # one scan, no leaked cache entry in the caller's session)
-    emb_n.unpersist()
     return cents, report, objective
 
 
@@ -905,6 +899,10 @@ def sim_ann_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_max(F.transform("v", F.abs)) / 127, F.lit(1e-12)
         ).alias("s"),
     )
+    # lazy: the codes are stored by the first job that reads them (the
+    # query-side broadcast) and re-read by the corpus scan. Cold at
+    # sf0.1 on 4 cores, an eager checkpoint's extra job lost all 5
+    # pairs against a SQL cache, by 4-37%; the lazy form lost 1 of 6.
     q8 = q8.select(
         "vec_id",
         F.transform(
@@ -914,7 +912,7 @@ def sim_ann_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least(F.lit(127.0), F.floor(x / F.col("s") + 0.5)),
             ),
         ).alias("q"),
-    ).cache()
+    ).localCheckpoint(eager=False)
 
     qs = q8.where(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qa")

@@ -534,12 +534,12 @@ def txt_boilerplate_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", _tokens_col().alias("toks")
     )
-    # cached: g feeds the exploded frame twice (common-gram aggregate,
-    # per-doc hit counts) AND the final per-doc join — without the
-    # cache the gram construction runs three times
+    # checkpointed: g feeds the exploded frame twice (common-gram
+    # aggregate, per-doc hit counts) AND the final per-doc join —
+    # without it the gram construction runs three times
     g = docs.select(
         "doc_id", F.array_distinct(_word_ngrams(BP_NGRAM)).alias("grams")
-    ).cache()
+    ).localCheckpoint()
     e = g.select("doc_id", F.explode("grams").alias("gram"))
     common = (
         e.groupBy("gram")
@@ -636,9 +636,8 @@ def txt_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bg"),
     ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     # the pair stream feeds THREE consumers (bigram counts, unigram
-    # counts, scoring join) — cache it so the explode runs once, and so
-    # the CacheManager's plan matching reuses it across invocations
-    pairs = pairs.cache()
+    # counts, scoring join) — checkpoint it so the explode runs once
+    pairs = pairs.localCheckpoint()
     big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     uni = pairs.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     voc = t.select(F.explode("toks").alias("tok")).agg(
@@ -722,12 +721,12 @@ def txt_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(load(spark, sf_dir, "documents")).select(
         "doc_id", _tokens_col().alias("toks")
     )
-    # cached: the gram frame feeds both the per-doc size projection and
-    # the exploded first-owner aggregate — without the cache the gram
-    # construction runs twice (the corpus_contamination lesson)
+    # checkpointed: the gram frame feeds both the per-doc size
+    # projection and the exploded first-owner aggregate — without it
+    # the gram construction runs twice (the corpus_contamination lesson)
     g = docs.select(
         "doc_id", F.array_distinct(_word_ngrams(NOV_NGRAM)).alias("grams")
-    ).cache()
+    ).localCheckpoint()
     e = g.select("doc_id", F.explode("grams").alias("gram"))
     firsts = e.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     novel = firsts.groupBy("first_doc").agg(
@@ -790,11 +789,11 @@ def txt_idf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     in as a broadcast scalar; one window per doc ranks. Two hash
     aggregates + one window — no fact-sized shuffle beyond the
     (doc,term) aggregate itself. The (doc,term) frame feeds both the
-    tf and df branches, so it is cached for the run."""
+    tf and df branches, so it is checkpointed for the run."""
     d = load(spark, sf_dir, "documents")
     terms = d.select("doc_id", F.explode(_tokens_col()).alias("term"))
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.cache()
+    tf = tf.localCheckpoint()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

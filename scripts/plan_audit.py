@@ -15,11 +15,17 @@ query() do run their writes) and record:
                  row-at-a-time BatchEvalPython is FORBIDDEN and the
                  suite fails before this report could record one
 
+Work an op localCheckpoints while query() builds shows up in its final
+plan as a `Scan ExistingRDD`; `checkpoint_plans()` records each such
+frame's formatted plan, and the audit reads the final plan plus those
+records.
+
 Usage: python scripts/plan_audit.py [sf_dir] > /dev/null && cat PLANS.md
 """
 
 from __future__ import annotations
 
+import contextlib
 import io
 import re
 import sys
@@ -29,6 +35,35 @@ sys.path.insert(0, ".")
 
 from claim_analysis_engine_spark.registry import registry  # noqa: E402
 from claim_analysis_engine_spark.session import get_spark  # noqa: E402
+
+
+def explain_formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@contextlib.contextmanager
+def checkpoint_plans():
+    """Yield a list that collects the formatted plan of every frame
+    localCheckpointed inside the block. The session's frames are the
+    classic DataFrame subclass, which overrides localCheckpoint, so the
+    patch goes there and not on pyspark.sql.DataFrame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    original = DataFrame.localCheckpoint
+    plans: list[str] = []
+
+    def recording(self, *args, **kwargs):
+        plans.append(explain_formatted(self))
+        return original(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording
+    try:
+        yield plans
+    finally:
+        DataFrame.localCheckpoint = original
 
 
 def audit(plan: str, formatted: str | None = None) -> dict:
@@ -45,11 +80,7 @@ def audit(plan: str, formatted: str | None = None) -> dict:
     # explode nodes, so the batch-5/9 duplicate-scan rewrites are
     # regression-guarded by the committed table itself. Named tables
     # only (.../<table>.parquet Locations) — staged sink/stream
-    # read-back dirs are per-run scratch, not corpus re-reads. Note:
-    # InMemoryRelation text embeds its child plan per cache REFERENCE,
-    # so cached-substrate ops legitimately repeat scan text (the r14
-    # closing-sweep adjudication); the guard test pins ceilings, not
-    # exact counts.
+    # read-back dirs are per-run scratch, not corpus re-reads.
     tbl_refs: dict[str, int] = {}
     for m in re.finditer(r"Location: [A-Za-z]*FileIndex[^\n]*/(\w+)\.parquet", fmt):
         tbl_refs[m.group(1)] = tbl_refs.get(m.group(1), 0) + 1
@@ -88,18 +119,15 @@ def main() -> None:
     rows = []
     for op_id, op in registry().items():
         try:
-            df = op.query(spark, sf_dir)
-            fbuf = io.StringIO()
-            with redirect_stdout(fbuf):
-                df.explain("formatted")
+            with checkpoint_plans() as checkpointed:
+                df = op.query(spark, sf_dir)
+            fmt = explain_formatted(df) + "".join(checkpointed)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 # simple mode carries the `*(n)` whole-stage-codegen
                 # markers that formatted+AQE hides
                 df.explain()
-            rows.append(
-                (op_id, audit(fbuf.getvalue() + buf.getvalue(), fbuf.getvalue()), None)
-            )
+            rows.append((op_id, audit(fmt + buf.getvalue(), fmt), None))
         except Exception as ex:  # noqa: BLE001 — report, don't die
             rows.append((op_id, None, f"{type(ex).__name__}: {str(ex)[:80]}"))
         print(op_id, "done", file=sys.stderr, flush=True)
@@ -121,10 +149,12 @@ def main() -> None:
         "ops show the plan of their RETURNED read-back frame; their write",
         "plans execute inside query() and are covered by value oracles.",
         "",
-        "`scans` counts parquet scan NODES in the formatted plan;",
-        "`table refs` the per-named-table Location references (cached",
-        "substrates repeat their child plan text per reference — see the",
-        "audit() note); `explodes` the Generate nodes. Together they",
+        "`scans` counts parquet scan NODES in the formatted plan plus the",
+        "plans of the frames the op localCheckpoints while it builds (an",
+        "artifact is built, and its scans counted, in the row of the first",
+        "op in registry order that needs it);",
+        "`table refs` the per-named-table Location references;",
+        "`explodes` the Generate nodes. Together they",
         "regression-guard the r14 batch-5/9 one-pass rewrites",
         "(tests/test_plan_invariants.py pins ceilings for those ops).",
         "",
@@ -166,7 +196,7 @@ def main() -> None:
         "quantizer (the tuning curve costs its points)",
         "sim_nprobe_contract": "same sweep + the exact-truth branch",
         "txt_containment_sparse": "fixture generation + candidate + "
-        "verify in one lineage (shingle frame cached per session)",
+        "verify in one lineage (fixture rows stored per session)",
         "cdc_extract_roundtrip": "snapshot-diff CDC: two snapshot "
         "builds + the diff + the round-trip audit in one plan",
     }

@@ -20,8 +20,9 @@ from tests.conftest import SF_SMALL
 from tests.oracle_harness import compare, duck_connection
 
 # every artifact family the dashboard path reads (the series substrate,
-# the tree, the alerts read-back, the CC labels), an op that reuses a
-# frame within one call (dedup_simhash's signatures) and one
+# the tree, the alerts read-back, the CC labels), ops that reuse a
+# frame within one call (dedup_simhash's signatures, the gram, term,
+# shingle and band frames of the text ops and the ep4 funnel) and one
 # result-row replay (ep15)
 REWRITE_OPS = (
     "rs_tree_relational",
@@ -33,6 +34,11 @@ REWRITE_OPS = (
     "dedup_cluster_cc",
     "dedup_simhash",
     "ep15_plant_analysis",
+    "txt_idf_topterms",
+    "txt_ngram_novelty",
+    "dedup_minhash_lsh",
+    "corpus_contamination",
+    "ep4_corpus_e2e",
 )
 # rows-only ops checked against their relational twin's oracle
 ORACLE_OF = {"rs_wrapper": "rs_tree_relational"}

@@ -284,6 +284,29 @@ def test_no_optional_import_fallback():
     assert not offenders, f"optional-import fallback: {offenders}"
 
 
+def test_no_sql_cache_in_the_package():
+    """An operator reuses a frame within one call through
+    ``localCheckpoint`` only. The CacheManager matches a later read of
+    the same path by plan, so a ``.cache()``/``.persist(...)`` frame
+    keeps serving the old blocks after the table is rewritten in
+    place."""
+    import ast
+    import pathlib
+
+    import claim_analysis_engine_spark as pkg
+
+    offenders = []
+    for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("cache", "persist")
+            ):
+                offenders.append(f"{p.name}:{node.lineno}")
+    assert not offenders, f"SQL cache in the package: {offenders}"
+
+
 def test_bench_exclusion_ledger_is_consistent_with_the_registry():
     """The BENCH_DETAIL `excluded` map (r11 verdict ask) must stay
     honest: every excluded id is a real registered op, no excluded op

@@ -31,17 +31,28 @@ def duck():
 OP_WALL_TIME_CAP_S = 30.0
 
 
+def _assert_no_cache_entry(spark, op_id: str) -> None:
+    """No op may leave a CacheManager entry: the CacheManager matches a
+    later read of the same path by plan, so an entry would keep serving
+    its old blocks after the table is rewritten in place."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{op_id} left a CacheManager entry"
+    )
+
+
 @pytest.mark.parametrize("op_id", WITH_ORACLE)
 def test_oracle_parity(spark, duck, op_id):
     import time
 
     op = REG[op_id]
+    spark.catalog.clearCache()
     # the guard times ONLY the Spark side (build + execute + collect);
     # the DuckDB oracle below can itself be expensive (tree CTEs) and
     # is not what driver rotation pays for
     t0 = time.perf_counter()
     left = op.query(spark, SF_ORACLE).toPandas()
     elapsed = time.perf_counter() - t0
+    _assert_no_cache_entry(spark, op_id)
     ok, msg = compare(left, duck, op.oracle)
     assert ok, f"{op_id}: {msg}"
     if elapsed >= OP_WALL_TIME_CAP_S:
@@ -77,11 +88,13 @@ def test_runs_rows_only(spark, op_id):
     import time
 
     op = REG[op_id]
+    spark.catalog.clearCache()
     t0 = time.perf_counter()
     df = op.query(spark, SF_ORACLE)
     assert df.columns, f"{op_id}: no columns"
     df.limit(5).collect()  # must execute without error
     elapsed = time.perf_counter() - t0
+    _assert_no_cache_entry(spark, op_id)
     if elapsed >= OP_WALL_TIME_CAP_S:
         # same retry-once rationale (and r15 warning) as above
         import warnings

@@ -7,18 +7,24 @@ the single biggest self-inflicted slowdown a PySpark pipeline can ship.
 
 Runs at sf0.001 so the ops that execute work when invoked (sink
 round-trips, the k-means trainer) stay cheap; the assertion reads the
-ANALYZED plan string, execution results are discarded.
+ANALYZED plan string, execution results are discarded. An op's plan
+here is its final formatted plan plus the plans of the frames it
+localCheckpoints while it builds (scripts/plan_audit.checkpoint_plans):
+checkpointed work shows up in the final plan only as `Scan ExistingRDD`.
 """
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
+import os
+import sys
 
 import pytest
 
 from claim_analysis_engine_spark.registry import registry
 from tests.conftest import SF_SMALL
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+from plan_audit import checkpoint_plans, explain_formatted  # noqa: E402
 
 REG = registry()
 ALL_OPS = sorted(REG)
@@ -32,16 +38,11 @@ ALL_OPS = sorted(REG)
 _PLAN_CACHE: dict[str, str] = {}
 
 
-def _formatted(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def _plan(spark, op_id: str) -> str:
     if op_id not in _PLAN_CACHE:
-        _PLAN_CACHE[op_id] = _formatted(REG[op_id].query(spark, SF_SMALL))
+        with checkpoint_plans() as checkpointed:
+            df = REG[op_id].query(spark, SF_SMALL)
+        _PLAN_CACHE[op_id] = explain_formatted(df) + "".join(checkpointed)
     return _PLAN_CACHE[op_id]
 
 
@@ -149,9 +150,7 @@ def test_every_crossjoin_is_a_documented_tiny_frame_and_no_topandas():
 # the counts the rewrites achieved. A future edit that re-introduces a
 # duplicated corpus subtree (the batch-5/6/9 pathology class) fails
 # here before it can ship silently. Ceilings equal the counts measured
-# at sf0.001 on the shipped tree; cached substrates show
-# InMemoryTableScan (not Scan parquet) for repeat references, so these
-# counts track REAL re-reads.
+# at sf0.001 on the shipped tree.
 _SCAN_CEILINGS: dict[str, tuple[dict[str, int], int]] = {
     # op: ({table: max scan refs}, max Generate nodes)
     "dedup_merge": ({"orders": 1}, 1),
@@ -190,6 +189,10 @@ def test_one_pass_rewrites_keep_their_scan_counts(spark, op_id):
         f"lines cannot be checked against the ceilings"
     )
     for tbl, ceiling in max_refs.items():
+        # a plan that shows no scan of the table checks nothing
+        assert refs.get(tbl, 0) >= 1, (
+            f"{op_id}: no parquet scan of {tbl} in its plan (refs: {refs})"
+        )
         assert refs.get(tbl, 0) <= ceiling, (
             f"{op_id}: {refs.get(tbl, 0)} parquet scans of {tbl} exceed "
             f"the rewrite's ceiling {ceiling} — a duplicated subtree "
@@ -218,7 +221,7 @@ def test_series_mart_reads_its_hub_once(spark, tmp_path):
         "middle_category string, reception_date date, lag_days int, "
         "lag_valid boolean",
     ).write.parquet(hub)
-    plan = _formatted(
+    plan = explain_formatted(
         storage.build_series_mart(spark.read.parquet(hub), as_of="2024-03-31")
     )
     assert len(re.findall(r"\(\d+\) Scan parquet ", plan)) == 1, plan
