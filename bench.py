@@ -4,11 +4,13 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect). Timings include plan + execution, not session
-startup.
+startup. Every run calls the op's computation (``query.__wrapped__``),
+never the registry's memoized replay.
 
     python bench.py                  # headline set + every extra
     python bench.py --ops a,b        # only the named ops, timed like
-                                     # extras; detail goes to
+                                     # extras after the same warm-up;
+                                     # detail goes to
                                      # BENCH_DETAIL.local.json
 """
 
@@ -462,9 +464,13 @@ def main() -> None:
     N_RUNS_EXTRA = 3
     spread: dict[str, list[float]] = {}
 
+    def execute(name: str) -> None:
+        df = reg[name].query.__wrapped__(spark, sf_dir)  # past the memo
+        df.write.mode("overwrite").format("noop").save()
+
     def timed(name: str) -> float:
         t0 = time.perf_counter()
-        reg[name].query(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        execute(name)
         return round(time.perf_counter() - t0, 3)
 
     def run(name: str, n_runs: int) -> float:
@@ -494,8 +500,10 @@ def main() -> None:
     # three rounds of drift adjudication were measuring JVM state,
     # not plans. Timing after a full warm-up pass converges both
     # environments to the steady state the metric is meant to track.
-    for name in headline:
-        reg[name].query(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    # `--ops` runs the same pass, so the first named op's cold number
+    # does not carry the JIT warm-up either.
+    for name in HEADLINE:
+        execute(name)
 
     for name in headline:
         queries[name] = run(name, N_RUNS_HEADLINE)

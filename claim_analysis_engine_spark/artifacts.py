@@ -1,6 +1,11 @@
 """One store for the expensive artifacts operators reuse within a
 session: fitted models, label fixpoints, staged layouts, the shared
-risk-series substrate, and small result rows.
+risk-series substrate, small result rows, and the result of every
+registered operator. ``registry.OpRegistry`` stores each op's frame
+under kind ``op:<id>``, ``localCheckpoint``ed lazily: the first
+request's action computes and stores its blocks, and a repeat request
+on unchanged files replays them in one job. The op's computation stays
+reachable as ``op.query.__wrapped__``, for harnesses that must run it.
 
 An artifact is a pure function of its session, its input directory
 and its params, so the key is (kind, applicationId, startTime, sf_dir,
@@ -14,6 +19,11 @@ Hadoop's FileSystem API over py4j costs ~100 ms per call). The
 JVM-minted startTime, unlike ``id(spark)``, never recurs within a
 process, so a recreated session cannot be handed frames bound to a
 stopped one. Fixtures with no input directory pass ``sf_dir=None``.
+The key holds no session conf, so a stored result must not depend on
+one (tests/test_default_session.py runs the sink ops on Spark's
+defaults); nor may an op read a file outside ``sf_dir`` other than the
+staging it writes itself (tests/test_artifacts.py checks every op's
+scans).
 
 Stored values own no CacheManager entry: each is driver rows or
 objects, a path, a frame reading files nothing rewrites, or a

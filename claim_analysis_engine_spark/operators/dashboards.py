@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from claim_analysis_engine_spark import artifacts
 from claim_analysis_engine_spark import forecast_models as fm
 from claim_analysis_engine_spark.operators.risk import (
     AS_OF_DAY,
@@ -1377,15 +1376,7 @@ def ep15_plant_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROLLUP over the same scan; risk results are segment×grade-sized
     and broadcast back; lag reuses the bounded-domain exact-median
     histogram (the agg_lag_stats plan). Planted divergence tests:
-    tests/test_ep15.py.
-
-    The result rows (pivot-grid-sized, tens of rows) are the
-    "ep15_rows" artifact: each rebuild pays the full decision-tree
-    plan on the substituted history frame (~4 s warm at sf0.1)."""
-    return artifacts.rows("ep15_rows", spark, sf_dir, lambda: _ep15_build(spark, sf_dir))
-
-
-def _ep15_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tests/test_ep15.py."""
     from claim_analysis_engine_spark.operators.risk_tree import rs_tree_relational
 
     hist = _ep15_claims(spark, sf_dir, window=False).select(
@@ -1709,15 +1700,7 @@ def ep16_sales_management(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: claims aggregate once to (plant, month) grain — everything
     downstream (sync spine, latest-ID window, upsert, gap fill, pivot,
     melt) runs on grain-sized frames independent of fact size; the dim
-    join broadcasts; the save is one grain-sized parquet write.
-
-    The result rows (plants×1-sized) are the "ep16_rows" artifact: each
-    rebuild pays two full sync→upsert→fill DAG executions plus a
-    parquet save (4.4 s warm median at sf0.1)."""
-    return artifacts.rows("ep16_rows", spark, sf_dir, lambda: _ep16_build(spark, sf_dir))
-
-
-def _ep16_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    join broadcasts; the save is one grain-sized parquet write."""
     from claim_analysis_engine_spark.tables import load as _load
     from claim_analysis_engine_spark.tmputil import fresh_dir as _fresh_dir
 

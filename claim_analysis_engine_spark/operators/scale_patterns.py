@@ -12,6 +12,7 @@ deployment makes up front.
 
 from __future__ import annotations
 
+import shutil
 import uuid
 
 import numpy as np
@@ -29,10 +30,9 @@ REG = OpRegistry()
 N_BUCKETS = 8
 N_SALTS = 16
 
-# bucketed-table names this session has created (see join_bucketed —
-# each invocation drops its predecessor's pair so the warehouse dir
-# doesn't accumulate one table pair per run)
-_BUCKETED_TABLES: list[str] = []
+# (name, path) of the bucketed tables this session has created (see
+# join_bucketed — each invocation drops its predecessor's pair)
+_BUCKETED_TABLES: list[tuple[str, str]] = []
 
 
 # ------------------------------------------------------ join_bucketed
@@ -53,32 +53,37 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side — the layout investment that makes repeated fact-fact
     joins affordable at 100 TB (verified by plan assertion in tests:
     zero Exchange between the scans and the SortMergeJoin). Tables get
-    unique names per invocation so concurrent sessions can't collide;
-    THIS session's previous pair is dropped first (managed tables, so
-    the warehouse files go too) — without that, every invocation left
-    a table pair behind forever."""
-    for stale in _BUCKETED_TABLES:
+    unique names per invocation so concurrent sessions can't collide.
+    Their files are staged in a fresh temp dir (external tables), like
+    every other op's staging, not in the session's warehouse dir,
+    which outlives the process; THIS session's previous pair is
+    dropped and its files removed first."""
+    for stale, path in _BUCKETED_TABLES:
         spark.sql(f"DROP TABLE IF EXISTS {stale}")
+        shutil.rmtree(path, ignore_errors=True)
     _BUCKETED_TABLES.clear()
     tag = uuid.uuid4().hex[:8]
     t_orders, t_lineitem = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    _BUCKETED_TABLES.extend([t_orders, t_lineitem])
-    (
-        load(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .write.bucketBy(N_BUCKETS, "o_orderkey")
-        .sortBy("o_orderkey")
-        .mode("overwrite")
-        .saveAsTable(t_orders)
+    sides = (
+        (t_orders, "o_orderkey", load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")),
+        (
+            t_lineitem,
+            "l_orderkey",
+            load(spark, sf_dir, "lineitem").select(
+                "l_orderkey", F.col("l_quantity").cast("decimal(18,2)").alias("qty")
+            ),
+        ),
     )
-    (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", F.col("l_quantity").cast("decimal(18,2)").alias("qty"))
-        .write.bucketBy(N_BUCKETS, "l_orderkey")
-        .sortBy("l_orderkey")
-        .mode("overwrite")
-        .saveAsTable(t_lineitem)
-    )
+    for table, key, frame in sides:
+        path = fresh_dir(f"cae_{table}_")
+        _BUCKETED_TABLES.append((table, path))
+        (
+            frame.write.bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .mode("overwrite")
+            .option("path", path)
+            .saveAsTable(table)
+        )
     o = spark.table(t_orders)
     li = spark.table(t_lineitem)
     return (

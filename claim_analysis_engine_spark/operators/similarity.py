@@ -2234,25 +2234,14 @@ def ep12_embed_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors per deterministic query doc. This is the retrieval loop
     a training-data stack actually runs over its own learned
     representations; reference analog: the ep7 retrieval composition.
-    Returns (query_id, neighbor_id, cosine, rank).
-
-    The RESULT rows (queries x k — bounded) are the "ep12_rows"
-    artifact: the retrieval is a pure function of the stored pooled
-    vectors, and gate/bench passes re-run the op repeatedly — only
-    the first call pays the ANN pipeline (measured 10 s under
-    late-bench JVM pressure vs 2 s isolated, and the replay is ~0.3 s
-    either way)."""
-
-    def build():
-        pooled = _doc_embeddings(spark, sf_dir)
-        return _ep12_topk(pooled, exact=False).select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            "rank",
-        )
-
-    return artifacts.rows("ep12_rows", spark, sf_dir, build)
+    Returns (query_id, neighbor_id, cosine, rank)."""
+    pooled = _doc_embeddings(spark, sf_dir)
+    return _ep12_topk(pooled, exact=False).select(
+        "query_id",
+        "neighbor_id",
+        F.round("cos", 4).alias("cosine"),
+        "rank",
+    )
 
 
 @REG.op(
@@ -2372,16 +2361,7 @@ def sim_pq_trained_recall_contract(spark: SparkSession, sf_dir: str) -> DataFram
     booleans TRUE. Certifies the COUNT-CAPPED training-sample path
     (PQ_SAMPLE_MAX) end to end: a quantizer regression, a sample-cap
     bug, or an ADC scoring drift flips a boolean; a lost corpus
-    partition or tokenizer drift flips a value. The ONE contract row is
-    the "pqt_contract_row" artifact: each rebuild re-pays the
-    brute-force exact truth (|queries|×|corpus| cosines, ~4.9 s/run at
-    sf0.1)."""
-    return artifacts.rows(
-        "pqt_contract_row", spark, sf_dir, lambda: _pqt_contract_build(spark, sf_dir)
-    )
-
-
-def _pqt_contract_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    partition or tokenizer drift flips a value."""
     emb = _doc_embeddings(spark, sf_dir).select(
         F.col("doc_id").alias("vec_id"), F.col("emb").alias("embedding")
     )

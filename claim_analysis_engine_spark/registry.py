@@ -6,14 +6,28 @@
     semantics aren't ANSI-SQL-expressible — those get a rows-only check)
 
 `__spark_entry__.py` re-exports this registry to the driver.
+
+An ``Op``'s ``query`` is memoized: it returns the stored result of
+the op on (session, ``sf_dir`` as its files are now) from the artifact
+store, kind ``op:<id>``, and on a miss stores the op's frame
+``localCheckpoint``ed lazily, so the caller's first action computes it
+once and later requests replay its blocks. A new snapshot directory,
+an in-place rewrite of any file under ``sf_dir`` or a new session
+misses (see ``artifacts``). A streaming frame is returned unmemoized.
+The raw computation is ``query.__wrapped__``; harnesses that time or
+audit an op call that. The decorator returns the raw function, so
+ops that call each other in Python do not go through the memo.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from claim_analysis_engine_spark import artifacts
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -36,10 +50,32 @@ class OpRegistry:
         def deco(fn: QueryFn) -> QueryFn:
             if op_id in self.ops:
                 raise ValueError(f"duplicate op id {op_id!r}")
-            self.ops[op_id] = Op(op_id, fn, oracle, (fn.__doc__ or "").strip())
+            self.ops[op_id] = Op(op_id, _memoized(op_id, fn), oracle, (fn.__doc__ or "").strip())
             return fn
 
         return deco
+
+
+def _memoized(op_id: str, fn: QueryFn) -> QueryFn:
+    """``fn`` behind the artifact store (see the module docstring)."""
+
+    @functools.wraps(fn)
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        streaming: list[DataFrame] = []
+
+        def build() -> DataFrame | None:
+            df = fn(spark, sf_dir)
+            if df.isStreaming:  # stored as None: each request builds anew
+                streaming.append(df)
+                return None
+            return df.localCheckpoint(eager=False)
+
+        out = artifacts.get_or_build(f"op:{op_id}", spark, sf_dir, build)
+        if out is not None:
+            return out
+        return streaming[0] if streaming else fn(spark, sf_dir)
+
+    return query
 
 
 def registry() -> dict[str, Op]:

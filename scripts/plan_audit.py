@@ -18,7 +18,9 @@ query() do run their writes) and record:
 Work an op localCheckpoints while query() builds shows up in its final
 plan as a `Scan ExistingRDD`; `checkpoint_plans()` records each such
 frame's formatted plan, and the audit reads the final plan plus those
-records.
+records. `build_cold()` builds each op from an empty artifact store
+and past the registry's memo, so a row does not depend on which ops
+were built before it.
 
 Usage: python scripts/plan_audit.py [sf_dir] > /dev/null && cat PLANS.md
 """
@@ -33,6 +35,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
 
+from claim_analysis_engine_spark import artifacts  # noqa: E402
 from claim_analysis_engine_spark.registry import registry  # noqa: E402
 from claim_analysis_engine_spark.session import get_spark  # noqa: E402
 
@@ -64,6 +67,18 @@ def checkpoint_plans():
         yield plans
     finally:
         DataFrame.localCheckpoint = original
+
+
+def build_cold(spark, op, sf_dir: str):
+    """Build ``op``'s frame from an empty artifact store, so the plans
+    of the shared artifacts it reads are recorded in its own row
+    whichever ops were built before it, and skip the registry's memo,
+    whose replay would plan as one `Scan ExistingRDD`. Returns the
+    frame and the checkpointed frames' formatted plans."""
+    artifacts.clear()
+    with checkpoint_plans() as checkpointed:
+        df = op.query.__wrapped__(spark, sf_dir)
+    return df, checkpointed
 
 
 def audit(plan: str, formatted: str | None = None) -> dict:
@@ -119,8 +134,7 @@ def main() -> None:
     rows = []
     for op_id, op in registry().items():
         try:
-            with checkpoint_plans() as checkpointed:
-                df = op.query(spark, sf_dir)
+            df, checkpointed = build_cold(spark, op, sf_dir)
             fmt = explain_formatted(df) + "".join(checkpointed)
             buf = io.StringIO()
             with redirect_stdout(buf):
@@ -150,9 +164,9 @@ def main() -> None:
         "plans execute inside query() and are covered by value oracles.",
         "",
         "`scans` counts parquet scan NODES in the formatted plan plus the",
-        "plans of the frames the op localCheckpoints while it builds (an",
-        "artifact is built, and its scans counted, in the row of the first",
-        "op in registry order that needs it);",
+        "plans of the frames the op localCheckpoints while it builds (each",
+        "op is built from an empty artifact store, so every op that reads",
+        "an artifact counts its scans);",
         "`table refs` the per-named-table Location references;",
         "`explodes` the Generate nodes. Together they",
         "regression-guard the r14 batch-5/9 one-pass rewrites",

@@ -81,3 +81,28 @@ def spark():
     s = get_spark(app_name="cae-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def cold_plan(spark):
+    """op_id -> its formatted plan at SF_SMALL plus the plans of the
+    frames it localCheckpoints while it builds. Each op is built once
+    per suite, from an empty artifact store and past the registry's
+    memo (scripts/plan_audit.build_cold), so the plan holds the scans
+    of every artifact the op reads, whichever ops were built before
+    it; the plan-invariant and scan-location tests share the build."""
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from plan_audit import build_cold, explain_formatted
+
+    from claim_analysis_engine_spark.registry import registry
+
+    reg = registry()
+    plans: dict[str, str] = {}
+
+    def plan(op_id: str) -> str:
+        if op_id not in plans:
+            df, checkpointed = build_cold(spark, reg[op_id], SF_SMALL)
+            plans[op_id] = explain_formatted(df) + "".join(checkpointed)
+        return plans[op_id]
+
+    return plan

@@ -2,13 +2,17 @@
 
 Part 1: operators whose results the store (or Spark's CacheManager)
 could replay must serve the NEW data after a table is rewritten in
-place under the same path mid-session. Part 2: the store's own
-contract, on a stub session with no Spark."""
+place under the same path mid-session; repeat requests replay the
+registry's op memo, and every file an op scans lies under the
+directory that keys it. Part 2: the store's own contract, on a stub
+session with no Spark."""
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import tempfile
 from types import SimpleNamespace
 
 import pyarrow.compute as pc
@@ -22,8 +26,9 @@ from tests.oracle_harness import compare, duck_connection
 # every artifact family the dashboard path reads (the series substrate,
 # the tree, the alerts read-back, the CC labels), ops that reuse a
 # frame within one call (dedup_simhash's signatures, the gram, term,
-# shingle and band frames of the text ops and the ep4 funnel) and one
-# result-row replay (ep15)
+# shingle and band frames of the text ops and the ep4 funnel) and
+# ep15. Every request goes through `query`, so each op's own result
+# memo must miss after the rewrite too.
 REWRITE_OPS = (
     "rs_tree_relational",
     "p6_rule_engine",
@@ -86,6 +91,65 @@ def test_in_place_rewrite_serves_the_new_data(spark, tmp_path):
     finally:
         con.close()
     assert not failed, f"stale results after an in-place rewrite: {failed}"
+
+
+def test_repeat_requests_replay_the_op_memo(spark, tmp_path):
+    """Three requests of one dashboard op on unchanged files: the first
+    misses and computes, the others replay its stored blocks in one
+    job each, and all three equal the oracle."""
+    from claim_analysis_engine_spark import artifacts
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf)
+    op = registry()["ppm"]
+    before = artifacts.stats().get("op:ppm", {"hits": 0, "misses": 0})
+    sc = spark.sparkContext
+    con = duck_connection(sf)
+    try:
+        for i in range(3):
+            group = f"op_memo_request_{i}"
+            sc.setJobGroup(group, "ppm")
+            try:
+                result = op.query(spark, sf).toPandas()
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            ok, why = compare(result, con, op.oracle)
+            assert ok, f"request {i}: {why}"
+            if i:
+                assert len(jobs) <= 1, f"repeat request {i} ran {len(jobs)} jobs"
+    finally:
+        con.close()
+    after = artifacts.stats()["op:ppm"]
+    assert (after["misses"] - before["misses"], after["hits"] - before["hits"]) == (1, 2)
+
+
+# The op memo keys a result by the files under sf_dir, so it is sound
+# only if every file an op reads lies there, or in the staging it
+# writes itself. Checked on the cold plans (the `cold_plan` fixture:
+# built from an empty store and past the memo, so every artifact's
+# scans are in the plan of each op that reads it).
+_LOCATION = re.compile(r"Location: [A-Za-z]*FileIndex[^\n]*?\[([^\]]*)\]")
+
+
+@pytest.mark.parametrize("op_id", sorted(registry()))
+def test_every_scan_lies_under_the_keyed_dir_or_the_staging_root(cold_plan, op_id):
+    sf, staging = os.path.realpath(SF_SMALL), os.path.realpath(tempfile.gettempdir())
+
+    def under(path: str, root: str) -> bool:
+        local = os.path.realpath(path.removeprefix("file:"))
+        return local == root or local.startswith(root + os.sep)
+
+    outside = []
+    for listing in _LOCATION.findall(cold_plan(op_id)):
+        shown = [p for p in listing.split(", ") if not p.startswith("... ")]
+        outside += [p for p in shown if not (under(p, sf) or under(p, staging))]
+        # explain abbreviates a scan of several paths to "p1, ... N
+        # entries"; the hidden ones are let pass only in the op's own
+        # staging (the layout ops' file lists), never beside sf_dir
+        if len(shown) < len(listing.split(", ")) and not under(shown[0], staging):
+            outside.append(listing)
+    assert not outside, f"{op_id} scans files outside {sf} and {staging}: {outside}"
 
 
 # ------------------------------------------------ the store, no Spark
@@ -179,3 +243,54 @@ def test_clear_runs_on_evict_and_resets_stats(store, inputs):
     assert evicted == ["A"]
     assert store.stats() == {}
     assert store.get_or_build("a", spark, d, lambda: "A2") == "A2"
+
+
+class _Frame:
+    """The two DataFrame members the registry's memo reads."""
+
+    def __init__(self, streaming: bool) -> None:
+        self.isStreaming = streaming
+
+    def localCheckpoint(self, eager: bool = True):
+        # lazy: the caller's first action computes and stores it once
+        assert not eager
+        return ("checkpointed", self)
+
+
+def test_op_memo_keys_the_session_and_returns_streaming_frames_unmemoized(
+    store, inputs
+):
+    from claim_analysis_engine_spark.registry import OpRegistry
+
+    reg = OpRegistry()
+    builds = []
+
+    @reg.op("batch")
+    def batch(spark, sf_dir):
+        builds.append("batch")
+        return _Frame(streaming=False)
+
+    @reg.op("stream")
+    def stream(spark, sf_dir):
+        builds.append("stream")
+        return _Frame(streaming=True)
+
+    # the decorator hands back the raw function; the registry memoizes
+    assert batch(None, None).isStreaming is False
+    assert reg.ops["batch"].query.__wrapped__ is batch
+    builds.clear()
+
+    query, d = reg.ops["batch"].query, str(inputs)
+    first = query(_stub_session(), d)
+    assert first[0] == "checkpointed"
+    assert query(_stub_session(), d) is first
+    second_session = query(_stub_session(start=2), d)
+    assert second_session is not first
+    assert builds == ["batch", "batch"]
+    assert store.stats()["op:batch"] == {"hits": 1, "misses": 2}
+
+    builds.clear()
+    frames = [reg.ops["stream"].query(_stub_session(), d) for _ in range(2)]
+    assert all(isinstance(f, _Frame) and f.isStreaming for f in frames)
+    assert frames[0] is not frames[1]
+    assert builds == ["stream", "stream"]

@@ -11,6 +11,9 @@ ANALYZED plan string, execution results are discarded. An op's plan
 here is its final formatted plan plus the plans of the frames it
 localCheckpoints while it builds (scripts/plan_audit.checkpoint_plans):
 checkpointed work shows up in the final plan only as `Scan ExistingRDD`.
+Each op is built cold and past the registry's memo
+(scripts/plan_audit.build_cold), so the plan holds the scans of every
+artifact the op reads, whichever ops the session built before it.
 """
 
 from __future__ import annotations
@@ -21,34 +24,23 @@ import sys
 import pytest
 
 from claim_analysis_engine_spark.registry import registry
-from tests.conftest import SF_SMALL
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
-from plan_audit import checkpoint_plans, explain_formatted  # noqa: E402
+from plan_audit import explain_formatted  # noqa: E402
 
-REG = registry()
-ALL_OPS = sorted(REG)
+ALL_OPS = sorted(registry())
 
-# ONE build + explain per op, shared by both invariant tests below
-# (r12 verdict ask #3: the two parametrized tests each rebuilt and
-# re-explained every op — 678 query() invocations, and for sink/e2e
-# ops query() EXECUTES its staging work; the plan string is identical
-# either way, so pay it once). Keyed per op; the session fixture owns
-# the Spark lifetime, so entries never outlive their session.
-_PLAN_CACHE: dict[str, str] = {}
-
-
-def _plan(spark, op_id: str) -> str:
-    if op_id not in _PLAN_CACHE:
-        with checkpoint_plans() as checkpointed:
-            df = REG[op_id].query(spark, SF_SMALL)
-        _PLAN_CACHE[op_id] = explain_formatted(df) + "".join(checkpointed)
-    return _PLAN_CACHE[op_id]
+# ONE build + explain per op (the `cold_plan` fixture in conftest.py),
+# shared by the invariant tests below and the scan-location test in
+# tests/test_artifacts.py (r12 verdict ask #3: the two parametrized
+# tests each rebuilt and re-explained every op — 678 query()
+# invocations, and for sink/e2e ops query() EXECUTES its staging
+# work; the plan string is identical either way, so pay it once).
 
 
 @pytest.mark.parametrize("op_id", ALL_OPS)
-def test_no_row_at_a_time_python(spark, op_id):
-    plan = _plan(spark, op_id)
+def test_no_row_at_a_time_python(cold_plan, op_id):
+    plan = cold_plan(op_id)
     assert "BatchEvalPython" not in plan, (
         f"{op_id} ships a row-at-a-time Python UDF:\n{plan}"
     )
@@ -63,13 +55,13 @@ _CARTESIAN_FORBIDDEN = "CartesianProduct"
 
 
 @pytest.mark.parametrize("op_id", ALL_OPS)
-def test_no_unbroadcast_cartesian(spark, op_id):
+def test_no_unbroadcast_cartesian(cold_plan, op_id):
     """A CartesianProduct node means two NON-broadcast sides are being
     pair-joined — quadratic shuffle IO at scale. Every intentional
     cross join in the registry broadcasts its small side, which plans
     as BroadcastNestedLoopJoin instead; assert the bad node never
     appears anywhere in the surface."""
-    plan = _plan(spark, op_id)
+    plan = cold_plan(op_id)
     assert _CARTESIAN_FORBIDDEN not in plan, (
         f"{op_id} plans a non-broadcast cartesian product:\n{plan}"
     )
@@ -170,10 +162,10 @@ _SCAN_CEILINGS: dict[str, tuple[dict[str, int], int]] = {
 
 
 @pytest.mark.parametrize("op_id", sorted(_SCAN_CEILINGS))
-def test_one_pass_rewrites_keep_their_scan_counts(spark, op_id):
+def test_one_pass_rewrites_keep_their_scan_counts(cold_plan, op_id):
     import re
 
-    plan = _plan(spark, op_id)
+    plan = cold_plan(op_id)
     max_refs, max_generates = _SCAN_CEILINGS[op_id]
     refs: dict[str, int] = {}
     for m in re.finditer(
